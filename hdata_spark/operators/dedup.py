@@ -7,27 +7,25 @@ order. We make the semantics explicit: within any batch, the event with the
 highest LSN per (repo, path) wins; everything else is discarded before the
 merge. This is what makes the apply stage order-free and idempotent.
 
-Three implementations:
+Two implementations:
 
-- `lww_latest` (default): slim hash-aggregate of ``max(order)`` per key,
-  then a shuffle-hash LEFT SEMI join back on (keys..., order) to pull the
-  winning rows. Everything stays hash-based: the aggregation buffer is a
+- `lww_latest` (the replay hot path): slim hash-aggregate of ``max(order)``
+  per key, then a LEFT SEMI join back on the order column alone to pull
+  the winning rows. Everything stays hash-based: the aggregation buffer is a
   fixed-size long (whole-stage-codegen HashAggregate with effective
-  map-side combine on a ~70 B key+lsn projection), and the join is hinted
-  shuffle_hash so no sort ever touches the wide content rows. At 10^10
-  events this is the only plan that works: the obvious one-pass
+  map-side combine on a ~70 B key+lsn projection). At 10^10 events this is
+  the only plan that works: the obvious one-pass
   ``max_by(struct(payload))`` has a variable-length aggregation buffer, so
   Spark silently falls back to SortAggregate — externally sorting the full
   event stream twice (measured: mostly-idle CPUs and zero core-count
   scaling on an 8M-event replay).
-- `lww_latest_maxby`: that one-pass max_by plan — kept for small inputs and
-  as a cross-check.
-- `lww_latest_window`: ``row_number() OVER (...) = 1`` — kept for
-  cross-checking and callers that need losers too.
+- `lww_latest_window`: ``row_number() OVER (...) = 1`` — for inputs whose
+  order column can tie (``SnapshotTable.merge``, the merge-on-read read):
+  it keeps exactly one row per key where the semi join would keep every
+  tied row.
 
-Ties: LSNs are unique by construction (global sequence); ``order_col`` must
-be a total order per key, or winners are ambiguous (the semi-join would keep
-multiple rows where max_by would pick one arbitrarily).
+Ties: LSNs are unique by construction (global sequence), which is what
+`lww_latest`'s join on the order column alone relies on.
 """
 
 from __future__ import annotations
@@ -42,56 +40,29 @@ def lww_latest(
     df: DataFrame,
     keys: Sequence[str] = ("repo", "path"),
     order_col: str = "lsn",
-    order_unique: bool = True,
 ) -> DataFrame:
     """Keep the max-`order_col` row per key; columns preserved in order.
 
     Plan: HashAggregate(max(order)) over a slim projection + LEFT SEMI join
     back — no SortAggregate fallback (see module docstring).
 
-    With ``order_unique=True`` (LSNs are a global sequence) the join key is
-    `order_col` ALONE: the winners side shrinks to one long per key, so AQE
-    turns the semi join into a **broadcast** after it sees the aggregated
-    size — and the full-width event stream is never shuffled at all. This is
-    the difference between moving ~70 B/key and moving every event's payload
-    through the exchange; it is what lets dedup throughput scale with cores
-    instead of with memory bandwidth. When winners outgrow the broadcast
-    threshold (10^10-scale runs), AQE falls back to a shuffle join on the
-    8-byte key — still payload-free on the build side.
-
-    Set ``order_unique=False`` if `order_col` is only per-key unique; the
-    join then matches on (keys..., order) with a shuffle_hash hint.
+    `order_col` must be globally unique (LSNs are a global sequence), so the
+    join key is `order_col` ALONE: the winners side shrinks to one long per
+    key, so AQE turns the semi join into a **broadcast** after it sees the
+    aggregated size — and the full-width event stream is never shuffled at
+    all. This is the difference between moving ~70 B/key and moving every
+    event's payload through the exchange; it is what lets dedup throughput
+    scale with cores instead of with memory bandwidth. When winners outgrow
+    the broadcast threshold (10^10-scale runs), AQE falls back to a shuffle
+    join on the 8-byte key — still payload-free on the build side.
     """
-    if order_unique:
-        winners = (
-            df.select(*keys, order_col)
-            .groupBy(*keys)
-            .agg(F.max(order_col).alias(order_col))
-            .select(order_col)
-        )
-        return df.join(winners, on=order_col, how="left_semi").select(*df.columns)
-    winners = df.select(*keys, order_col).groupBy(*keys).agg(
-        F.max(order_col).alias(order_col)
+    winners = (
+        df.select(*keys, order_col)
+        .groupBy(*keys)
+        .agg(F.max(order_col).alias(order_col))
+        .select(order_col)
     )
-    return df.join(
-        winners.hint("shuffle_hash"), on=[*keys, order_col], how="left_semi"
-    ).select(*df.columns)
-
-
-def lww_latest_maxby(
-    df: DataFrame,
-    keys: Sequence[str] = ("repo", "path"),
-    order_col: str = "lsn",
-) -> DataFrame:
-    """One-pass max_by(struct) variant — SortAggregate at scale; small inputs
-    and cross-checks only."""
-    payload = [c for c in df.columns if c not in keys]
-    winner = df.groupBy(*keys).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(order_col)).alias("_w")
-    )
-    return winner.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload]).select(
-        *df.columns
-    )
+    return df.join(winners, on=order_col, how="left_semi").select(*df.columns)
 
 
 def lww_latest_window(

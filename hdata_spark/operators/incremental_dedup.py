@@ -210,7 +210,12 @@ class MinHashIndex:
             return None
         rows = (
             doc_ids.select(
-                F.pmod(F.xxhash64("doc_id"), F.lit(self.table.n_buckets))
+                # Stored doc_ids are bigint, and xxhash64 hashes an int32
+                # differently from the same value as int64.
+                F.pmod(
+                    F.xxhash64(F.col("doc_id").cast("bigint")),
+                    F.lit(self.table.n_buckets),
+                )
                 .cast("int")
                 .alias("b")
             )

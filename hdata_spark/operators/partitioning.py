@@ -43,12 +43,11 @@ def salt_counts(
 ) -> dict[str, int]:
     """The salting POLICY, shared by every detector: keys whose row mass
     exceeds `threshold` x the mean get ceil(rows / target) salt buckets
-    (floor 2, capped at max_salts). Input is a plain {key: row_count} dict —
-    computed from a groupBy here, from ledger metrics in the replay loop.
+    (floor 2, capped at max_salts). Input is a plain {key: row_count} dict.
 
     ``mean``: the TRUE mean rows-per-key, for callers that pass a
-    pre-filtered hot-keys-only dict (the replay loop's driver-bounded
-    detector) — computing the mean from hot keys alone would inflate it.
+    pre-filtered hot-keys-only dict (build_salt_map's driver-bounded
+    collect) — computing the mean from hot keys alone would inflate it.
     """
     if not counts:
         return {}
@@ -82,8 +81,7 @@ def build_salt_map(
     """Detect hot keys; returns {} when nothing is hot. DRIVER-BOUNDED: the
     key counts stay executor-side (persisted once), the driver fetches one
     mean row plus the hot rows only — never one row per distinct key, so the
-    helper is safe at 10^8 keys (same discipline as the replay loop's
-    detector, streaming/replay.py _run_metrics). At 100 TB run this on a
+    helper is safe at 10^8 keys. At 100 TB run this on a
     sampled or metadata-derived count, or maintain it incrementally in the
     metrics table — the contract is just a dict (policy in `salt_counts`)."""
     counts = df.groupBy(key).count().persist()

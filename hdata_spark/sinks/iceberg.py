@@ -78,8 +78,8 @@ def merge_sql(
     Deletes persist as tombstones (`_op='d'`), mirroring the parquet sink,
     so replaying an old epoch can never resurrect a deleted key; equal LSN
     = same event = no-op (idempotent replays). Source must be pre-deduped
-    per key (one row per key), exactly like SnapshotTable.merge's
-    `batch_deduped` contract.
+    per key (one row per key), as SnapshotTable.merge makes its batch
+    before the join.
     """
     on = " AND ".join(f"t.{quote(k)} = s.{quote(k)}" for k in keys)
     payload = [c for c in columns if c not in keys]

@@ -262,6 +262,7 @@ class SnapshotTable:
         spark: SparkSession,
         buckets: Sequence[int] | None = None,
         version: int | None = None,
+        spec: list[dict] | None = None,
     ) -> DataFrame:
         """Snapshot incl. _lsn/bucket; bucket-pruned when asked.
 
@@ -273,12 +274,13 @@ class SnapshotTable:
 
         `version` time-travels to an older snapshot (manifests are retained;
         valid until `vacuum()` expires that snapshot's files, exactly
-        Iceberg's snapshot-expiry contract).
+        Iceberg's snapshot-expiry contract). `spec` projects it to another
+        logical schema than its own (default: the version's schema).
         """
         m = self._read_manifest(
             self.current_version() if version is None else version
         )
-        spec = m["schema"]
+        spec = spec or m["schema"]
         files_by_bucket = m["buckets"]
         if buckets is not None:
             wanted = {str(b) for b in buckets}
@@ -302,21 +304,7 @@ class SnapshotTable:
         frames = []
         for _g, fs in sorted(by_gen.items()):
             raw = spark.read.parquet(*[os.path.join(self.root, f) for f in fs])
-            present = set(raw.columns)
-            cols = []
-            for c in spec:
-                sources = [s for s in c["sources"] if s in present]
-                if not sources:
-                    cols.append(F.lit(None).cast(c["type"]).alias(c["name"]))
-                elif len(sources) == 1:
-                    cols.append(F.col(sources[0]).cast(c["type"]).alias(c["name"]))
-                else:
-                    cols.append(
-                        F.coalesce(*[F.col(s) for s in sources])
-                        .cast(c["type"])
-                        .alias(c["name"])
-                    )
-            frames.append(raw.select(*cols, F.col("_lsn"), F.col("_op")))
+            frames.append(_project(raw, spec))
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)
@@ -345,26 +333,6 @@ class SnapshotTable:
             .drop("_lsn", "_op", "bucket")
         )
 
-    def _align_to_current(self, df: DataFrame) -> DataFrame:
-        """Project a (possibly older-version) internal frame to the current
-        logical schema: resolve renames via source lineage, cast widened
-        types, null-fill columns the old version lacked."""
-        present = set(df.columns)
-        cols = []
-        for c in self.schema_spec():
-            sources = [s for s in c["sources"] if s in present]
-            if not sources:
-                cols.append(F.lit(None).cast(c["type"]).alias(c["name"]))
-            elif len(sources) == 1:
-                cols.append(F.col(sources[0]).cast(c["type"]).alias(c["name"]))
-            else:
-                cols.append(
-                    F.coalesce(*[F.col(s) for s in sources])
-                    .cast(c["type"])
-                    .alias(c["name"])
-                )
-        return df.select(*cols, "_lsn", "_op")
-
     def changes_between(
         self, spark: SparkSession, v_from: int, v_to: int | None = None
     ) -> DataFrame:
@@ -381,12 +349,9 @@ class SnapshotTable:
         lineage + widen casts + null-fill), so a feed spanning a schema
         evolution boundary is well-formed.
         """
-        a = self._align_to_current(
-            self.read_internal(spark, version=v_from)
-        ).alias("a")
-        b = self._align_to_current(
-            self.read_internal(spark, version=v_to)
-        ).alias("b")
+        spec = self.schema_spec()
+        a = self.read_internal(spark, version=v_from, spec=spec).alias("a")
+        b = self.read_internal(spark, version=v_to, spec=spec).alias("b")
         cond = None
         for k in self.keys:
             eq = F.col(f"a.{k}") == F.col(f"b.{k}")
@@ -433,19 +398,11 @@ class SnapshotTable:
 
     # ---------------- MERGE ----------------
 
-    def merge(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        affected: Sequence[int] | None = None,
-        batch_deduped: bool = False,
-    ) -> dict:
+    def merge(self, spark: SparkSession, batch: DataFrame) -> dict:
         """MERGE batch into the table; returns commit stats.
 
         `batch` columns: logical table columns + `op` ('insert' | 'update' |
-        'delete') + `lsn`. Pass ``batch_deduped=True`` only when the batch is
-        already LWW-unique per key (the replay pipeline's contract);
-        otherwise merge dedups it first.
+        'delete') + `lsn`. Merge LWW-dedups the batch per key first.
 
         Resolution is a single shuffle-hash FULL OUTER join between the
         stored rows (unique per key by construction) and the batch winners
@@ -455,17 +412,9 @@ class SnapshotTable:
         WHEN MATCHED AND s.lsn > t.lsn` plan Iceberg would produce; with
         storage-partitioned join both sides would not even shuffle (both are
         bucketed by key — noted for the Iceberg sink).
-
-        `affected` (optional): the batch's distinct bucket ids, if the caller
-        already knows them (replay derives them from its metrics pass) —
-        skips one collect job.
         """
         version = self.current_version()
         manifest = self._read_manifest(version)
-        if affected is not None and not list(affected):
-            # Empty batch: version-bump-only commit (keeps epoch lineage).
-            self._commit(version + 1, manifest)
-            return {"version": version + 1, "applied_buckets": 0, "buckets": []}
         spec = manifest["schema"]
         logical = [c["name"] for c in spec]
 
@@ -476,20 +425,17 @@ class SnapshotTable:
                 spec_t = next(c["type"] for c in spec if c["name"] == name)
                 batch = batch.withColumn(name, F.lit(None).cast(spec_t))
 
-        if not batch_deduped:
-            # Window variant, NOT the semi-join plan: direct callers (full
-            # loads, jobspec upserts) may carry TIED lsn values — e.g.
-            # overwrite() stamps every row lsn=0 — and a semi join on the
-            # max lsn keeps every tied row, breaking the table's
-            # one-row-per-key invariant. row_number keeps exactly one.
-            batch = lww_latest_window(batch, self.keys, "lsn")
+        # Window variant, NOT the semi-join plan: callers (full loads,
+        # jobspec upserts) may carry TIED lsn values — e.g. overwrite()
+        # stamps every row lsn=0 — and a semi join on the max lsn keeps
+        # every tied row, breaking the table's one-row-per-key invariant.
+        # row_number keeps exactly one.
+        batch = lww_latest_window(batch, self.keys, "lsn")
         batch = batch.withColumn("bucket", self._bucket_expr())
-        if affected is None:
-            # Affected buckets: tiny collect (<= n_buckets ints).
-            affected = sorted(
-                r["bucket"] for r in batch.select("bucket").distinct().collect()
-            )
-        affected = sorted(affected)
+        # Affected buckets: tiny collect (<= n_buckets ints).
+        affected = sorted(
+            r["bucket"] for r in batch.select("bucket").distinct().collect()
+        )
         if not affected:
             self._commit(version + 1, manifest)
             return {"version": version + 1, "applied_buckets": 0, "buckets": []}
@@ -755,12 +701,33 @@ class SnapshotTable:
         return removed
 
 
+def _project(raw: DataFrame, spec: list[dict]) -> DataFrame:
+    """Project one schema generation's files to the logical schema `spec`:
+    rename lineage via coalesce over `sources`, widening via cast, and
+    null-fill for columns the files predate."""
+    present = set(raw.columns)
+    cols = []
+    for c in spec:
+        sources = [s for s in c["sources"] if s in present]
+        if not sources:
+            cols.append(F.lit(None).cast(c["type"]).alias(c["name"]))
+        elif len(sources) == 1:
+            cols.append(F.col(sources[0]).cast(c["type"]).alias(c["name"]))
+        else:
+            cols.append(
+                F.coalesce(*[F.col(s) for s in sources])
+                .cast(c["type"])
+                .alias(c["name"])
+            )
+    return raw.select(*cols, F.col("_lsn"), F.col("_op"))
+
+
 def list_bucket_files(abs_dir: str, rel_dir: str) -> dict[int, list[str]]:
     """{bucket: sorted relative parquet paths} for a `bucket=N`-partitioned
     parquet dataset staged at `abs_dir` (= <table.root>/<rel_dir>).
 
-    The one listing used by every stager of the delta layout — the batch
-    replay run (per epoch), the streaming micro-batch, and compaction — so
+    The one listing used by every stager of the delta layout — the apply
+    core (per epoch) and compaction — so
     the physical layout contract (dir naming, file suffix) lives in exactly
     one place.
     """
@@ -783,9 +750,9 @@ def delta_footer_stats(
     """Per-bucket (applied_events, max `lsn_col`) for just-staged delta files,
     read from the PARQUET FOOTERS — zero Spark jobs.
 
-    The streaming micro-batch needs per-bucket counts + max LSN for its
-    metrics/ledger row; launching a read job over files the same trigger just
-    wrote is a fixed per-trigger cost that caps WAL-tail throughput. Row
+    The apply core needs per-bucket counts + max LSN for each epoch's
+    metrics/ledger row; launching a read job over files the same call just
+    wrote is a fixed per-run cost that caps WAL-tail throughput. Row
     counts and int64 min/max column statistics are already in each file's
     footer, so the driver reads them directly (the files are local/lake
     metadata reads, one per staged file — bounded by n_buckets per trigger).
@@ -825,7 +792,7 @@ def delta_footer_stats(
             # all-NULL — a contract violation (_lsn is non-null by
             # construction). Raising beats silently dropping the bucket,
             # which would undercount applied_events in the metrics/ledger
-            # row relative to the Spark aggregation this path replaced.
+            # row.
             if mx is None:
                 raise ValueError(
                     f"delta bucket {bucket}: {n} rows but no resolvable "

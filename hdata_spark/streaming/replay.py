@@ -1,454 +1,46 @@
-"""The replay driver: LSN-ordered epoch loop -> dedup -> project -> MERGE -> commit.
+"""Batch replay: the epoch planner in front of the one apply core.
 
-This is the engine's equivalent of the reference's whole runtime
+This is the engine's equivalent of the reference's job splitter
 (hdata-core/.../core/HData.java:45-217: splitter -> reader threads -> ring
-buffer -> writer pool), rebuilt as a bounded micro-batch loop:
+buffer -> writer pool). It plans the uncommitted epochs of an event log into
+runs and hands each run to `stream_replay.apply_epochs`, the same core the
+WAL tail applies its micro-batches through:
 
-    for each run of epochs (split at schema-change boundaries):
-        scan + transform + LWW-dedup the WHOLE run in one pass   (cached)
-        for each epoch in the run:
-            skip if ledger says committed      (exactly-once fast path)
-            MERGE epoch's winners into the bucketed snapshot
-            emit per-partition metrics + ledger row
+    for each run of epochs (split at schema-change epochs):
+        apply_epochs(run)   one scan + LWW + stage write, k epoch commits
+    compact once at the end
 
 Run batching is the key scan optimization: a resume-from-scratch replay of E
 epochs reads the event log ONCE (filtered to uncommitted epochs — parquet
 row-group pruning on the monotone epoch column), not E times. Dedup is keyed
 (epoch, repo, path), so per-epoch winners are computed in a single shuffle
-while MERGE order across epochs stays strictly sequential — the stored-LSN
-LWW in the sink makes per-epoch application equal to global LWW. Epochs that
+while commits across epochs stay strictly sequential — the stored-LSN LWW in
+the sink makes per-epoch application equal to global LWW. Epochs that
 contain schema_change events form their own single-epoch run (the projection
 changes mid-stream, exactly like Structured Streaming restarting a query on
 schema change).
 
-Per-event transforms (north-star UDF axis) run pre-dedup, vectorized:
-lang normalization (CASE map or Arrow pandas_udf) and content sha256
-(F.sha2 or Arrow pandas_udf) — zero per-row Python either way.
-
 Shuffle budget for a run of k epochs (the 100 TB question): one partial-agg
 exchange for the LWW groupBy (shuffle volume = per-epoch distinct keys, not
-events, thanks to map-side combine) + k bucket exchanges for the
-copy-on-write writes. Hot-repo skew cannot hurt either: both are keyed by
+events, thanks to map-side combine) + one (epoch, bucket) exchange for the
+stage write. Hot-repo skew cannot hurt either: both are keyed by
 (repo, path)/bucket, which is uniform; repo-grained aggregations (the
-skew-visible ones) go through the salted two-stage path.
+skew-visible ones) go through the salted two-stage path
+(operators/partitioning.py).
 """
 
 from __future__ import annotations
 
-import functools
-import os
-import shutil
-import sys
-import time
-import uuid
-from dataclasses import dataclass
-
-_PROF = os.environ.get("HDATA_PROF") == "1"
-
-
-def _prof(label: str, t0: float) -> float:
-    t1 = time.time()
-    if _PROF:
-        print(f"[prof] {label}: {t1 - t0:.2f}s", file=sys.stderr, flush=True)
-    return t1
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdata_spark.functions.text import (
-    normalize_lang_col,
-    normalize_lang_pudf,
-    sha256_pudf,
-)
-from hdata_spark.operators.dedup import lww_latest
-from hdata_spark.plans.schema_registry import SchemaRegistry, spec_evolves
-from hdata_spark.sinks.snapshot import SnapshotTable, list_bucket_files
+from hdata_spark.plans.schema_registry import SchemaRegistry
+from hdata_spark.sinks.snapshot import SnapshotTable
 from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
+from hdata_spark.streaming.stream_replay import ReplayConfig, apply_epochs
 
-
-@dataclass
-class ReplayConfig:
-    salt_threshold: float = 4.0
-    max_salts: int = 32
-    use_pandas_udfs: bool = False  # pandas_udf twins instead of built-ins
-    # Hot-repo detection + per-epoch salt PLAN in the ledger. The plan is
-    # ADVISORY: no engine stage shuffles by bare repo (LWW and MERGE key on
-    # (repo, path)/bucket, uniform under monorepo skew), so the consumer is
-    # downstream repo-grained work (with_salt + the salted two-stage agg —
-    # operators/partitioning.py). Off by default so the hot loop carries no
-    # work without a consumer; per-BUCKET skew metrics (the north-star
-    # skew signal) are always emitted regardless.
-    detect_skew: bool = False
-    # Sink commit mode. "append" (default) = merge-on-read fast-append:
-    # per-epoch commits are metadata-only manifest appends of the staged
-    # winner files (Iceberg fast-append / Hudi MOR); readers resolve by
-    # stored LSN and `compact_at_end` folds the table back to one row per
-    # key. "merge" = copy-on-write per-epoch MERGE (reads + rewrites the
-    # affected buckets every epoch; read-optimized, commit-heavy).
-    sink_commit: str = "append"
-    compact_at_end: bool = True
-    # Streaming-mode compaction trigger: when a micro-batch commit leaves
-    # more than this many UNCOMPACTED delta files in the table, the stream
-    # path folds them with `compact()` before the next trigger. Per-batch
-    # commit stays metadata-only (the fast-append invariant); compaction cost
-    # is amortized over ~threshold batches. None disables auto-compaction
-    # (callers own the cadence, e.g. a separate maintenance job).
-    stream_compact_delta_files: int | None = 64
-
-
-def _fingerprint_agg(lsn_col: str = "lsn"):
-    """Order-insensitive batch fingerprint: BIT_XOR of xxhash64(repo,path,lsn).
-
-    XOR is commutative/associative and overflow-free, so it is computable as
-    a distributed aggregate regardless of partitioning (ANSI-safe; a SUM of
-    hashes would overflow under Spark 4's default ANSI mode).
-    """
-    return F.expr(f"bit_xor(xxhash64(repo, path, {lsn_col}))")
-
-
-def _transform(data: DataFrame, registry: SchemaRegistry, cfg: ReplayConfig) -> DataFrame:
-    """Vectorized per-event transforms + registry projection."""
-    if cfg.use_pandas_udfs:
-        data = data.withColumn("lang", normalize_lang_pudf(F.col("lang")))
-        data = data.withColumn("content_sha256", sha256_pudf(F.col("content")))
-    else:
-        data = data.withColumn("lang", normalize_lang_col(F.col("lang")))
-        data = data.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-    return registry.project_batch(data)
-
-
-def _run_metrics(
-    staged: DataFrame, run: list[int], cfg: ReplayConfig
-) -> tuple[dict[int, list], dict[int, dict[str, int]], dict[int, float]]:
-    """One metrics pass per run, every collect DRIVER-BOUNDED.
-
-    ONE heavy aggregation job computes GROUPING SETS ((epoch, bucket),
-    (epoch, repo)) over the staged winners; the slim result (|run| x
-    n_buckets + distinct-repo rows — executor-side, never collected whole)
-    is persisted, then three bounded reads come off the cache:
-
-    - the (epoch, bucket) arm — ledger/metrics rows, <= |run| x n_buckets;
-    - per-epoch repo means — |run| rows (so the salt policy sees the TRUE
-      mean, not the hot-only mean);
-    - the hot-repo rows with the threshold cut pushed INTO the filter — the
-      driver receives only keys above threshold x mean, never one row per
-      distinct repo (an unbounded collect at 10^8 repos).
-
-    Returns ({epoch: [bucket rows]}, {epoch: {repo: n}}, {epoch: mean_n}).
-    """
-    by_epoch_bucket: dict[int, list] = {e: [] for e in run}
-    hot: dict[int, dict[str, int]] = {}
-    aggs = [
-        F.count("*").alias("applied_events"),
-        F.max("_lsn").alias("max_applied_lsn"),
-        _fingerprint_agg("_lsn").alias("fp"),
-    ]
-    if not cfg.detect_skew:
-        for r in staged.groupBy("epoch", "bucket").agg(*aggs).collect():
-            by_epoch_bucket[int(r["epoch"])].append(r)
-        return by_epoch_bucket, hot, {}
-    g = staged.groupingSets(
-        [["epoch", "bucket"], ["epoch", "repo"]],
-        F.col("epoch"), F.col("bucket"), F.col("repo"),
-    ).agg(*aggs).persist()
-    try:
-        for r in g.filter(F.col("bucket").isNotNull()).collect():
-            by_epoch_bucket[int(r["epoch"])].append(r)
-        repo_arm = g.filter(F.col("repo").isNotNull())
-        mean_by_epoch = {
-            int(r["epoch"]): float(r["mean_n"])
-            for r in repo_arm.groupBy("epoch")
-            .agg(F.avg("applied_events").alias("mean_n"))
-            .collect()
-        }
-        cut = None
-        for e in run:
-            m = mean_by_epoch.get(e)
-            if m is None:
-                continue
-            cond = F.col("epoch") == F.lit(e)
-            lim = F.lit(cfg.salt_threshold * m)
-            cut = F.when(cond, lim) if cut is None else cut.when(cond, lim)
-        if cut is not None:
-            for r in repo_arm.filter(F.col("applied_events") > cut).collect():
-                hot.setdefault(int(r["epoch"]), {})[r["repo"]] = int(
-                    r["applied_events"]
-                )
-    finally:
-        g.unpersist()
-    return by_epoch_bucket, hot, mean_by_epoch
-
-
-def _salt_map_from(
-    hot_counts: dict[str, int], true_mean: float | None, cfg: ReplayConfig
-) -> dict[str, int]:
-    """Hot-key salt plan from the bounded detector output (shared policy:
-    operators.partitioning.salt_counts, with the true mean passed in)."""
-    if not (cfg.detect_skew and hot_counts):
-        return {}
-    from hdata_spark.operators.partitioning import salt_counts
-
-    return salt_counts(
-        hot_counts,
-        threshold=cfg.salt_threshold,
-        max_salts=cfg.max_salts,
-        mean=true_mean,
-    )
-
-
-def _apply_schema_changes(
-    batch: DataFrame,
-    table: SnapshotTable,
-    registry: SchemaRegistry,
-) -> int:
-    """Collect this batch's schema_change events (tiny) and apply in order."""
-    changes = (
-        batch.filter(F.col("op") == "schema_change")
-        .select("lsn", "sc_kind", "sc_column", "sc_arg")
-        .orderBy("lsn")
-        .collect()
-    )
-    applied = 0
-    for ch in changes:
-        if registry.has_lsn(ch["lsn"]):
-            continue  # crash-resume re-delivery: already applied
-        registry.apply_change(ch["sc_kind"], ch["sc_column"], ch["sc_arg"], ch["lsn"])
-        applied += 1
-    # Drive the table manifest from registry-vs-table drift, NOT from
-    # `applied`: a crash between registry persist and the table commit
-    # resumes with applied=0 but the manifest still behind — evolve_schema
-    # is idempotent, so re-driving an already-current spec is a no-op.
-    if applied or table.schema_spec() != registry.spec:
-        _evolve_table_forward(table, registry)
-    return applied
-
-
-def _evolve_table_forward(table: SnapshotTable, registry: SchemaRegistry) -> None:
-    """Catch the table manifest up to the registry — FORWARD only.
-
-    evolve_schema accepts any spec, so a registry BEHIND the table (a
-    fresh/lost registry state file paired with an already-evolved table)
-    would silently regress the manifest and drop evolved columns from
-    merges and reads. That pairing is unrecoverable operator error: fail
-    loudly instead of committing it.
-    """
-    if not spec_evolves(table.schema_spec(), registry.spec):
-        raise ValueError(
-            "schema registry is behind/incompatible with the table manifest "
-            f"(registry {[c['name'] for c in registry.spec]} vs table "
-            f"{[c['name'] for c in table.schema_spec()]}); refusing to "
-            "regress the table schema — restore the registry state file or "
-            "rebuild it by replaying the event log's schema_change events"
-        )
-    table.evolve_schema(registry.spec)
-
-
-def _commit_epoch(
-    epoch: int,
-    rows_bucket: list,
-    salt_map: dict[str, int],
-    merge_stats: dict,
-    registry: SchemaRegistry,
-    ledger: CommitLedger,
-    metrics: MetricsLog,
-    cfg: ReplayConfig,
-    global_max_lsn: int,
-) -> dict:
-    mean_rows = (
-        sum(r["applied_events"] for r in rows_bucket) / len(rows_bucket)
-        if rows_bucket
-        else 0.0
-    )
-    partitions = [
-        {
-            "partition_id": int(r["bucket"]),
-            "applied_events": int(r["applied_events"]),
-            "lag_events": int(global_max_lsn - r["max_applied_lsn"]),
-            "skew_ratio": (r["applied_events"] / mean_rows) if mean_rows else 0.0,
-            "salt_buckets": int(sum(salt_map.values()) or 1),
-        }
-        for r in sorted(rows_bucket, key=lambda r: r["bucket"])
-    ]
-    fingerprint = format(
-        functools.reduce(
-            lambda a, r: a ^ (int(r["fp"]) & 0xFFFFFFFFFFFFFFFF), rows_bucket, 0
-        ),
-        "016x",
-    )
-    record = {
-        "partitions": partitions,
-        "batch_fingerprint": fingerprint,
-        "committed_at_lsn": max(
-            (int(r["max_applied_lsn"]) for r in rows_bucket), default=0
-        ),
-        "applied_events": sum(p["applied_events"] for p in partitions),
-        "schema_version": registry.versions[-1]["schema_version"],
-        "snapshot_version": merge_stats["version"],
-        "salt_map": salt_map,
-    }
-    # Order matters for crash safety: the data commit (merge) already
-    # happened; a crash before the ledger write below leaves a committed-but-
-    # unledgered epoch, which re-applies as a no-op (stored-LSN LWW).
-    metrics.append(
-        epoch,
-        [
-            {k: p[k] for k in (
-                "partition_id", "lag_events", "applied_events",
-                "skew_ratio", "salt_buckets",
-            )}
-            for p in partitions
-        ],
-    )
-    ledger.commit(epoch, record)
-    return record
-
-
-def _apply_run(
-    spark: SparkSession,
-    events: DataFrame,
-    run: list[int],
-    table: SnapshotTable,
-    ledger: CommitLedger,
-    metrics: MetricsLog,
-    registry: SchemaRegistry,
-    cfg: ReplayConfig,
-    global_max_lsn: int,
-    has_schema_changes: bool,
-) -> None:
-    """Apply a contiguous run of uncommitted epochs: one scan, k merges."""
-    lo, hi = run[0], run[-1]
-    batch = events.filter(F.col("epoch").between(lo, hi))
-    if has_schema_changes:
-        _apply_schema_changes(batch, table, registry)
-    elif table.schema_spec() != registry.spec:
-        # Registry ahead of the manifest with no schema events in the run:
-        # the registry was primed out-of-band (declared columns before
-        # replay — the reference's OutputFieldsDeclarer shape,
-        # hdata-api/.../api/OutputFieldsDeclarer.java) or a crash landed
-        # between registry persist and table evolve in a previous process.
-        # The drift check is a local manifest read (no Spark job) and
-        # evolve_schema is idempotent, so catching up here is free.
-        # (Forward only: a registry BEHIND the table raises instead.)
-        _evolve_table_forward(table, registry)
-
-    data = batch.filter(F.col("op") != "schema_change").drop(
-        "sc_kind", "sc_column", "sc_arg"
-    )
-
-    # One pass for the whole run: per-epoch LWW winners, STAGED to an
-    # (epoch, bucket)-partitioned parquet dataset. Staging (instead of
-    # .persist) matters twice over: the columnar cache builder anti-scales
-    # with cores (measured 22s@8 -> 57s@32 for the same data), while a
-    # parquet write scales; and at 10^10 events the winners don't fit
-    # executor storage memory anyway — a one-pass spill to the (scalable)
-    # table filesystem with per-epoch partition pruning is the design that
-    # survives the scale-up.
-    # Dedup FIRST, transform AFTER: the winner set is typically a small
-    # fraction of the event stream (LWW collapses per-key churn), so running
-    # the vectorized transforms (sha256, lang normalization, projection) on
-    # winners only cuts their cost by the churn factor; the winners
-    # aggregation itself reads just (epoch, keys, lsn) — column-pruned at
-    # the scan — and the winner rows come back via a broadcast semi join on
-    # LSN, so the full-width event stream is never shuffled (see
-    # operators.dedup). Transforms are row-wise, so the reorder is
-    # semantics-free.
-    mor = cfg.sink_commit == "append"
-    deduped = lww_latest(data, keys=("epoch", *table.keys), order_col="lsn")
-    deduped = _transform(deduped, registry, cfg)
-    deduped = deduped.withColumn("bucket", table._bucket_expr())
-    logical = [c["name"] for c in registry.spec]
-    staged_cols = deduped.select(
-        *logical,
-        F.col("lsn").alias("_lsn"),
-        F.when(F.col("op") == "delete", F.lit("d")).otherwise(F.lit("u")).alias("_op"),
-        "epoch",
-        "bucket",
-    )
-    if mor:
-        # Delta files live INSIDE the table: per-epoch commit = manifest
-        # append of these files (metadata-only; see SnapshotTable.register_deltas).
-        stage_rel = os.path.join(
-            "data", f"delta_{lo:08d}_{hi:08d}_{uuid.uuid4().hex[:8]}"
-        )
-    else:
-        stage_rel = os.path.join(
-            "_staging", f"run_{lo:08d}_{hi:08d}_{uuid.uuid4().hex[:8]}"
-        )
-    stage_dir = os.path.join(table.root, stage_rel)
-    t0 = time.time()
-    # repartition BY (epoch, bucket): each output group lands wholly in one
-    # task, so the dynamic-partition write emits exactly one file per
-    # (epoch, bucket) and the per-task partition sort is over ~1 group.
-    (
-        staged_cols.repartition(F.col("epoch"), F.col("bucket"))
-        .write.partitionBy("epoch", "bucket")
-        .mode("overwrite")
-        .parquet(stage_dir)
-    )
-    t0 = _prof(f"run[{lo}-{hi}] stage write", t0)
-    if not any(e.startswith("epoch=") for e in os.listdir(stage_dir)):
-        # Run carried zero data events (e.g. schema-change-only epoch):
-        # commit empty epochs so the ledger stays contiguous.
-        for epoch in run:
-            merge_stats = (
-                table.register_deltas({})
-                if mor
-                else table.merge(spark, None, affected=[], batch_deduped=True)
-            )
-            _commit_epoch(
-                epoch, [], {}, merge_stats, registry, ledger, metrics, cfg,
-                global_max_lsn,
-            )
-        if not mor:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-        return
-    staged = spark.read.parquet(stage_dir)
-
-    by_epoch_bucket, hot_by_epoch, mean_by_epoch = _run_metrics(
-        staged, run, cfg
-    )
-    t0 = _prof(f"run[{lo}-{hi}] metrics aggs", t0)
-
-    for epoch in run:
-        rows_bucket = by_epoch_bucket.get(epoch, [])
-        affected = sorted(int(r["bucket"]) for r in rows_bucket)
-        if mor:
-            edir = os.path.join(stage_dir, f"epoch={epoch}")
-            files_by_bucket = (
-                list_bucket_files(edir, os.path.join(stage_rel, f"epoch={epoch}"))
-                if os.path.isdir(edir)
-                else {}
-            )
-            merge_stats = table.register_deltas(files_by_bucket)
-        else:
-            epoch_batch = (
-                staged.filter(F.col("epoch") == epoch)
-                .withColumn("lsn", F.col("_lsn"))
-                .withColumn(
-                    "op",
-                    F.when(F.col("_op") == "d", F.lit("delete")).otherwise(
-                        F.lit("update")
-                    ),
-                )
-                .drop("_lsn", "_op", "bucket", "epoch")
-            )
-            merge_stats = table.merge(
-                spark,
-                epoch_batch,
-                affected=affected,
-                batch_deduped=True,  # staged winners are unique per (epoch, key)
-            )
-        salt_map = _salt_map_from(
-            hot_by_epoch.get(epoch, {}), mean_by_epoch.get(epoch), cfg
-        )
-        _commit_epoch(
-            epoch, rows_bucket, salt_map, merge_stats,
-            registry, ledger, metrics, cfg, global_max_lsn,
-        )
-        t0 = _prof(f"epoch {epoch} {'append' if mor else 'merge'}+commit", t0)
-    if not mor:
-        shutil.rmtree(stage_dir, ignore_errors=True)
+__all__ = ["ReplayConfig", "replay"]
 
 
 def replay(
@@ -470,19 +62,15 @@ def replay(
     replay reads only the uncommitted tail.
     """
     cfg = cfg or ReplayConfig()
-    t0 = time.time()
     bounds = events.agg(
-        F.max("lsn").alias("max_lsn"),
         F.min("epoch").alias("min_epoch"),
         F.max("epoch").alias("max_epoch"),
         F.max(F.when(F.col("op") == "schema_change", F.col("epoch"))).alias(
             "max_sc_epoch"
         ),
     ).collect()[0]
-    t0 = _prof("replay bounds agg", t0)
-    if bounds["max_lsn"] is None:
+    if bounds["min_epoch"] is None:
         return {"epochs_applied": 0, "epochs_skipped": 0}
-    global_max_lsn = int(bounds["max_lsn"])
 
     # Upfront profile: which epochs contain schema_change events (tiny job).
     sc_epochs: set[int] = set()
@@ -520,22 +108,20 @@ def replay(
         else:
             runs.append([epoch])
 
-    t0 = _prof("replay planning", t0)
     for run in runs:
-        _apply_run(
-            spark, events, run, table, ledger, metrics, registry, cfg,
-            global_max_lsn, has_schema_changes=bool(set(run) & sc_epochs),
+        apply_epochs(
+            spark, events.filter(F.col("epoch").between(run[0], run[-1])), run,
+            table, ledger, metrics, registry, cfg,
+            maybe_schema_changes=bool(set(run) & sc_epochs),
         )
-    t0 = time.time()
     compacted = False
-    if cfg.sink_commit == "append" and cfg.compact_at_end and todo:
+    if cfg.compact_at_end and todo:
         # Fold MOR deltas back to one row per key (read-optimize the table).
         # Policy, not correctness: readers resolve deltas either way. On a
         # real deployment this runs on its own cadence (every k-th run /
         # delta-file threshold), amortized across many fast-append commits.
         table.compact(spark)
         compacted = True
-        t0 = _prof("replay compact", t0)
     return {
         "epochs_applied": len(todo),
         "epochs_skipped": skipped,

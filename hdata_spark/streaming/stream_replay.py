@@ -1,9 +1,32 @@
-"""Structured Streaming replay: WAL/binlog tail via readStream + foreachBatch.
+"""The engine's one apply core, and the WAL tail that drives it.
+
+The reference runs every job through a single reader -> ring buffer ->
+writer pipeline (hdata-core/.../core/HData.java:45-217). Here the single
+pipeline is `apply_epochs(frame, epochs)`; batch replay (replay.py) and the
+Structured Streaming tail below are two planners in front of it:
+
+- batch replay hands it a run of contiguous uncommitted epochs of the log;
+- the WAL tail hands it one micro-batch as a run of ONE epoch, the
+  micro-batch's id (`epoch = lit(batch_id)`), so its ledger is keyed by
+  batch_id and a tail drained one log epoch per trigger writes the same
+  ledger records, metrics rows and final table as a batch replay.
+
+One call of the core:
+
+    schema_change events -> registry (LSN order) -> table manifest catch-up
+    LWW winners per (epoch, key) -> transforms -> registry projection
+    ONE (epoch, bucket)-partitioned stage write of the winners, carrying an
+        observed per-epoch fingerprint (no extra Spark job)
+    for each epoch, in order:
+        per-bucket counts + max LSN from the staged files' parquet footers
+        metadata-only manifest append of the epoch's files (fast-append)
+        metrics row, then ledger record
 
 The reference's Kafka reader is its streaming archetype — an offset-tracked
 topic tail, bounded per run by `max.fetch.size` / `max.wait.second`
 (hdata-kafka/.../reader/kafka/KafkaConsumer.java:84-141;
-`start.offset` seek :85-97). This module is the Spark-native generalization:
+`start.offset` seek :85-97). `stream_replay` is the Spark-native
+generalization:
 
 - the event log directory is the "topic" (`spark.readStream.parquet`);
   swapping in `format("kafka")` + `startingOffsets` changes NOTHING
@@ -13,34 +36,33 @@ topic tail, bounded per run by `max.fetch.size` / `max.wait.second`
   static `start.offset`);
 - `maxFilesPerTrigger` is the `max.fetch.size` bound (micro-batch sizing /
   backpressure); `Trigger.AvailableNow` is the bounded-replay mode — drain
-  everything, checkpointing per batch, then stop;
-- the apply stage inside foreachBatch is the SAME pipeline as batch replay:
-  vectorized transforms -> registry projection -> LWW dedup -> stored-LSN
-  sink commit, so stream and batch replays of one log converge to an
-  identical final table (tested in tests/test_stream_replay.py);
-- the sink commit honors ReplayConfig.sink_commit exactly like the batch
-  path: "append" (default) stages each micro-batch's winners as bucketed
-  delta files and commits metadata-only (merge-on-read fast-append, with
-  delta-file-count-triggered compaction); "merge" takes the per-batch
-  copy-on-write MERGE (read-optimized, commit-heavy).
+  everything, checkpointing per batch, then stop.
 
 Exactly-once: Spark re-delivers an in-flight micro-batch after a crash with
-the SAME batch_id. The ledger (keyed by batch_id here — the stream's epoch)
-skips fully-committed batches, and the stored-LSN LWW merge makes even a
-raced re-apply a no-op — the same two-layer guarantee as batch replay.
+the SAME batch_id, and a resumed batch replay re-plans the epochs the
+ledger lacks. The ledger skips fully-committed epochs, and the stored-LSN
+LWW read makes even a raced re-apply a no-op — the ledger is the fast path,
+not the correctness anchor.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import time
 import uuid
+from dataclasses import dataclass
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from hdata_spark.functions.text import (
+    normalize_lang_col,
+    normalize_lang_pudf,
+    sha256_pudf,
+)
 from hdata_spark.operators.dedup import lww_latest
-from hdata_spark.plans.schema_registry import SchemaRegistry
+from hdata_spark.plans.schema_registry import SchemaRegistry, spec_evolves
 from hdata_spark.sinks.snapshot import (
     SnapshotTable,
     delta_footer_stats,
@@ -48,12 +70,206 @@ from hdata_spark.sinks.snapshot import (
 )
 from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
-from hdata_spark.streaming.replay import (
-    ReplayConfig,
-    _evolve_table_forward,
-    _prof,
-    _transform,
-)
+
+
+@dataclass
+class ReplayConfig:
+    use_pandas_udfs: bool = False  # pandas_udf twins instead of built-ins
+    # Batch replay folds the run's delta files back to one row per key once
+    # every epoch is committed (read-optimize the table).
+    compact_at_end: bool = True
+    # Streaming-mode compaction trigger: when a micro-batch commit leaves
+    # more than this many UNCOMPACTED delta files in the table, the stream
+    # path folds them with `compact()` before the next trigger. Per-batch
+    # commit stays metadata-only (the fast-append invariant); compaction cost
+    # is amortized over ~threshold batches. None disables auto-compaction
+    # (callers own the cadence, e.g. a separate maintenance job).
+    stream_compact_delta_files: int | None = 64
+
+
+def _transform(data: DataFrame, registry: SchemaRegistry, cfg: ReplayConfig) -> DataFrame:
+    """Vectorized per-event transforms + registry projection."""
+    if cfg.use_pandas_udfs:
+        data = data.withColumn("lang", normalize_lang_pudf(F.col("lang")))
+        data = data.withColumn("content_sha256", sha256_pudf(F.col("content")))
+    else:
+        data = data.withColumn("lang", normalize_lang_col(F.col("lang")))
+        data = data.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+    return registry.project_batch(data)
+
+
+def _evolve_table_forward(table: SnapshotTable, registry: SchemaRegistry) -> None:
+    """Catch the table manifest up to the registry — FORWARD only.
+
+    evolve_schema accepts any spec, so a registry BEHIND the table (a
+    fresh/lost registry state file paired with an already-evolved table)
+    would silently regress the manifest and drop evolved columns from
+    merges and reads. That pairing is unrecoverable operator error: fail
+    loudly instead of committing it.
+    """
+    if not spec_evolves(table.schema_spec(), registry.spec):
+        raise ValueError(
+            "schema registry is behind/incompatible with the table manifest "
+            f"(registry {[c['name'] for c in registry.spec]} vs table "
+            f"{[c['name'] for c in table.schema_spec()]}); refusing to "
+            "regress the table schema — restore the registry state file or "
+            "rebuild it by replaying the event log's schema_change events"
+        )
+    table.evolve_schema(registry.spec)
+
+
+def apply_epochs(
+    spark: SparkSession,
+    frame: DataFrame,
+    epochs: list[int],
+    table: SnapshotTable,
+    ledger: CommitLedger,
+    metrics: MetricsLog,
+    registry: SchemaRegistry,
+    cfg: ReplayConfig,
+    maybe_schema_changes: bool = True,
+) -> list[dict]:
+    """Apply a run of uncommitted epochs: one scan, one stage write, one
+    fast-append commit per epoch. Returns the epochs' ledger records.
+
+    `frame` carries change events (lsn, epoch, op, keys, payload, sc_kind,
+    sc_column, sc_arg) whose `epoch` values all lie in `epochs`. Schema-change
+    events apply first, in LSN order; data events then project against the
+    updated registry. Within one epoch this matches applying events one by
+    one because projection only ADDS evolved columns: data rows preceding the
+    change simply carry nulls there, exactly as the registry's since_lsn
+    records. Batch replay therefore gives each schema-change epoch a run of
+    its own.
+
+    `maybe_schema_changes=False` (a planner that profiled the log and found
+    no schema_change event in these epochs) skips the schema-change
+    filter+collect job: on a schema-stable log it is a fixed cost paid every
+    run for an always-empty result.
+    """
+    applied = 0
+    if maybe_schema_changes:
+        changes = (
+            frame.filter(F.col("op") == "schema_change")
+            .select("lsn", "sc_kind", "sc_column", "sc_arg")
+            .orderBy("lsn")
+            .collect()
+        )
+        for ch in changes:
+            if registry.has_lsn(ch["lsn"]):
+                continue  # crash-resume re-delivery: already applied
+            registry.apply_change(
+                ch["sc_kind"], ch["sc_column"], ch["sc_arg"], ch["lsn"]
+            )
+            applied += 1
+    # Drive the table manifest from registry-vs-table drift, NOT from
+    # `applied`: a crash between registry persist and the table commit
+    # resumes with applied=0 but the manifest still behind. The registry may
+    # also have been primed out-of-band (declared columns before replay —
+    # the reference's OutputFieldsDeclarer shape,
+    # hdata-api/.../api/OutputFieldsDeclarer.java). The drift probe is a
+    # local manifest read (no Spark job) and evolve_schema is idempotent.
+    if applied or table.schema_spec() != registry.spec:
+        _evolve_table_forward(table, registry)
+
+    data = frame.filter(F.col("op") != "schema_change").drop(
+        "sc_kind", "sc_column", "sc_arg"
+    )
+    # One pass for the whole run: per-epoch LWW winners, STAGED to an
+    # (epoch, bucket)-partitioned parquet dataset inside the table. Staging
+    # (instead of .persist) matters twice over: the columnar cache builder
+    # anti-scales with cores (measured 22s@8 -> 57s@32 for the same data),
+    # while a parquet write scales; and at 10^10 events the winners don't
+    # fit executor storage memory anyway.
+    # Dedup FIRST, transform AFTER: the winner set is typically a small
+    # fraction of the event stream (LWW collapses per-key churn), so running
+    # the vectorized transforms (sha256, lang normalization, projection) on
+    # winners only cuts their cost by the churn factor; the winners
+    # aggregation itself reads just (epoch, keys, lsn) — column-pruned at
+    # the scan — and the winner rows come back via a broadcast semi join on
+    # LSN, so the full-width event stream is never shuffled (see
+    # operators.dedup). Transforms are row-wise, so the reorder is
+    # semantics-free.
+    winners = lww_latest(data, keys=("epoch", *table.keys), order_col="lsn")
+    winners = _transform(winners, registry, cfg)
+    staged = winners.select(
+        *[c["name"] for c in registry.spec],
+        F.col("lsn").alias("_lsn"),
+        F.when(F.col("op") == "delete", F.lit("d")).otherwise(F.lit("u")).alias("_op"),
+        "epoch",
+        table._bucket_expr().alias("bucket"),
+    )
+    # Order-insensitive per-epoch fingerprint: BIT_XOR of xxhash64(keys,
+    # lsn) over the epoch's winners. XOR is commutative and overflow-free
+    # (a SUM of hashes would overflow under ANSI mode). Observed on the
+    # stage write itself, so it costs no Spark job of its own; observed
+    # metrics reject FILTER clauses, hence the CASE per epoch.
+    key_hash = F.xxhash64(*[F.col(k) for k in table.keys], F.col("_lsn"))
+    fingerprint = Observation()
+    stage_rel = os.path.join(
+        "data", f"delta_{epochs[0]:08d}_{epochs[-1]:08d}_{uuid.uuid4().hex[:8]}"
+    )
+    # repartition BY (epoch, bucket): each output group lands wholly in one
+    # task, so the dynamic-partition write emits exactly one file per
+    # (epoch, bucket) and the per-task partition sort is over ~1 group.
+    (
+        staged.repartition(F.col("epoch"), F.col("bucket"))
+        .observe(
+            fingerprint,
+            *[
+                F.bit_xor(
+                    F.when(F.col("epoch") == e, key_hash).otherwise(
+                        F.lit(0).cast("long")
+                    )
+                ).alias(f"fp_{e}")
+                for e in epochs
+            ],
+        )
+        .write.partitionBy("epoch", "bucket")
+        .mode("overwrite")
+        .parquet(os.path.join(table.root, stage_rel))
+    )
+    observed = fingerprint.get
+
+    records = []
+    for epoch in epochs:
+        # Crash safety: a crash after register_deltas but before the ledger
+        # commit leaves a committed-but-unledgered epoch; its re-apply
+        # stages and registers IDENTICAL-content rows, and the MOR read's
+        # LWW window keeps exactly one copy per key — a no-op on final state.
+        rel = os.path.join(stage_rel, f"epoch={epoch}")
+        abs_dir = os.path.join(table.root, rel)
+        files = list_bucket_files(abs_dir, rel) if os.path.isdir(abs_dir) else {}
+        # Per-bucket counts and max LSN come off the staged files' parquet
+        # FOOTERS — a driver-side metadata read, not a Spark job over files
+        # this call just wrote (see sinks.snapshot.delta_footer_stats).
+        stats = delta_footer_stats(table.root, files)
+        commit = table.register_deltas(files)
+        top = max((s["max_applied_lsn"] for s in stats), default=0)
+        mean_rows = sum(s["applied_events"] for s in stats) / len(stats) if stats else 0.0
+        partitions = [
+            {
+                "partition_id": s["bucket"],
+                "applied_events": s["applied_events"],
+                "lag_events": top - s["max_applied_lsn"],
+                "skew_ratio": s["applied_events"] / mean_rows,
+                "salt_buckets": 1,
+            }
+            for s in stats
+        ]
+        record = {
+            "partitions": partitions,
+            "batch_fingerprint": format(
+                (observed.get(f"fp_{epoch}") or 0) & 0xFFFFFFFFFFFFFFFF, "016x"
+            ),
+            "committed_at_lsn": top,
+            "applied_events": sum(p["applied_events"] for p in partitions),
+            "schema_version": registry.versions[-1]["schema_version"],
+            "snapshot_version": commit["version"],
+        }
+        metrics.append(epoch, partitions)
+        ledger.commit(epoch, record)
+        records.append(record)
+    return records
 
 
 def apply_change_batch(
@@ -67,159 +283,25 @@ def apply_change_batch(
     cfg: ReplayConfig,
     maybe_schema_changes: bool = True,
 ) -> dict | None:
-    """Apply ONE micro-batch of change events (shared stream/batch core).
-
-    Schema-change events in the batch are applied first (in LSN order), then
-    all data events project against the updated registry — within a single
-    micro-batch this matches the batch replayer's isolate-the-schema-epoch
-    rule because projection only ADDS evolved columns; data rows preceding
-    the change simply carry nulls there, exactly as the registry's
-    since_lsn records.
-
-    `maybe_schema_changes=False` (set by `stream_replay` after profiling the
-    log ONCE at stream start, the batch replayer's upfront-profile rule —
-    replay.py `max_sc_epoch`) skips the per-trigger schema-change
-    filter+collect job entirely: on a schema-stable WAL tail that job is a
-    pure fixed cost paid every micro-batch for an always-empty result.
-    """
+    """Apply ONE micro-batch as the run of one epoch, `batch_id`; then fold
+    the deltas when the delta-file-count cadence says so. Returns the
+    batch's ledger record, or None for an already-committed batch."""
     if ledger.is_committed(batch_id):
         return None
-    t0 = time.time()
-    applied = 0
-    if maybe_schema_changes:
-        changes = (
-            batch.filter(F.col("op") == "schema_change")
-            .select("lsn", "sc_kind", "sc_column", "sc_arg")
-            .orderBy("lsn")
-            .collect()
-        )
-        for ch in changes:
-            if registry.has_lsn(ch["lsn"]):
-                continue  # re-delivered batch: change already applied
-            registry.apply_change(
-                ch["sc_kind"], ch["sc_column"], ch["sc_arg"], ch["lsn"]
-            )
-            applied += 1
-    # Same crash-window rule as batch replay (_apply_schema_changes): the
-    # manifest is driven from registry-vs-table drift so a resume after
-    # "registry persisted, table commit lost" still re-drives the schema.
-    # The drift probe is a local manifest read — no Spark job either way.
-    if applied or table.schema_spec() != registry.spec:
-        _evolve_table_forward(table, registry)
-
-    data = batch.filter(F.col("op") != "schema_change").drop(
-        "sc_kind", "sc_column", "sc_arg"
+    (record,) = apply_epochs(
+        spark, batch.withColumn("epoch", F.lit(batch_id).cast("long")),
+        [batch_id], table, ledger, metrics, registry, cfg, maybe_schema_changes,
     )
-    winners = lww_latest(data, keys=tuple(table.keys), order_col="lsn")
-    winners = _transform(winners, registry, cfg)
-    winners = winners.withColumn("bucket", table._bucket_expr())
-
-    if cfg.sink_commit == "append":
-        # Merge-on-read fast-append (the production WAL-tail mode; reference
-        # archetype hdata-kafka/.../reader/kafka/KafkaConsumer.java:84-141):
-        # the batch's winners land ONCE as bucket-partitioned delta files
-        # inside the table, then the commit is a metadata-only manifest
-        # append (SnapshotTable.register_deltas) — no read or rewrite of
-        # stored buckets per micro-batch. This removes the per-commit cost
-        # that does NOT amortize under a high-frequency tail: with COW, every
-        # trigger pays a full read+rewrite of its affected buckets, which
-        # grows with table size; with MOR it pays only its own winners.
-        # Readers resolve key versions by stored LSN; compaction (below)
-        # folds deltas on a delta-file-count cadence.
-        #
-        # Crash safety: a crash after the stage write / register_deltas but
-        # before the ledger commit re-delivers the batch (same batch_id),
-        # which re-stages and re-registers IDENTICAL-content rows — the MOR
-        # read's LWW window keeps exactly one copy per key, so the re-apply
-        # is a no-op on final state (same two-layer guarantee as COW).
-        logical = [c["name"] for c in registry.spec]
-        staged_cols = winners.select(
-            *logical,
-            F.col("lsn").alias("_lsn"),
-            F.when(F.col("op") == "delete", F.lit("d"))
-            .otherwise(F.lit("u"))
-            .alias("_op"),
-            "bucket",
-        )
-        stage_rel = os.path.join(
-            "data", f"delta_b{batch_id:08d}_{uuid.uuid4().hex[:8]}"
-        )
-        stage_dir = os.path.join(table.root, stage_rel)
-        t0 = _prof(f"batch {batch_id} plan+schema", t0)
-        (
-            staged_cols.repartition(F.col("bucket"))
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(stage_dir)
-        )
-        t0 = _prof(f"batch {batch_id} stage write", t0)
-        files_by_bucket = list_bucket_files(stage_dir, stage_rel)
-        # Per-bucket stats come straight off the just-written files' parquet
-        # FOOTERS (row counts + int64 max statistics) — the second per-trigger
-        # Spark job this path used to launch (a re-read of its own output) is
-        # gone; see sinks.snapshot.delta_footer_stats.
-        stats = delta_footer_stats(table.root, files_by_bucket)
-        t0 = _prof(f"batch {batch_id} footer stats", t0)
-        merge_stats = table.register_deltas(files_by_bucket)
-        t0 = _prof(f"batch {batch_id} register_deltas", t0)
-    else:
-        stats = (
-            winners.groupBy("bucket")
-            .agg(
-                F.count("*").alias("applied_events"),
-                F.max("lsn").alias("max_applied_lsn"),
-            )
-            .collect()
-        )
-        affected = sorted(int(r["bucket"]) for r in stats)
-        merge_stats = table.merge(
-            spark, winners.drop("bucket"), affected=affected, batch_deduped=True
-        )
-    if stats:
-        gmax = max(int(r["max_applied_lsn"]) for r in stats)
-        mean_rows = sum(int(r["applied_events"]) for r in stats) / len(stats)
-    else:
-        gmax, mean_rows = 0, 0.0
-    partitions = [
-        {
-            "partition_id": int(r["bucket"]),
-            "applied_events": int(r["applied_events"]),
-            "lag_events": int(gmax - r["max_applied_lsn"]),
-            "skew_ratio": (int(r["applied_events"]) / mean_rows) if mean_rows else 0.0,
-            "salt_buckets": 1,
-        }
-        for r in sorted(stats, key=lambda r: r["bucket"])
-    ]
-    t0 = _prof(f"batch {batch_id} merge/stats tail", t0)
-    metrics.append(batch_id, partitions)
-    ledger.commit(
-        batch_id,
-        {
-            "partitions": partitions,
-            "committed_at_lsn": gmax,
-            "applied_events": sum(p["applied_events"] for p in partitions),
-            "schema_version": registry.versions[-1]["schema_version"],
-            "snapshot_version": merge_stats["version"],
-            "mode": "stream",
-            "commit_kind": (
-                "fast_append" if cfg.sink_commit == "append" else "merge"
-            ),
-        },
-    )
-    # Delta-file-count compaction cadence: fold MOR deltas once enough have
-    # accumulated. Runs AFTER the ledger commit — compaction is read
-    # optimization, never part of the batch's exactly-once window (a crash
-    # mid-compact leaves the pre-compact snapshot fully committed, and
-    # compact() itself commits atomically).
-    t0 = _prof(f"batch {batch_id} metrics+ledger commit", t0)
+    # Runs AFTER the ledger commit — compaction is read optimization, never
+    # part of the batch's exactly-once window (a crash mid-compact leaves
+    # the pre-compact snapshot fully committed, and compact() itself
+    # commits atomically).
     if (
-        cfg.sink_commit == "append"
-        and cfg.stream_compact_delta_files is not None
+        cfg.stream_compact_delta_files is not None
         and table.delta_file_count() > cfg.stream_compact_delta_files
     ):
         table.compact(spark)
-        t0 = _prof(f"batch {batch_id} compact", t0)
-    return merge_stats
+    return record
 
 
 def drain_available_now(
@@ -242,6 +324,40 @@ def drain_available_now(
             f"(resume with the same checkpoint to continue)"
         )
     return q
+
+
+def _norm_path(p: str) -> str:
+    p = unquote(p)
+    return p.split("://", 1)[-1] if "://" in p else p.removeprefix("file:")
+
+
+def _batch_fully_profiled(
+    checkpoint_dir: str, batch_id: int, profiled_files: frozenset[str]
+) -> bool:
+    """True iff every file of micro-batch `batch_id` was in the profile.
+
+    The batch's file set comes from the checkpoint's file-source log,
+    `<ckpt>/sources/0/<batchId>`, written by the source BEFORE foreachBatch
+    runs; every compaction interval (10 by default) the entry is
+    `<batchId>.compact` instead, listing every file up to that batch. A
+    missing, unreadable or malformed log answers False: the caller then
+    escalates to the full schema-change scan, the safe direction.
+    """
+    path = os.path.join(checkpoint_dir, "sources", "0", str(batch_id))
+    if not os.path.exists(path):
+        path += ".compact"
+    try:
+        with open(path) as f:
+            for line in f:
+                line = line.strip()
+                if not line.startswith("{"):
+                    continue  # version header
+                p = json.loads(line).get("path")
+                if p and _norm_path(p) not in profiled_files:
+                    return False
+        return True
+    except (OSError, ValueError):
+        return False
 
 
 def stream_replay(
@@ -267,7 +383,7 @@ def stream_replay(
     `_post_profile_hook` is test-only: invoked between the schema-change
     profile and the stream start, it deterministically reproduces a
     concurrent WAL writer landing a segment inside that window (the race
-    the per-batch inputFiles() coverage check below exists for).
+    the per-batch coverage check below exists for).
     """
     cfg = cfg or ReplayConfig()
     log = spark.read.parquet(events_dir)
@@ -284,60 +400,28 @@ def stream_replay(
     # having been profiled. We therefore record exactly WHICH files the
     # profile covered and, per micro-batch, escalate back to the full
     # schema-change scan if the batch contains any file the profile never
-    # saw. The batch's exact file set comes from the checkpoint's
-    # file-source log (`<ckpt>/sources/0/<batchId>`, written by the source
-    # BEFORE foreachBatch runs) — a tiny driver-side JSON read, zero Spark
-    # jobs (micro-batch frames expose no inputFiles()). A quiescent log
-    # pays ~ms extra; a racing writer costs one filter job for the
-    # unprofiled batch, never a silently skipped schema change. If the
-    # source log can't be read (compacted/unexpected layout), escalate —
-    # the safe direction.
+    # saw (`_batch_fully_profiled`: a driver-side JSON read, zero Spark
+    # jobs — micro-batch frames expose no inputFiles()).
     maybe_sc = (
         "op" in schema.fieldNames()
         and log.filter(F.col("op") == "schema_change").limit(1).count() > 0
     )
-
-    def _norm_path(p: str) -> str:
-        from urllib.parse import unquote
-
-        p = unquote(p)
-        return p.split("://", 1)[-1] if "://" in p else p.removeprefix("file:")
-
     profiled_files = frozenset(_norm_path(p) for p in log.inputFiles())
-
-    def _batch_fully_profiled(batch_id: int) -> bool:
-        import json as _json
-
-        log_path = os.path.join(checkpoint_dir, "sources", "0", str(batch_id))
-        try:
-            with open(log_path) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line or not line.startswith("{"):
-                        continue  # version header
-                    path = _json.loads(line).get("path")
-                    if path and _norm_path(path) not in profiled_files:
-                        return False
-            return True
-        except OSError:
-            return False
 
     if _post_profile_hook is not None:
         _post_profile_hook()
 
     n_batches = {"n": 0}
-    last_end = {"t": None}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if last_end["t"] is not None:
-            _prof(f"trigger gap before batch {batch_id}", last_end["t"])
-        batch_maybe_sc = maybe_sc or not _batch_fully_profiled(int(batch_id))
+        batch_maybe_sc = maybe_sc or not _batch_fully_profiled(
+            checkpoint_dir, int(batch_id), profiled_files
+        )
         apply_change_batch(
             spark, batch_df, int(batch_id), table, ledger, metrics, registry,
             cfg, maybe_schema_changes=batch_maybe_sc,
         )
         n_batches["n"] += 1
-        last_end["t"] = time.time()
 
     drain_available_now(
         spark.readStream.schema(schema)

@@ -111,6 +111,14 @@ def test_delete_removes_docs_from_index(spark, tmp_path):
     gone = spark.read.parquet(b2).select("doc_id").limit(20)
     idx.delete(spark, gone, batch_lsn=3)
     gone_ids = {r["doc_id"] for r in gone.collect()}
+    # an int-typed doc_ids frame must hit the same buckets as the stored
+    # bigint doc_ids
+    more = (
+        spark.read.parquet(b1).select(F.col("doc_id").cast("int"))
+        .orderBy("doc_id").limit(20)
+    )
+    idx.delete(spark, more, batch_lsn=4)
+    gone_ids |= {r["doc_id"] for r in more.collect()}
     kept = docs.filter(~F.col("doc_id").isin(list(gone_ids)))
     assert _pairs(idx.candidate_pairs(spark)) == _pairs(
         minhash_lsh_candidates(kept)

@@ -105,53 +105,11 @@ def test_skew_ratio_flags_hot_partition(spark):
     assert hot and hot[0]["skew_ratio"] > 4.0
 
 
-def test_hot_repo_detector_collect_is_bounded(spark):
-    """The replay metrics pass must push the hot-key threshold INTO the
-    query: with 100k distinct repos and 2 hot ones, the driver receives only
-    the 2 hot rows, never one row per repo — and the salt policy sees the
-    TRUE mean, not the hot-only mean."""
-    from pyspark.sql import functions as F
-
-    from hdata_spark.streaming.replay import (
-        ReplayConfig,
-        _run_metrics,
-        _salt_map_from,
-    )
-
-    n_cold, hot_n = 100_000, 5_000
-    cold = spark.range(n_cold).select(
-        F.lit(0).alias("epoch"),
-        F.concat(F.lit("org/cold"), F.col("id")).alias("repo"),
-        F.lit("f.py").alias("path"),
-        F.col("id").alias("_lsn"),
-        (F.col("id") % 16).cast("int").alias("bucket"),
-    )
-    hot = spark.range(2 * hot_n).select(
-        F.lit(0).alias("epoch"),
-        F.concat(F.lit("org/hot"), (F.col("id") % 2)).alias("repo"),
-        F.lit("f.py").alias("path"),
-        (F.col("id") + n_cold).alias("_lsn"),
-        (F.col("id") % 16).cast("int").alias("bucket"),
-    )
-    staged = cold.unionByName(hot)
-    cfg = ReplayConfig(salt_threshold=4.0, detect_skew=True)
-    by_bucket, hot_by_epoch, mean_by_epoch = _run_metrics(staged, [0], cfg)
-    assert len(by_bucket[0]) == 16  # bounded: one row per bucket
-    assert set(hot_by_epoch) == {0}
-    assert set(hot_by_epoch[0]) == {"org/hot0", "org/hot1"}  # ONLY hot rows
-    assert hot_by_epoch[0]["org/hot0"] == hot_n
-    true_mean = (n_cold + 2 * hot_n) / (n_cold + 2)
-    assert abs(mean_by_epoch[0] - true_mean) < 1e-6
-    salt_map = _salt_map_from(hot_by_epoch[0], mean_by_epoch[0], cfg)
-    assert set(salt_map) == {"org/hot0", "org/hot1"}
-    assert all(n >= 2 for n in salt_map.values())
-
-
 def test_build_salt_map_collect_is_bounded(spark):
-    """The library helper gets the same driver-bound as the replay detector
-    (round-3 fix): with 100k distinct keys and 2 hot ones, the frame the
-    driver collects carries ONLY the hot rows — the threshold cut is pushed
-    into the query — and the result matches the policy on the true mean."""
+    """The library helper's collect is driver-bounded: with 100k distinct
+    keys and 2 hot ones, the frame the driver collects carries ONLY the hot
+    rows — the threshold cut is pushed into the query — and the result
+    matches the policy on the true mean."""
     from pyspark.sql import functions as F
 
     from hdata_spark.operators.partitioning import _hot_key_rows

@@ -106,10 +106,9 @@ def test_stream_tail_new_files_only(spark, tmp_path, small_fixture):
 
 
 def test_stream_fast_append_metadata_only_commits(spark, tmp_path, small_fixture):
-    """sink_commit='append' (the default, honored since round 3): every
-    micro-batch commit is a metadata-only manifest APPEND — previously
-    committed data files are never dropped or rewritten mid-stream — and the
-    final MOR-resolved state still matches the oracle."""
+    """Every micro-batch commit is a metadata-only manifest APPEND —
+    previously committed data files are never dropped or rewritten
+    mid-stream — and the final MOR-resolved state still matches the oracle."""
     from hdata_spark.streaming.replay import ReplayConfig
 
     base, events = small_fixture
@@ -134,8 +133,6 @@ def test_stream_fast_append_metadata_only_commits(spark, tmp_path, small_fixture
         if prev is not None:
             assert prev <= files, f"v{v} dropped files committed by v{v-1}"
         prev = files
-    for e in ledger.committed_epochs():
-        assert ledger.read(e)["commit_kind"] == "fast_append"
     assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, events))
 
 
@@ -157,24 +154,6 @@ def test_stream_delta_threshold_compaction(spark, tmp_path, small_fixture):
     # compaction ran at least once: backlog can't exceed threshold + one
     # batch's worth of buckets (16 here)
     assert table.delta_file_count() <= 4 + table.n_buckets
-    assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, events))
-
-
-def test_stream_cow_mode(spark, tmp_path, small_fixture):
-    """sink_commit='merge' keeps the read-optimized per-batch COW MERGE."""
-    from hdata_spark.streaming.replay import ReplayConfig
-
-    base, events = small_fixture
-    events_dir = _write_event_files(events, str(tmp_path / "events"))
-    table, ledger, metrics, registry, ckpt = _mk(tmp_path, "eng")
-    table.overwrite(spark, spark.createDataFrame(base))
-    stream_replay(
-        spark, events_dir, table, ledger, metrics, registry, ckpt,
-        cfg=ReplayConfig(sink_commit="merge"),
-    )
-    assert table.delta_file_count() == 0
-    for e in ledger.committed_epochs():
-        assert ledger.read(e)["commit_kind"] == "merge"
     assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, events))
 
 
@@ -213,15 +192,25 @@ def test_stream_schema_evolution(spark, tmp_path):
 
 
 def test_stream_batch_convergence(spark, tmp_path, small_fixture):
-    """Stream replay and batch replay of one log -> identical final table."""
+    """Stream replay (one log epoch per trigger, so batch_id == epoch) and
+    batch replay of one log go through the same apply core: identical final
+    table, per-epoch ledger records and metrics rows."""
+    from pyspark.sql import functions as F
+
+    from hdata_spark.operators.dedup import lww_latest
     from hdata_spark.streaming.replay import ReplayConfig, replay
 
     base, events = small_fixture
     events_dir = _write_event_files(events, str(tmp_path / "events"))
+    # The file source orders files by modification time: make it epoch order.
+    for i, fn in enumerate(sorted(os.listdir(events_dir))):
+        os.utime(os.path.join(events_dir, fn), (1_700_000_000 + i,) * 2)
 
     t_s, l_s, m_s, r_s, ckpt = _mk(tmp_path, "stream")
     t_s.overwrite(spark, spark.createDataFrame(base))
-    stream_replay(spark, events_dir, t_s, l_s, m_s, r_s, ckpt)
+    stream_replay(
+        spark, events_dir, t_s, l_s, m_s, r_s, ckpt, max_files_per_trigger=1
+    )
 
     t_b, l_b, m_b, r_b, _ = _mk(tmp_path, "batch")
     t_b.overwrite(spark, spark.createDataFrame(base))
@@ -231,6 +220,70 @@ def test_stream_batch_convergence(spark, tmp_path, small_fixture):
     assert sha256_fingerprint(t_s.read(spark).toPandas()) == sha256_fingerprint(
         t_b.read(spark).toPandas()
     )
+
+    epochs = sorted(int(e) for e in events["epoch"].unique())
+    assert l_s.committed_epochs() == l_b.committed_epochs() == epochs
+    fields = (
+        "partitions", "batch_fingerprint", "applied_events",
+        "committed_at_lsn", "schema_version",
+    )
+    for e in epochs:
+        rs, rb = l_s.read(e), l_b.read(e)
+        assert {k: rs[k] for k in fields} == {k: rb[k] for k in fields}, e
+    assert m_s.rows() == m_b.rows()
+
+    # The fingerprint is BIT_XOR of xxhash64(repo, path, lsn) over the
+    # epoch's LWW winners.
+    ev = spark.createDataFrame(events).filter(
+        (F.col("epoch") == epochs[0]) & (F.col("op") != "schema_change")
+    )
+    fp = (
+        lww_latest(ev, keys=("repo", "path"), order_col="lsn")
+        .agg(F.bit_xor(F.xxhash64("repo", "path", "lsn")))
+        .collect()[0][0]
+    )
+    assert l_b.read(epochs[0])["batch_fingerprint"] == format(
+        fp & 0xFFFFFFFFFFFFFFFF, "016x"
+    )
+
+
+def test_schema_change_only_epoch_commits_empty_record(spark, tmp_path):
+    """An epoch with no data event (here: only a schema change) stages
+    nothing, yet both paths commit it — applied_events 0, fingerprint 0 —
+    so the ledger stays contiguous and the records still agree."""
+    from hdata_spark.streaming.replay import replay
+
+    def ev(lsn, epoch, op, **kw):
+        cols = ("repo", "path", "commit", "lang", "content",
+                "sc_kind", "sc_column", "sc_arg")
+        return {"lsn": lsn, "epoch": epoch, "op": op, **{c: kw.get(c) for c in cols}}
+
+    events = pd.DataFrame([
+        ev(1, 0, "insert", repo="o/r", path="a.py", commit="c1", lang="py", content="x"),
+        ev(2, 1, "schema_change", sc_kind="add", sc_column="stars", sc_arg="int"),
+        ev(3, 2, "update", repo="o/r", path="a.py", commit="c3", lang="py", content="y"),
+    ])
+    events_dir = _write_event_files(events, str(tmp_path / "events"))
+    for i, fn in enumerate(sorted(os.listdir(events_dir))):
+        os.utime(os.path.join(events_dir, fn), (1_700_000_000 + i,) * 2)
+
+    t_s, l_s, m_s, r_s, ckpt = _mk(tmp_path, "stream")
+    stream_replay(
+        spark, events_dir, t_s, l_s, m_s, r_s, ckpt, max_files_per_trigger=1
+    )
+    t_b, l_b, m_b, r_b, _ = _mk(tmp_path, "batch")
+    replay(spark, spark.read.parquet(events_dir), t_b, l_b, m_b, r_b)
+
+    assert l_s.committed_epochs() == l_b.committed_epochs() == [0, 1, 2]
+    empty = l_b.read(1)
+    assert empty["applied_events"] == 0 and empty["partitions"] == []
+    assert empty["batch_fingerprint"] == "0" * 16
+    assert empty["schema_version"] == 1
+    for e in (0, 1, 2):
+        rs, rb = l_s.read(e), l_b.read(e)
+        rs.pop("snapshot_version"), rb.pop("snapshot_version")
+        assert rs == rb, e
+    assert t_s.columns() == t_b.columns() and t_b.columns()[-1] == "stars"
 
 
 def test_stream_concurrent_writer_schema_change_not_skipped(spark, tmp_path):
@@ -297,3 +350,35 @@ def test_delta_footer_stats_raises_on_all_null_lsn(tmp_path):
     pq.write_table(tbl, os.path.join(root, rel))
     with pytest.raises(ValueError, match="non-null"):
         delta_footer_stats(root, {0: [rel]})
+
+
+def _source_log(ckpt, name: str, lines: list[str]) -> None:
+    d = os.path.join(ckpt, "sources", "0")
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, name), "w") as f:
+        f.write("\n".join(lines) + "\n")
+
+
+def test_batch_fully_profiled_fails_safe(tmp_path):
+    """The per-batch profile-coverage check answers False — escalate to the
+    full schema-change scan — on a malformed or missing source log entry,
+    and reads `<batchId>.compact` when the plain entry was compacted away."""
+    import json
+
+    from hdata_spark.streaming.stream_replay import _batch_fully_profiled
+
+    def entry(path: str) -> str:
+        return json.dumps({"path": f"file://{path}", "size": 1})
+
+    ckpt = str(tmp_path / "ckpt")
+    seen = frozenset({"/wal/a.parquet", "/wal/b.parquet"})
+
+    # a truncated JSON line (a torn write) must not raise
+    _source_log(ckpt, "0", ["v1", entry("/wal/a.parquet"), '{"path": "file:///wal/b'])
+    assert _batch_fully_profiled(ckpt, 0, seen) is False
+    # no log entry for the batch at all
+    assert _batch_fully_profiled(ckpt, 1, seen) is False
+    # a compaction batch writes only `<id>.compact`, listing every file so far
+    _source_log(ckpt, "9.compact", ["v1", entry("/wal/a.parquet"), entry("/wal/b.parquet")])
+    assert _batch_fully_profiled(ckpt, 9, seen) is True
+    assert _batch_fully_profiled(ckpt, 9, frozenset({"/wal/a.parquet"})) is False
