@@ -624,7 +624,7 @@ def _writer_snapshot(df: DataFrame, cfg: dict) -> None:
             # (the sink's strict s.lsn > t._lsn rule would otherwise make an
             # lsn-less upsert silently insert-only). Ties within the batch
             # are resolved by the sink's window dedup.
-            stored_max = table.max_stored_lsn(spark)
+            stored_max = table.max_stored_lsn()
             df = df.withColumn("lsn", F.lit(stored_max + 1).cast("long"))
     table.merge(spark, df)
 

@@ -281,5 +281,5 @@ class MinHashIndex:
         )
         return a_new.unionByName(b_new).dropDuplicates(["doc_a", "doc_b"])
 
-    def max_ingested_lsn(self, spark: SparkSession) -> int:
-        return self.table.max_stored_lsn(spark)
+    def max_ingested_lsn(self) -> int:
+        return self.table.max_stored_lsn()

@@ -184,7 +184,7 @@ def kmeans_fit(
 
     # The iteration bodies are small fixed-shape jobs (slim rows, known
     # sizes): AQE's per-exchange materialize-and-replan is pure latency here
-    # (the per-epoch MERGE lesson — sinks/snapshot._no_aqe), and turning it
+    # (the fixed-shape merge lesson — sinks/snapshot._no_aqe), and turning it
     # off also makes the hash(id) co-partitioning below survive verbatim, so
     # the scored agg, the argmax, and the mean's id-join all run WITHOUT an
     # exchange: one shuffle total (the upfront repartition) plus the tiny

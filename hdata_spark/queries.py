@@ -286,8 +286,10 @@ def cdc_salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdc_metrics_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS over (epoch, partition) and (epoch, event_type) — the
-    exact shape of the replay loop's one-pass ledger/metrics aggregation
-    (streaming/replay.py gsets)."""
+    per-(epoch, partition) event counts and max LSN the ledger records
+    (FIXTURES.md §5), in one aggregation pass. The apply core takes the
+    same figures from its staged files' parquet footers
+    (streaming/stream_replay.apply_epochs)."""
     ev = load(spark, sf_dir, "events")
     epoch = (F.col("event_id") / 2500).cast("long").alias("epoch")
     part = (F.col("user_id") % 16).alias("partition_id")

@@ -63,22 +63,28 @@ DERIVED_COLUMNS = ["content_sha256"]
 
 
 @contextmanager
-def _no_aqe(spark: SparkSession):
-    """Run a block with AQE off.
-
-    The per-epoch MERGE is a small fixed-shape job (bounded by live keys,
-    not by events); AQE's per-stage materialize-and-replan adds latency on
-    every one of its 3 exchanges and can never improve a plan whose sizes we
-    already know. An incremental pipeline runs thousands of these commits —
-    constant per-commit overhead is the part of the cost model that does NOT
-    amortize at scale, so it is the part to strip.
-    """
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    """Run a block with one session conf set, restoring it afterwards."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        spark.conf.set(key, prev)
+
+
+def _no_aqe(spark: SparkSession):
+    """Run a block with AQE off.
+
+    For small fixed-shape jobs whose sizes are already known: `merge`'s
+    per-bucket rewrite (`overwrite` included, and the jobspec upserts and
+    `MinHashIndex` ingests that go through it) and the `similarity` joins.
+    AQE's per-stage materialize-and-replan adds latency on every exchange
+    and can never improve such a plan. Constant per-commit overhead is the
+    part of the cost model that does NOT amortize at scale, so it is the
+    part to strip.
+    """
+    return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
 def _default_schema() -> list[dict]:
@@ -230,14 +236,19 @@ class SnapshotTable:
     def columns(self) -> list[str]:
         return [c["name"] for c in self.schema_spec()]
 
-    def max_stored_lsn(self, spark: SparkSession) -> int:
+    def max_stored_lsn(self) -> int:
         """Highest _lsn in the current snapshot (0 for an empty table).
 
-        Column-pruned single-column agg — parquet row-group stats keep this
-        a near-footer-only scan even on a wide table.
+        Read from the parquet footers of the manifest's files: no Spark job.
+        The maximum over every stored version (superseded rows and
+        tombstones included) equals the maximum over the LWW winners, since
+        each key's winner is its highest-LSN version.
         """
-        row = self.read_internal(spark).agg(F.max("_lsn")).collect()[0]
-        return int(row[0]) if row[0] is not None else 0
+        m = self._read_manifest(self.current_version())
+        stats = delta_footer_stats(
+            self.root, {int(b): fs for b, fs in m["buckets"].items()}
+        )
+        return max((s["max_applied_lsn"] for s in stats), default=0)
 
     # ---------------- reads ----------------
 
@@ -248,14 +259,8 @@ class SnapshotTable:
         ).cast("int")
 
     def _empty(self, spark: SparkSession, schema_spec: list[dict]) -> DataFrame:
-        fields = [
-            T.StructField(c["name"], _parse_type(c["type"])) for c in schema_spec
-        ] + [
-            T.StructField("_lsn", T.LongType()),
-            T.StructField("_op", T.StringType()),
-            T.StructField("bucket", T.IntegerType()),
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
+        schema = _stored_schema(schema_spec).add("bucket", T.IntegerType())
+        return spark.createDataFrame([], schema)
 
     def read_internal(
         self,
@@ -290,21 +295,36 @@ class SnapshotTable:
             return self._empty(spark, spec)
         # Files are grouped by schema GENERATION (bumped on every
         # evolve_schema — the parquet-fallback analog of Iceberg's per-file
-        # schema id). Each generation shares one physical schema, is read
-        # without any footer merging, and is projected to the CURRENT
-        # logical schema (rename lineage via `sources` coalesce, widen via
-        # cast); generations then union. This is what makes add/rename/widen
-        # metadata-only: old files are never rewritten, just re-projected —
-        # and type-widened generations can coexist (parquet mergeSchema
-        # cannot merge an int32 file with an int64 one).
+        # schema id), and the scan is planned from the manifest alone, as
+        # Iceberg plans one: each generation is read with the schema its
+        # `gen_specs` entry declares (no schema-inference job) from the
+        # manifest's file list (no file-listing job), then projected to the
+        # target logical schema (rename lineage via `sources` coalesce,
+        # widen via cast); generations then union. This is what makes
+        # add/rename/widen metadata-only: old files are never rewritten,
+        # just re-projected — and type-widened generations can coexist.
+        # Writer invariant: every writer (merge, the apply core's stage
+        # write, compact) writes exactly its generation's declared schema —
+        # logical columns at their spec types, `_lsn` bigint, `_op` string.
+        # A file that does not fails the scan with a type mismatch.
         file_gens = m["file_gens"]
         by_gen: dict[int, list[str]] = {}
         for f in files:
             by_gen.setdefault(int(file_gens.get(f, 0)), []).append(f)
         frames = []
-        for _g, fs in sorted(by_gen.items()):
-            raw = spark.read.parquet(*[os.path.join(self.root, f) for f in fs])
-            frames.append(_project(raw, spec))
+        # Spark lists more than `parallelPartitionDiscovery.threshold` (32)
+        # explicit paths with a distributed job; the manifest already names
+        # every file, so the driver only stats them. Scoped to the scan, so
+        # reads of user paths list as before.
+        with _scoped_conf(
+            spark, "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        ):
+            for g, fs in sorted(by_gen.items()):
+                raw = spark.read.schema(
+                    _stored_schema(m["gen_specs"][str(g)])
+                ).parquet(*[os.path.join(self.root, f) for f in fs])
+                frames.append(_project(raw, spec))
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)
@@ -418,12 +438,20 @@ class SnapshotTable:
         spec = manifest["schema"]
         logical = [c["name"] for c in spec]
 
-        # Tolerate batches missing trailing logical columns (e.g. hand-built
-        # test batches without derived/evolved columns): fill with nulls.
-        for name in logical:
-            if name not in batch.columns:
-                spec_t = next(c["type"] for c in spec if c["name"] == name)
-                batch = batch.withColumn(name, F.lit(None).cast(spec_t))
+        # Write exactly the generation's declared schema (read_internal
+        # scans with it): every logical column at its spec type, `lsn` as
+        # bigint. Batches missing logical columns (e.g. hand-built test
+        # batches without derived/evolved columns) get typed nulls. Casting
+        # before bucketing also hashes keys at their stored types.
+        batch = batch.withColumns(
+            {
+                c["name"]: (
+                    F.col(c["name"]) if c["name"] in batch.columns else F.lit(None)
+                ).cast(c["type"])
+                for c in spec
+            }
+            | {"lsn": F.col("lsn").cast("bigint")}
+        )
 
         # Window variant, NOT the semi-join plan: callers (full loads,
         # jobspec upserts) may carry TIED lsn values — e.g. overwrite()
@@ -747,8 +775,9 @@ def list_bucket_files(abs_dir: str, rel_dir: str) -> dict[int, list[str]]:
 def delta_footer_stats(
     root: str, files_by_bucket: dict[int, list[str]], lsn_col: str = "_lsn"
 ) -> list[dict]:
-    """Per-bucket (applied_events, max `lsn_col`) for just-staged delta files,
-    read from the PARQUET FOOTERS — zero Spark jobs.
+    """Per-bucket (applied_events, max `lsn_col`) of data files, read from
+    the PARQUET FOOTERS — zero Spark jobs. Used for just-staged delta files
+    and, by `max_stored_lsn`, for a whole snapshot.
 
     The apply core needs per-bucket counts + max LSN for each epoch's
     metrics/ledger row; launching a read job over files the same call just
@@ -802,6 +831,17 @@ def delta_footer_stats(
                 {"bucket": bucket, "applied_events": n, "max_applied_lsn": mx}
             )
     return out
+
+
+def _stored_schema(spec: list[dict]) -> T.StructType:
+    """The physical schema of a data file written under logical `spec`."""
+    return T.StructType(
+        [T.StructField(c["name"], _parse_type(c["type"])) for c in spec]
+        + [
+            T.StructField("_lsn", T.LongType()),
+            T.StructField("_op", T.StringType()),
+        ]
+    )
 
 
 def _parse_type(type_str: str) -> T.DataType:

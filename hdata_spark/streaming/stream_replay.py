@@ -191,9 +191,11 @@ def apply_epochs(
     # semantics-free.
     winners = lww_latest(data, keys=("epoch", *table.keys), order_col="lsn")
     winners = _transform(winners, registry, cfg)
+    # Staged files carry exactly their generation's declared schema (the
+    # snapshot scan reads with it): the projection casts the logical columns.
     staged = winners.select(
         *[c["name"] for c in registry.spec],
-        F.col("lsn").alias("_lsn"),
+        F.col("lsn").cast("bigint").alias("_lsn"),
         F.when(F.col("op") == "delete", F.lit("d")).otherwise(F.lit("u")).alias("_op"),
         "epoch",
         table._bucket_expr().alias("bucket"),

@@ -132,7 +132,7 @@ def test_index_reopen_keeps_geometry(spark, tmp_path):
     # reopen with DIFFERENT constructor args: stored geometry wins
     idx2 = MinHashIndex(str(tmp_path / "index"), n_perms=16, n_bands=8)
     assert (idx2.n_perms, idx2.n_bands) == (8, 4)
-    assert idx2.max_ingested_lsn(spark) == 1
+    assert idx2.max_ingested_lsn() == 1
 
 
 def test_replace_and_delete_reads_bucket_pruned(spark, tmp_path):

@@ -186,6 +186,33 @@ def test_snapshot_upsert_without_lsn_column_updates_on_rerun(spark, tmp_path):
     out = SnapshotTable(str(tmp_path / "snap")).read(spark).toPandas()
     assert len(out) == 1 and out.iloc[0]["content"] == "v1"
 
+    # A table holding fast-append deltas: the stored max LSN lives in a delta
+    # file, and the next lsn-less upsert must still stamp past it.
+    from hdata_spark.plans.schema_registry import SchemaRegistry
+    from hdata_spark.streaming.ledger import CommitLedger
+    from hdata_spark.streaming.metrics import MetricsLog
+    from hdata_spark.streaming.replay import ReplayConfig, replay
+
+    table = SnapshotTable(str(tmp_path / "snap"))
+    events = v0.assign(
+        commit="c2", content="v2", lsn=50, epoch=0, op="update",
+        sc_kind=None, sc_column=None, sc_arg=None,
+    )
+    replay(
+        spark, spark.createDataFrame(events), table,
+        CommitLedger(str(tmp_path / "l")), MetricsLog(str(tmp_path / "m")),
+        SchemaRegistry(state_path=str(tmp_path / "r.json")),
+        ReplayConfig(compact_at_end=False),
+    )
+    assert table.delta_file_count() == 1 and table.max_stored_lsn() == 50
+    v3 = v0.assign(commit="c3", content="v3")
+    src3 = str(tmp_path / "s3.parquet")
+    spark.createDataFrame(v3).write.parquet(src3)
+    job(src3)
+    out = table.read(spark).toPandas()
+    assert len(out) == 1 and out.iloc[0]["content"] == "v3"
+    assert table.max_stored_lsn() == 51
+
 
 def test_excel_roundtrip(spark, tmp_path):
     pytest.importorskip("openpyxl")

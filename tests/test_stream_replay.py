@@ -289,9 +289,10 @@ def test_schema_change_only_epoch_commits_empty_record(spark, tmp_path):
 def test_stream_concurrent_writer_schema_change_not_skipped(spark, tmp_path):
     """A WAL segment landing BETWEEN the schema-change profile and the
     stream's AvailableNow snapshot (a concurrent writer) must still get its
-    schema_change applied: the per-batch inputFiles() coverage check
-    escalates any unprofiled file back to the full schema-change scan
-    instead of trusting the stale maybe_sc=False profile."""
+    schema_change applied: the per-batch source-log read in
+    `_batch_fully_profiled` escalates any unprofiled file back to the full
+    schema-change scan instead of trusting the stale maybe_sc=False
+    profile."""
     from hdata_spark.fixtures import CDCFixtureConfig, generate_base, generate_events
     from hdata_spark.streaming.replay import ReplayConfig, replay
 
