@@ -626,6 +626,13 @@ def _writer_snapshot(df: DataFrame, cfg: dict) -> None:
             # are resolved by the sink's window dedup.
             stored_max = table.max_stored_lsn()
             df = df.withColumn("lsn", F.lit(stored_max + 1).cast("long"))
+    if table.current_version() == 0:
+        # A new table takes the frame's columns as its schema, so keys and
+        # payload outside the default spec are stored, not dropped.
+        table.evolve_schema([
+            {"name": f.name, "type": f.dataType.simpleString(), "sources": [f.name]}
+            for f in df.schema.fields if f.name not in ("op", "lsn")
+        ])
     table.merge(spark, df)
 
 

@@ -20,9 +20,9 @@ Two implementations:
   event stream twice (measured: mostly-idle CPUs and zero core-count
   scaling on an 8M-event replay).
 - `lww_latest_window`: ``row_number() OVER (...) = 1`` — for inputs whose
-  order column can tie (``SnapshotTable.merge``, the merge-on-read read):
-  it keeps exactly one row per key where the semi join would keep every
-  tied row.
+  order column can tie (the sink's merge-on-read read, and its bucket
+  rewrite behind ``merge``/``compact``, where stored rows win LSN ties):
+  it keeps exactly one row per key where the semi join keeps every tie.
 
 Ties: LSNs are unique by construction (global sequence), which is what
 `lww_latest`'s join on the order column alone relies on.
@@ -69,9 +69,12 @@ def lww_latest_window(
     df: DataFrame,
     keys: Sequence[str] = ("repo", "path"),
     order_col: str = "lsn",
+    tie_col: str | None = None,
 ) -> DataFrame:
-    """Window-function variant (row_number over desc order)."""
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col).desc())
+    """Window-function variant (row_number over desc order); among rows tied
+    on `order_col`, the lowest `tie_col` wins (an arbitrary one without)."""
+    order = [F.col(order_col).desc()] + ([F.col(tie_col)] if tie_col else [])
+    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -14,15 +14,18 @@ manifest + atomic pointer — the same design Iceberg itself uses:
   column names — the parquet-fallback analog of Iceberg column IDs);
 - ``_latest`` is a pointer file updated via ``os.replace`` (atomic on POSIX):
   readers always see a complete snapshot, never a partial commit;
-- MERGE is copy-on-write **per bucket**: only buckets touched by the batch
-  are rewritten; untouched buckets carry their existing files into the new
-  manifest verbatim. With 10^10 rows in 4096 buckets and an incremental batch
-  touching 5% of buckets, 95% of the table is neither read nor written.
+- MERGE and compaction are one copy-on-write **bucket rewrite**
+  (`_rewrite`, Iceberg's `rewrite_data_files` over the file groups a MERGE
+  touches): only the buckets a batch touches are rewritten; untouched
+  buckets carry their existing files into the new manifest verbatim. With
+  10^10 rows in 4096 buckets and an incremental batch touching 5% of
+  buckets, 95% of the table is neither read nor written.
 
 Idempotence anchor: every stored row carries ``_lsn`` (the LSN that produced
-it). Merge resolves (repo, path) collisions by max ``_lsn``, so re-applying
-an already-applied epoch is a no-op BY CONSTRUCTION, not merely by ledger
-bookkeeping. (Reference counterpart: the keyed upsert path
+it). Every key resolves to its highest-``_lsn`` version — at read time across
+fast-append deltas, and in `_rewrite`, where stored rows win LSN ties — so
+re-applying an already-applied epoch is a no-op BY CONSTRUCTION, not merely
+by ledger bookkeeping. (Reference counterpart: the keyed upsert path
 hdata-jdbc/.../writer/jdbc/JDBCWriter.java:128-145, which is at-least-once
 and arrival-order-dependent; stored-LSN LWW is what upgrades it to
 exactly-once under replay.)
@@ -76,9 +79,9 @@ def _scoped_conf(spark: SparkSession, key: str, value: str):
 def _no_aqe(spark: SparkSession):
     """Run a block with AQE off.
 
-    For small fixed-shape jobs whose sizes are already known: `merge`'s
-    per-bucket rewrite (`overwrite` included, and the jobspec upserts and
-    `MinHashIndex` ingests that go through it) and the `similarity` joins.
+    For small fixed-shape jobs whose sizes are already known: the bucket
+    rewrite behind `merge` and `compact` (`overwrite`, the jobspec upserts
+    and `MinHashIndex` ingests included) and the `similarity` joins.
     AQE's per-stage materialize-and-replan adds latency on every exchange
     and can never improve such a plan. Constant per-commit overhead is the
     part of the cost model that does NOT amortize at scale, so it is the
@@ -157,10 +160,9 @@ class SnapshotTable:
         """
         try:
             with open(self._pointer) as f:
-                ptr = int(f.read().strip())
+                v = int(f.read().strip())
         except FileNotFoundError:
-            ptr = 0
-        v = ptr
+            v = 0
         while os.path.exists(self._manifest_path(v + 1)):
             v += 1
         return v
@@ -169,18 +171,10 @@ class SnapshotTable:
         return os.path.join(self.root, "manifests", f"v{version:08d}.json")
 
     def _read_manifest(self, version: int) -> dict:
-        if version == 0:
-            spec = _default_schema()
-            return {
-                "buckets": {},
-                "schema": spec,
-                "gen": 0,
-                "gen_specs": {"0": spec},
-                "file_gens": {},
-                "delta_files": [],
-            }
-        with open(self._manifest_path(version)) as f:
-            m = json.load(f)
+        m = {"buckets": {}}  # version 0: the empty table
+        if version:
+            with open(self._manifest_path(version)) as f:
+                m = json.load(f)
         m.setdefault("schema", _default_schema())
         m.setdefault("gen", 0)
         m.setdefault("gen_specs", {"0": m["schema"]})
@@ -206,12 +200,7 @@ class SnapshotTable:
         manifest["keys"] = list(self.keys)
         manifest["n_buckets"] = self.n_buckets
         manifest["bucket_cols"] = list(self.bucket_cols)
-        # Sticky until compaction: a manifest that was ever marked
-        # has_deltas without per-file tracking (legacy) keeps resolving at
-        # read time — conservative direction (extra window, never wrong).
-        manifest["has_deltas"] = bool(manifest.get("delta_files")) or bool(
-            manifest.get("has_deltas")
-        )
+        manifest["has_deltas"] = bool(manifest["delta_files"])
         path = self._manifest_path(version)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -258,33 +247,16 @@ class SnapshotTable:
             F.lit(self.n_buckets),
         ).cast("int")
 
-    def _empty(self, spark: SparkSession, schema_spec: list[dict]) -> DataFrame:
-        schema = _stored_schema(schema_spec).add("bucket", T.IntegerType())
-        return spark.createDataFrame([], schema)
-
-    def read_internal(
+    def _scan(
         self,
         spark: SparkSession,
+        m: dict,
         buckets: Sequence[int] | None = None,
-        version: int | None = None,
         spec: list[dict] | None = None,
     ) -> DataFrame:
-        """Snapshot incl. _lsn/bucket; bucket-pruned when asked.
-
-        Bucket pruning is manifest-level file pruning — pruned buckets' files
-        are never opened (equivalent of Iceberg partition pruning; reference
-        analog: HBase region-range scan, hdata-hbase/.../HBaseSplitter.java:57-133).
-        Rename lineage resolves via coalesce over the column's historical
-        physical names (newest first) — the parquet stand-in for column IDs.
-
-        `version` time-travels to an older snapshot (manifests are retained;
-        valid until `vacuum()` expires that snapshot's files, exactly
-        Iceberg's snapshot-expiry contract). `spec` projects it to another
-        logical schema than its own (default: the version's schema).
-        """
-        m = self._read_manifest(
-            self.current_version() if version is None else version
-        )
+        """Every stored row version in manifest `m`'s files of `buckets` (all
+        when None), projected to `spec` (default: `m`'s schema), with
+        `bucket`. No LWW resolution: `read_internal` and `_rewrite` add it."""
         spec = spec or m["schema"]
         files_by_bucket = m["buckets"]
         if buckets is not None:
@@ -292,7 +264,8 @@ class SnapshotTable:
             files_by_bucket = {b: fs for b, fs in files_by_bucket.items() if b in wanted}
         files = [f for fs in files_by_bucket.values() for f in fs]
         if not files:
-            return self._empty(spark, spec)
+            schema = _stored_schema(spec).add("bucket", T.IntegerType())
+            return spark.createDataFrame([], schema)
         # Files are grouped by schema GENERATION (bumped on every
         # evolve_schema — the parquet-fallback analog of Iceberg's per-file
         # schema id), and the scan is planned from the manifest alone, as
@@ -303,10 +276,10 @@ class SnapshotTable:
         # widen via cast); generations then union. This is what makes
         # add/rename/widen metadata-only: old files are never rewritten,
         # just re-projected — and type-widened generations can coexist.
-        # Writer invariant: every writer (merge, the apply core's stage
-        # write, compact) writes exactly its generation's declared schema —
-        # logical columns at their spec types, `_lsn` bigint, `_op` string.
-        # A file that does not fails the scan with a type mismatch.
+        # Writer invariant: every writer (`_rewrite`, the apply core's stage
+        # write) writes exactly its generation's declared schema — logical
+        # columns at their spec types, `_lsn` bigint, `_op` string. A file
+        # that does not fails the scan with a type mismatch.
         file_gens = m["file_gens"]
         by_gen: dict[int, list[str]] = {}
         for f in files:
@@ -331,14 +304,39 @@ class SnapshotTable:
         # `bucket` is directory-encoded at write time (partitionBy) and a pure
         # function of the keys, so recompute it instead of relying on
         # partition discovery over explicit file paths.
-        out = out.withColumn("bucket", self._bucket_expr())
+        return out.withColumn("bucket", self._bucket_expr())
+
+    def read_internal(
+        self,
+        spark: SparkSession,
+        buckets: Sequence[int] | None = None,
+        version: int | None = None,
+        spec: list[dict] | None = None,
+    ) -> DataFrame:
+        """Snapshot incl. _lsn/bucket; bucket-pruned when asked.
+
+        Bucket pruning is manifest-level file pruning — pruned buckets' files
+        are never opened (equivalent of Iceberg partition pruning; reference
+        analog: HBase region-range scan, hdata-hbase/.../HBaseSplitter.java:57-133).
+        Rename lineage resolves via coalesce over the column's historical
+        physical names (newest first) — the parquet stand-in for column IDs.
+
+        `version` time-travels to an older snapshot (manifests are retained;
+        valid until `vacuum()` expires that snapshot's files, exactly
+        Iceberg's snapshot-expiry contract). `spec` projects it to another
+        logical schema than its own (default: the version's schema).
+        """
+        m = self._read_manifest(
+            self.current_version() if version is None else version
+        )
+        out = self._scan(spark, m, buckets, spec)
         if m.get("has_deltas"):
             # Merge-on-read resolution: fast-append commits leave multiple
             # versions of a key across base + delta files; the highest-LSN
             # row wins at read time (row_number, not a semi join — re-applied
             # epochs can duplicate an exact (key, lsn) row and exactly one
             # copy must survive). This is the MOR read-amplification trade:
-            # reads pay one keyed shuffle until `compact()` folds the deltas.
+            # reads pay one keyed shuffle until `_rewrite` folds the deltas.
             out = lww_latest_window(out, keys=self.keys, order_col="_lsn")
         return out
 
@@ -422,27 +420,25 @@ class SnapshotTable:
         """MERGE batch into the table; returns commit stats.
 
         `batch` columns: logical table columns + `op` ('insert' | 'update' |
-        'delete') + `lsn`. Merge LWW-dedups the batch per key first.
-
-        Resolution is a single shuffle-hash FULL OUTER join between the
-        stored rows (unique per key by construction) and the batch winners
-        (unique per key): the incoming row wins iff its LSN is strictly
-        higher than the stored one — equal LSN means the same event, already
-        applied, so replays are no-ops. This is exactly the `MERGE INTO ...
-        WHEN MATCHED AND s.lsn > t.lsn` plan Iceberg would produce; with
-        storage-partitioned join both sides would not even shuffle (both are
-        bucketed by key — noted for the Iceberg sink).
+        'delete') + `lsn`. The buckets the batch touches are rewritten with
+        it (`_rewrite`): per key the highest LSN wins and, at equal LSN, the
+        stored row — equal LSN means the same event, already applied, so
+        replays are no-ops. This is the `MERGE INTO ... WHEN MATCHED AND
+        s.lsn > t.lsn` that Iceberg would run as a copy-on-write rewrite of
+        the touched file groups.
         """
         version = self.current_version()
         manifest = self._read_manifest(version)
         spec = manifest["schema"]
-        logical = [c["name"] for c in spec]
-
-        # Write exactly the generation's declared schema (read_internal
-        # scans with it): every logical column at its spec type, `lsn` as
-        # bigint. Batches missing logical columns (e.g. hand-built test
-        # batches without derived/evolved columns) get typed nulls. Casting
-        # before bucketing also hashes keys at their stored types.
+        names = [c["name"] for c in spec]
+        if missing := [k for k in self.keys if k not in names]:
+            raise ValueError(
+                f"key columns {missing} are not in the table schema {names}; "
+                "declare them with evolve_schema"
+            )
+        # Write exactly the generation's declared schema (`_scan` reads with
+        # it): logical columns at their spec types (typed nulls where the
+        # batch lacks one), `lsn` bigint; keys then hash at stored types.
         batch = batch.withColumns(
             {
                 c["name"]: (
@@ -451,127 +447,98 @@ class SnapshotTable:
                 for c in spec
             }
             | {"lsn": F.col("lsn").cast("bigint")}
-        )
-
-        # Window variant, NOT the semi-join plan: callers (full loads,
-        # jobspec upserts) may carry TIED lsn values — e.g. overwrite()
-        # stamps every row lsn=0 — and a semi join on the max lsn keeps
-        # every tied row, breaking the table's one-row-per-key invariant.
-        # row_number keeps exactly one.
-        batch = lww_latest_window(batch, self.keys, "lsn")
-        batch = batch.withColumn("bucket", self._bucket_expr())
-        # Affected buckets: tiny collect (<= n_buckets ints).
-        affected = sorted(
-            r["bucket"] for r in batch.select("bucket").distinct().collect()
-        )
-        if not affected:
-            self._commit(version + 1, manifest)
-            return {"version": version + 1, "applied_buckets": 0, "buckets": []}
-
-        incoming = batch.select(*logical, "lsn", "op", "bucket")
-        has_stored = any(
-            manifest["buckets"].get(str(b)) for b in affected
-        )
-        # Deletes persist as TOMBSTONE rows (_op='d') rather than row
-        # absence: replaying an arbitrary old epoch can then never resurrect
-        # a deleted key — the tombstone's higher LSN wins. (Compacted-topic /
-        # Iceberg-delete-file semantics; expired by `compact()`.)
-        if has_stored:
-            stored = self.read_internal(spark, buckets=affected).alias("t")
-            s = incoming.alias("s")
-            cond = None
-            for k in self.keys:
-                eq = F.col(f"t.{k}") == F.col(f"s.{k}")
-                cond = eq if cond is None else cond & eq
-            j = stored.join(s.hint("shuffle_hash"), cond, "full_outer")
-            # Incoming wins iff STRICTLY newer; equal LSN == same event,
-            # already applied -> stored row wins (idempotent replays).
-            take_s = F.col("s.lsn").isNotNull() & (
-                F.col("t._lsn").isNull() | (F.col("s.lsn") > F.col("t._lsn"))
-            )
-            payload = [c for c in logical if c not in self.keys]
-            survivors = j.select(
-                *[
-                    F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k)
-                    for k in self.keys
-                ],
-                *[
-                    F.when(take_s, F.col(f"s.{c}"))
-                    .otherwise(F.col(f"t.{c}"))
-                    .alias(c)
-                    for c in payload
-                ],
-                F.when(take_s, F.col("s.lsn"))
-                .otherwise(F.col("t._lsn"))
-                .alias("_lsn"),
-                F.when(
-                    take_s,
-                    F.when(F.col("s.op") == "delete", F.lit("d")).otherwise(
-                        F.lit("u")
-                    ),
-                )
-                .otherwise(F.col("t._op"))
-                .alias("_op"),
-                F.coalesce(F.col("s.bucket"), F.col("t.bucket")).alias("bucket"),
-            ).select(*logical, "_lsn", "_op", "bucket")
-        else:
-            # Empty-target fast path (initial load / fresh buckets).
-            survivors = incoming.select(
-                *logical,
-                F.col("lsn").alias("_lsn"),
-                F.when(F.col("op") == "delete", F.lit("d"))
-                .otherwise(F.lit("u"))
-                .alias("_op"),
-                "bucket",
-            )
-
-        # Copy-on-write: rewrite ONLY affected buckets as a new file set.
-        out_rel = os.path.join("data", f"v{version + 1:08d}-{uuid.uuid4().hex[:8]}")
-        out_abs = os.path.join(self.root, out_rel)
+        ).withColumn("bucket", self._bucket_expr())
         with _no_aqe(spark):
-            (
-                # one task per affected bucket: write parallelism tracks the
-                # merge width, and each bucket lands as a single file
-                survivors.repartition(len(affected), F.col("bucket"))
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(out_abs)
+            # Touched buckets: tiny collect (<= n_buckets ints).
+            touched = sorted(
+                r["bucket"] for r in batch.select("bucket").distinct().collect()
             )
-
-        new_buckets = dict(manifest["buckets"])
-        file_gens = dict(manifest["file_gens"])
-        delta_files = set(manifest["delta_files"])
-        gen = int(manifest["gen"])
-        written = 0
-        for b in affected:
-            for old in new_buckets.get(str(b), []):
-                file_gens.pop(old, None)
-                delta_files.discard(old)
-            bdir = os.path.join(out_abs, f"bucket={b}")
-            if os.path.isdir(bdir):
-                fs = [
-                    os.path.join(out_rel, f"bucket={b}", fn)
-                    for fn in sorted(os.listdir(bdir))
-                    if fn.endswith(".parquet")
-                ]
-            else:
-                fs = []  # bucket fully deleted
-            new_buckets[str(b)] = fs
-            for f in fs:
-                file_gens[f] = gen
-            written += len(fs)
-        manifest.update(
-            buckets=new_buckets,
-            file_gens=file_gens,
-            schema=spec,
-            delta_files=sorted(delta_files),
-        )
+        if touched:
+            manifest = self._rewrite(spark, manifest, touched, incoming=batch)
         self._commit(version + 1, manifest)
         return {
-            "version": version + 1,
-            "buckets": affected,
-            "applied_buckets": len(affected),
-            "files_written": written,
+            "version": version + 1, "buckets": touched, "applied_buckets": len(touched)
+        }
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        manifest: dict,
+        buckets: Sequence[int],
+        incoming: DataFrame | None = None,
+        expire_below: int | None = None,
+    ) -> dict:
+        """Copy-on-write rewrite of `buckets`, shared by `merge` and
+        `compact`; returns the manifest to commit.
+
+        Scans the buckets' stored files, unions in the `incoming` batch
+        (logical columns + `lsn`, `op`, `bucket`), keeps one row per key —
+        the highest `_lsn`, stored rows winning ties (the strict `s.lsn >
+        t._lsn` rule) — drops tombstones below `expire_below`, and writes
+        one file per bucket. The returned manifest swaps those buckets'
+        files in `buckets`, `file_gens` and `delta_files`, and keeps only
+        the `gen_specs` its files still reference.
+        """
+        names = [c["name"] for c in manifest["schema"]]
+        parts = []
+        if any(manifest["buckets"].get(str(b)) for b in buckets):
+            stored = self._scan(spark, manifest, buckets)
+            parts.append(stored.withColumn("_in", F.lit(0)))
+        if incoming is not None:
+            # A delete persists as a TOMBSTONE row (_op='d'), see the
+            # module docstring.
+            parts.append(
+                incoming.select(
+                    *names,
+                    F.col("lsn").alias("_lsn"),
+                    F.when(F.col("op") == "delete", F.lit("d"))
+                    .otherwise(F.lit("u"))
+                    .alias("_op"),
+                    "bucket",
+                    F.lit(1).alias("_in"),
+                )
+            )
+        rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        # One exchange: one task per bucket (each bucket lands as a single
+        # file), and the window's (bucket, *keys) clustering is met by it —
+        # `bucket` is a function of the keys, so this is the per-key window.
+        out = lww_latest_window(
+            rows.repartition(len(buckets), F.col("bucket")),
+            keys=["bucket", *self.keys], order_col="_lsn", tie_col="_in",
+        )
+        if expire_below is not None:
+            out = out.filter(
+                (F.col("_op") != "d") | (F.col("_lsn") >= F.lit(expire_below))
+            )
+        version = manifest.get("version", 0) + 1
+        out_rel = os.path.join("data", f"v{version:08d}-{uuid.uuid4().hex[:8]}")
+        out_abs = os.path.join(self.root, out_rel)
+        with _no_aqe(spark):
+            out.drop("_in").write.partitionBy("bucket").mode("overwrite").parquet(
+                out_abs
+            )
+        written = list_bucket_files(out_abs, out_rel)
+
+        rewritten = {str(b) for b in buckets}
+        old = {f for b in rewritten for f in manifest["buckets"].get(b, [])}
+        new_buckets = {
+            b: fs for b, fs in manifest["buckets"].items() if b not in rewritten
+        } | {str(b): fs for b, fs in written.items()}
+        gen = int(manifest["gen"])
+        file_gens = {
+            f: g for f, g in manifest["file_gens"].items() if f not in old
+        } | {f: gen for fs in written.values() for f in fs}
+        live_gens = {str(gen)} | {
+            str(file_gens.get(f, 0)) for fs in new_buckets.values() for f in fs
+        }
+        return {
+            **manifest,
+            "buckets": new_buckets,
+            "file_gens": file_gens,
+            "delta_files": [f for f in manifest["delta_files"] if f not in old],
+            "gen_specs": {
+                g: s for g, s in manifest["gen_specs"].items() if g in live_gens
+            },
         }
 
     def register_deltas(self, files_by_bucket: dict[int, list[str]]) -> dict:
@@ -579,40 +546,31 @@ class SnapshotTable:
         files as part of their buckets — a METADATA-ONLY snapshot commit, no
         Spark job, no read of stored data.
 
-        This is Iceberg's fast-append / Hudi's MOR ingest path: the replay
-        loop writes one epoch-and-bucket-partitioned file set for a whole
-        run, then commits each epoch as a manifest append in strict epoch
-        order (milliseconds each, driver-side). Per-epoch commit cost becomes
-        O(1) in table size — the term that does NOT amortize at 10^10 events
-        is gone. Readers resolve key versions by stored LSN (read_internal);
-        `compact()` folds deltas back to one row per key.
+        This is Iceberg's fast-append / Hudi's MOR ingest path: the apply
+        core writes one epoch-and-bucket-partitioned file set per run, then
+        commits each epoch as a manifest append (milliseconds, driver-side),
+        so per-epoch commit cost is O(1) in table size. Readers resolve key
+        versions by stored LSN (read_internal); `_rewrite` (`compact`, or a
+        `merge` touching the bucket) folds deltas back to one row per key.
 
         `files_by_bucket`: {bucket: [paths relative to table root]} — files
         must already carry the logical columns + `_lsn` + `_op`.
         """
         version = self.current_version()
-        manifest = self._read_manifest(version)
-        new_buckets = dict(manifest["buckets"])
-        file_gens = dict(manifest["file_gens"])
-        gen = int(manifest["gen"])
-        delta_files = list(manifest["delta_files"])
-        n_files = 0
-        for b, fs in files_by_bucket.items():
-            if not fs:
-                continue
-            new_buckets[str(b)] = list(new_buckets.get(str(b), [])) + list(fs)
-            for f in fs:
-                file_gens[f] = gen
-            delta_files.extend(fs)
-            n_files += len(fs)
-        manifest.update(
-            buckets=new_buckets, file_gens=file_gens, delta_files=delta_files
+        m = self._read_manifest(version)
+        added = {str(b): list(fs) for b, fs in files_by_bucket.items() if fs}
+        files = [f for fs in added.values() for f in fs]
+        m.update(
+            buckets=m["buckets"]
+            | {b: m["buckets"].get(b, []) + fs for b, fs in added.items()},
+            file_gens=m["file_gens"] | dict.fromkeys(files, int(m["gen"])),
+            delta_files=m["delta_files"] + files,
         )
-        self._commit(version + 1, manifest)
+        self._commit(version + 1, m)
         return {
             "version": version + 1,
             "applied_buckets": len(files_by_bucket),
-            "files_registered": n_files,
+            "files_registered": len(files),
         }
 
     def delta_file_count(self) -> int:
@@ -652,6 +610,8 @@ class SnapshotTable:
             # registry persisted but the table commit didn't land); a no-op
             # re-apply must not churn versions or generations.
             return version
+        for c in new_spec:
+            _parse_type(c["type"])  # fail here, not on every later scan
         manifest["schema"] = new_spec
         gen = int(manifest["gen"]) + 1
         manifest["gen"] = gen
@@ -664,7 +624,7 @@ class SnapshotTable:
     def compact(
         self, spark: SparkSession, expire_tombstones_below_lsn: int | None = None
     ) -> dict:
-        """Rewrite the whole table: drop expired tombstones, 1 file/bucket.
+        """Rewrite the whole table: fold deltas, expire tombstones, 1 file/bucket.
 
         Only safe when no future replay can carry an LSN below the expiry
         watermark (i.e. watermark <= ledger's lowest uncommitted LSN) —
@@ -673,41 +633,13 @@ class SnapshotTable:
         """
         version = self.current_version()
         manifest = self._read_manifest(version)
-        cur = self.read_internal(spark)
-        if expire_tombstones_below_lsn is not None:
-            cur = cur.filter(
-                (F.col("_op") != "d")
-                | (F.col("_lsn") >= F.lit(expire_tombstones_below_lsn))
+        buckets = sorted(int(b) for b, fs in manifest["buckets"].items() if fs)
+        if buckets:
+            manifest = self._rewrite(
+                spark, manifest, buckets, expire_below=expire_tombstones_below_lsn
             )
-        out_rel = os.path.join("data", f"c{version + 1:08d}-{uuid.uuid4().hex[:8]}")
-        out_abs = os.path.join(self.root, out_rel)
-        (
-            cur.repartition(self.n_buckets, F.col("bucket"))
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(out_abs)
-        )
-        new_buckets = {
-            str(b): fs for b, fs in list_bucket_files(out_abs, out_rel).items()
-        }
-        # Post-compaction all live files share one physical schema again
-        # (current generation) and all key versions are folded (MOR deltas
-        # resolved by read_internal during the rewrite).
-        gen = int(manifest["gen"])
-        self._commit(
-            version + 1,
-            {
-                "buckets": new_buckets,
-                "schema": manifest["schema"],
-                "gen": gen,
-                "gen_specs": {str(gen): manifest["schema"]},
-                "file_gens": {
-                    f: gen for fs in new_buckets.values() for f in fs
-                },
-                "delta_files": [],
-            },
-        )
-        return {"version": version + 1, "buckets": len(new_buckets)}
+        self._commit(version + 1, manifest)
+        return {"version": version + 1, "buckets": len(manifest["buckets"])}
 
     def vacuum(self) -> int:
         """Delete data files unreferenced by the current manifest."""
@@ -736,17 +668,9 @@ def _project(raw: DataFrame, spec: list[dict]) -> DataFrame:
     present = set(raw.columns)
     cols = []
     for c in spec:
-        sources = [s for s in c["sources"] if s in present]
-        if not sources:
-            cols.append(F.lit(None).cast(c["type"]).alias(c["name"]))
-        elif len(sources) == 1:
-            cols.append(F.col(sources[0]).cast(c["type"]).alias(c["name"]))
-        else:
-            cols.append(
-                F.coalesce(*[F.col(s) for s in sources])
-                .cast(c["type"])
-                .alias(c["name"])
-            )
+        sources = [F.col(s) for s in c["sources"] if s in present] or [F.lit(None)]
+        value = F.coalesce(*sources) if len(sources) > 1 else sources[0]
+        cols.append(value.cast(c["type"]).alias(c["name"]))
     return raw.select(*cols, F.col("_lsn"), F.col("_op"))
 
 
@@ -754,10 +678,9 @@ def list_bucket_files(abs_dir: str, rel_dir: str) -> dict[int, list[str]]:
     """{bucket: sorted relative parquet paths} for a `bucket=N`-partitioned
     parquet dataset staged at `abs_dir` (= <table.root>/<rel_dir>).
 
-    The one listing used by every stager of the delta layout — the apply
-    core (per epoch) and compaction — so
-    the physical layout contract (dir naming, file suffix) lives in exactly
-    one place.
+    The one listing used by every writer of the bucket layout — the apply
+    core's stage write and `_rewrite` — so the physical layout contract
+    (dir naming, file suffix) lives in exactly one place.
     """
     out: dict[int, list[str]] = {}
     for entry in sorted(os.listdir(abs_dir)):
@@ -779,12 +702,9 @@ def delta_footer_stats(
     the PARQUET FOOTERS — zero Spark jobs. Used for just-staged delta files
     and, by `max_stored_lsn`, for a whole snapshot.
 
-    The apply core needs per-bucket counts + max LSN for each epoch's
-    metrics/ledger row; launching a read job over files the same call just
-    wrote is a fixed per-run cost that caps WAL-tail throughput. Row
-    counts and int64 min/max column statistics are already in each file's
-    footer, so the driver reads them directly (the files are local/lake
-    metadata reads, one per staged file — bounded by n_buckets per trigger).
+    A read job over files the same call just wrote would be a fixed
+    per-run cost capping WAL-tail throughput; row counts and int64 min/max
+    statistics are already in each footer (one metadata read per file).
     Falls back to a pyarrow single-column read (still no Spark job) for any
     row group whose writer skipped statistics.
     """
@@ -795,12 +715,10 @@ def delta_footer_stats(
         n = 0
         mx: int | None = None
         for rel in rels:
-            path = os.path.join(root, rel)
-            pf = pq.ParquetFile(path)
+            pf = pq.ParquetFile(os.path.join(root, rel))
             md = pf.metadata
             n += md.num_rows
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            idx = names.index(lsn_col)
+            idx = md.schema.names.index(lsn_col)
             need_fallback = False
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(idx).statistics

@@ -214,6 +214,45 @@ def test_snapshot_upsert_without_lsn_column_updates_on_rerun(spark, tmp_path):
     assert table.max_stored_lsn() == 51
 
 
+def test_snapshot_upsert_keyed_on_a_column_outside_the_default_schema(
+    spark, tmp_path
+):
+    """A new table takes the upserted frame's columns as its schema, so a key
+    outside the default (repo, path, ...) spec is stored and re-upserts
+    update it; a merge whose key the schema lacks raises instead of writing
+    files without it."""
+    from hdata_spark.sinks.snapshot import SnapshotTable
+
+    tdir = str(tmp_path / "snap")
+
+    def job(rows, name):
+        src = str(tmp_path / f"{name}.parquet")
+        schema = "id bigint, name string, lsn bigint"
+        spark.createDataFrame(rows, schema).write.parquet(src)
+        run_job(spark, {
+            "reader": {"name": "parquet", "path": src},
+            "writer": {"name": "snapshot", "path": tdir, "upsert.columns": "id"},
+        })
+        return {r["id"]: r["name"] for r in SnapshotTable(tdir).read(spark).collect()}
+
+    assert job([(1, "a", 1), (2, "b", 2)], "s0") == {1: "a", 2: "b"}
+    assert job([(2, "b2", 3)], "s1") == {1: "a", 2: "b2"}
+
+    other = SnapshotTable(str(tmp_path / "other"), keys=("id",))
+    with pytest.raises(ValueError, match="id"):
+        other.merge(spark, spark.createDataFrame(
+            [(1, "a", 1, "insert")], "id bigint, name string, lsn bigint, op string"
+        ))
+    # A column type the table cannot store fails the first write, before
+    # any commit, instead of leaving a table no scan can read.
+    with pytest.raises(ValueError, match="unsupported type"):
+        other.evolve_schema([
+            {"name": "id", "type": "bigint", "sources": ["id"]},
+            {"name": "blob", "type": "binary", "sources": ["blob"]},
+        ])
+    assert other.current_version() == 0
+
+
 def test_excel_roundtrip(spark, tmp_path):
     pytest.importorskip("openpyxl")
     df = spark.createDataFrame([("a", "1"), ("b", "2")], "k string, v string")

@@ -1,10 +1,13 @@
 """Snapshot scans planned from the manifest: every writer writes its
-generation's declared schema, and building a scan launches no Spark job."""
+generation's declared schema, and building a scan launches no Spark job.
+The bucket rewrite behind `merge` and `compact`: folding a delta-bearing
+bucket, equal-LSN ties, and the Spark jobs per call."""
 
 from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -40,6 +43,19 @@ def _sc(lsn, epoch, kind, column, arg):
 def _ev(lsn, epoch, op, path, commit, content, stars):
     return (lsn, epoch, op, "o/r", path, commit, "python", content, stars,
             None, None, None)
+
+
+@contextmanager
+def _job_group(spark):
+    """Yields a callable counting the Spark jobs run so far in the block."""
+    sc = spark.sparkContext
+    group = f"snapshot-scan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def _rows(df):
@@ -123,18 +139,97 @@ def test_building_snapshot_frames_runs_no_spark_job(spark, tmp_path):
     per_gen = pd.Series(list(m["file_gens"].values())).value_counts()
     assert sorted(per_gen.index) == [0, 1, 2] and per_gen.min() > 32
 
-    sc = spark.sparkContext
-    group = f"snapshot-scan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "build snapshot frames")
-    try:
+    with _job_group(spark) as jobs:
         current = table.read_internal(spark)
         table.read_internal(spark, version=v_base)
         feed = table.changes_between(spark, v_base)
-        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert jobs() == 0
         # The group does see jobs: running an action on the frames records one.
         assert current.filter("_lsn >= 600").count() == 128
         assert feed.filter("change_type = 'update'").count() == 256
-        assert sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        assert jobs()
+
+
+def _base(spark, paths):
+    return spark.createDataFrame(pd.DataFrame({
+        "repo": "o/r", "path": paths, "commit": "c0", "lang": "python",
+        "content": "v0",
+    }))
+
+
+def _batch(spark, rows):
+    """(path, content, lsn) update rows as a merge batch."""
+    return spark.createDataFrame(pd.DataFrame({
+        "repo": "o/r", "path": [r[0] for r in rows], "commit": "c9",
+        "lang": "python", "content": [r[1] for r in rows],
+        "lsn": [r[2] for r in rows], "op": "update",
+    }))
+
+
+def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
+    """A merge into a bucket holding fast-append deltas rewrites that bucket
+    alone: its delta files leave `delta_files`, other buckets' deltas stay,
+    reads equal the oracle, and an equal-LSN row with another payload
+    leaves the stored row. Folding the remaining delta buckets the same
+    way clears `has_deltas`."""
+    table = SnapshotTable(str(tmp_path / "t"), n_buckets=8)
+    paths = [f"f{i:02d}.py" for i in range(40)]
+    table.overwrite(spark, _base(spark, paths))
+    _replay(spark, tmp_path, table, [
+        _ev(10 + i, 0, "update", p, i, "v1", None) for i, p in enumerate(paths[:24])
+    ])
+    oracle = {p: ("v1" if i < 24 else "v0") for i, p in enumerate(paths)}
+    lsn = {p: (10 + i if i < 24 else 0) for i, p in enumerate(paths)}
+    bucket_of = {
+        r["path"]: r["bucket"] for r in table.read_internal(spark).collect()
+    }
+    m = table._read_manifest(table.current_version())
+    delta_buckets = sorted(
+        int(b) for b, fs in m["buckets"].items() if set(fs) & set(m["delta_files"])
+    )
+    assert len(delta_buckets) > 2 and m["has_deltas"]
+
+    updated = [p for p in paths if lsn[p] > 0]
+    b = max(delta_buckets, key=lambda d: sum(bucket_of[p] == d for p in updated))
+    in_b = [p for p in paths if bucket_of[p] == b and lsn[p] > 0]
+    newer, tied = in_b[0], in_b[-1]
+    assert newer != tied
+    stats = table.merge(spark, _batch(spark, [
+        (newer, "v2", 100), (tied, "tie", lsn[tied]),
+    ]))
+    oracle[newer] = "v2"
+    assert stats["buckets"] == [b]
+    m2 = table._read_manifest(table.current_version())
+    assert set(m2["delta_files"]) == set(m["delta_files"]) - set(m["buckets"][str(b)])
+    assert m2["buckets"][str(b)] != m["buckets"][str(b)]
+    assert len(m2["buckets"][str(b)]) == 1
+    for other in set(m["buckets"]) - {str(b)}:
+        assert m2["buckets"][other] == m["buckets"][other]
+    got = {r["path"]: r["content"] for r in table.read(spark).collect()}
+    assert got == oracle
+    assert m2["has_deltas"]
+
+    rest = [
+        (p, oracle[p], lsn[p]) for p in paths
+        if bucket_of[p] in set(delta_buckets) - {b} and lsn[p] > 0
+    ]
+    table.merge(spark, _batch(spark, rest))  # equal LSNs: payloads unchanged
+    m3 = table._read_manifest(table.current_version())
+    assert m3["delta_files"] == [] and not m3["has_deltas"]
+    assert {r["path"]: r["content"] for r in table.read(spark).collect()} == oracle
+
+
+def test_rewrite_runs_two_spark_jobs(spark, tmp_path):
+    """`overwrite` into an empty table and `merge` into populated buckets
+    each run at most 2 Spark jobs: the touched-bucket collect and the
+    one-exchange bucket rewrite."""
+    table = SnapshotTable(str(tmp_path / "t"), n_buckets=64)
+    paths = [f"f{i:03d}.py" for i in range(600)]
+    with _job_group(spark) as jobs:
+        table.overwrite(spark, _base(spark, paths))
+        assert jobs() <= 2
+    with _job_group(spark) as jobs:
+        table.merge(spark, _batch(spark, [(p, "v1", 1) for p in paths[:30]]))
+        assert jobs() <= 2
+    got = {r["path"]: r["content"] for r in table.read(spark).collect()}
+    assert got == {p: ("v1" if i < 30 else "v0") for i, p in enumerate(paths)}
