@@ -13,6 +13,7 @@ row-at-a-time Python UDF anywhere in this package; tests audit that.
 from __future__ import annotations
 
 import hashlib
+import string
 
 import pandas as pd
 from pyspark.sql import Column
@@ -33,9 +34,17 @@ _LANG_MAP: dict[str, str] = {
 def normalize_lang_col(col: Column) -> Column:
     """Canonicalize a lang label with a literal CASE map (JVM, codegen).
 
-    Unknown labels pass through lowercased; null stays null.
+    Unknown labels pass through lowercased; null stays null. An ASCII label
+    (as many bytes as characters) is lowercased by `translate(A-Z, a-z)`,
+    which on ASCII text is the whole case mapping; only other labels go
+    through `lower()`, whose first call in a JVM pays ~1.3 s to initialize
+    ICU case mapping.
     """
-    low = F.lower(F.trim(col))
+    trimmed = F.trim(col)
+    low = F.when(
+        F.octet_length(trimmed) == F.length(trimmed),
+        F.translate(trimmed, string.ascii_uppercase, string.ascii_lowercase),
+    ).otherwise(F.lower(trimmed))
     case = None
     for variant, canonical in sorted(_LANG_MAP.items()):
         cond = low == F.lit(variant)

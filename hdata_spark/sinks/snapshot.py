@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 from collections.abc import Sequence
@@ -88,6 +89,15 @@ def _no_aqe(spark: SparkSession):
     part to strip.
     """
     return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
+
+
+def write_tasks(spark: SparkSession, groups: int) -> int:
+    """Tasks for a write of `groups` one-file output groups: one per group,
+    at most `spark.sql.shuffle.partitions`, for an explicit repartition
+    count. AQE coalesces a count-less repartition of a small batch into ONE
+    task that writes every file in turn, but never an explicit count; and
+    tasks past the core count only add per-task overhead."""
+    return min(groups, int(spark.conf.get("spark.sql.shuffle.partitions")))
 
 
 def _default_schema() -> list[dict]:
@@ -448,13 +458,21 @@ class SnapshotTable:
             }
             | {"lsn": F.col("lsn").cast("bigint")}
         ).withColumn("bucket", self._bucket_expr())
-        with _no_aqe(spark):
-            # Touched buckets: tiny collect (<= n_buckets ints).
-            touched = sorted(
-                r["bucket"] for r in batch.select("bucket").distinct().collect()
+        if any(manifest["buckets"].values()):
+            with _no_aqe(spark):
+                # Touched buckets: tiny collect (<= n_buckets ints).
+                touched = sorted(
+                    r["bucket"] for r in batch.select("bucket").distinct().collect()
+                )
+            if touched:
+                manifest = self._rewrite(spark, manifest, touched, incoming=batch)
+        else:
+            # Nothing stored to carry over: rewrite every bucket from the
+            # batch alone (one job); the touched buckets are those written.
+            manifest = self._rewrite(
+                spark, manifest, range(self.n_buckets), incoming=batch
             )
-        if touched:
-            manifest = self._rewrite(spark, manifest, touched, incoming=batch)
+            touched = sorted(int(b) for b, fs in manifest["buckets"].items() if fs)
         self._commit(version + 1, manifest)
         return {
             "version": version + 1, "buckets": touched, "applied_buckets": len(touched)
@@ -499,11 +517,12 @@ class SnapshotTable:
                 )
             )
         rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        # One exchange: one task per bucket (each bucket lands as a single
-        # file), and the window's (bucket, *keys) clustering is met by it —
-        # `bucket` is a function of the keys, so this is the per-key window.
+        # One exchange, hashed on `bucket`: each bucket lands wholly in one
+        # task (so as a single file), and the window's (bucket, *keys)
+        # clustering is met by it — `bucket` is a function of the keys, so
+        # this is the per-key window.
         out = lww_latest_window(
-            rows.repartition(len(buckets), F.col("bucket")),
+            rows.repartition(write_tasks(spark, len(buckets)), F.col("bucket")),
             keys=["bucket", *self.keys], order_col="_lsn", tie_col="_in",
         )
         if expire_below is not None:
@@ -763,6 +782,10 @@ def _stored_schema(spec: list[dict]) -> T.StructType:
 
 
 def _parse_type(type_str: str) -> T.DataType:
+    """The Spark type of a spec's `type` name: the atomic types and
+    `decimal(p,s)`. Nested types (arrays, maps, structs) raise."""
+    if m := re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", type_str):
+        return T.DecimalType(int(m[1]), int(m[2]))
     mapping = {
         "string": T.StringType(),
         "int": T.IntegerType(),
@@ -771,6 +794,11 @@ def _parse_type(type_str: str) -> T.DataType:
         "long": T.LongType(),
         "double": T.DoubleType(),
         "float": T.FloatType(),
+        "smallint": T.ShortType(),
+        "short": T.ShortType(),
+        "tinyint": T.ByteType(),
+        "byte": T.ByteType(),
+        "binary": T.BinaryType(),
         "boolean": T.BooleanType(),
         "timestamp": T.TimestampType(),
         "date": T.DateType(),

@@ -72,16 +72,17 @@ def replay(
     if bounds["min_epoch"] is None:
         return {"epochs_applied": 0, "epochs_skipped": 0}
 
-    # Upfront profile: which epochs contain schema_change events (tiny job).
-    sc_epochs: set[int] = set()
+    # Upfront profile (one tiny job, only when the log holds any): the
+    # schema_change events themselves. Each run is handed its own, so the
+    # core never looks for them with a job of its own.
+    sc_rows = []
     if bounds["max_sc_epoch"] is not None:
-        sc_epochs = {
-            int(r["epoch"])
-            for r in events.filter(F.col("op") == "schema_change")
-            .select("epoch")
-            .distinct()
+        sc_rows = (
+            events.filter(F.col("op") == "schema_change")
+            .select("lsn", "epoch", "sc_kind", "sc_column", "sc_arg")
             .collect()
-        }
+        )
+    sc_epochs = {int(r["epoch"]) for r in sc_rows}
 
     todo = []
     skipped = 0
@@ -112,7 +113,7 @@ def replay(
         apply_epochs(
             spark, events.filter(F.col("epoch").between(run[0], run[-1])), run,
             table, ledger, metrics, registry, cfg,
-            maybe_schema_changes=bool(set(run) & sc_epochs),
+            [r for r in sc_rows if run[0] <= r["epoch"] <= run[-1]],
         )
     compacted = False
     if cfg.compact_at_end and todo:

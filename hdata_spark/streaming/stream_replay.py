@@ -16,7 +16,8 @@ One call of the core:
     schema_change events -> registry (LSN order) -> table manifest catch-up
     LWW winners per (epoch, key) -> transforms -> registry projection
     ONE (epoch, bucket)-partitioned stage write of the winners, carrying an
-        observed per-epoch fingerprint (no extra Spark job)
+        observed per-epoch fingerprint (no extra Spark job), on up to
+        shuffle.partitions tasks
     for each epoch, in order:
         per-bucket counts + max LSN from the staged files' parquet footers
         metadata-only manifest append of the epoch's files (fast-append)
@@ -36,7 +37,11 @@ generalization:
   static `start.offset`);
 - `maxFilesPerTrigger` is the `max.fetch.size` bound (micro-batch sizing /
   backpressure); `Trigger.AvailableNow` is the bounded-replay mode — drain
-  everything, checkpointing per batch, then stop.
+  everything, checkpointing per batch, then stop;
+- there is no drain-level profile of the log: each micro-batch reads its
+  schema_change events from its own files, named by the checkpoint's
+  source-log entry (`_batch_schema_changes`, pyarrow, no Spark job), so a
+  drain's only job outside its micro-batches is the WAL schema read.
 
 Exactly-once: Spark re-delivers an in-flight micro-batch after a crash with
 the SAME batch_id, and a resumed batch replay re-plans the epochs the
@@ -67,6 +72,7 @@ from hdata_spark.sinks.snapshot import (
     SnapshotTable,
     delta_footer_stats,
     list_bucket_files,
+    write_tasks,
 )
 from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
@@ -127,7 +133,7 @@ def apply_epochs(
     metrics: MetricsLog,
     registry: SchemaRegistry,
     cfg: ReplayConfig,
-    maybe_schema_changes: bool = True,
+    schema_changes: list | None = None,
 ) -> list[dict]:
     """Apply a run of uncommitted epochs: one scan, one stage write, one
     fast-append commit per epoch. Returns the epochs' ledger records.
@@ -141,26 +147,23 @@ def apply_epochs(
     records. Batch replay therefore gives each schema-change epoch a run of
     its own.
 
-    `maybe_schema_changes=False` (a planner that profiled the log and found
-    no schema_change event in these epochs) skips the schema-change
-    filter+collect job: on a schema-stable log it is a fixed cost paid every
-    run for an always-empty result.
+    `schema_changes` are the run's schema_change events (mappings with lsn,
+    sc_kind, sc_column, sc_arg) when the planner already knows them — `[]`
+    for a run without any — so no Spark job looks for them. `None` makes the
+    core collect them from `frame` itself (one job).
     """
-    applied = 0
-    if maybe_schema_changes:
-        changes = (
+    if schema_changes is None:
+        schema_changes = (
             frame.filter(F.col("op") == "schema_change")
             .select("lsn", "sc_kind", "sc_column", "sc_arg")
-            .orderBy("lsn")
             .collect()
         )
-        for ch in changes:
-            if registry.has_lsn(ch["lsn"]):
-                continue  # crash-resume re-delivery: already applied
-            registry.apply_change(
-                ch["sc_kind"], ch["sc_column"], ch["sc_arg"], ch["lsn"]
-            )
-            applied += 1
+    applied = 0
+    for ch in sorted(schema_changes, key=lambda c: c["lsn"]):
+        if registry.has_lsn(ch["lsn"]):
+            continue  # crash-resume re-delivery: already applied
+        registry.apply_change(ch["sc_kind"], ch["sc_column"], ch["sc_arg"], ch["lsn"])
+        applied += 1
     # Drive the table manifest from registry-vs-table drift, NOT from
     # `applied`: a crash between registry persist and the table commit
     # resumes with applied=0 but the manifest still behind. The registry may
@@ -212,9 +215,12 @@ def apply_epochs(
     )
     # repartition BY (epoch, bucket): each output group lands wholly in one
     # task, so the dynamic-partition write emits exactly one file per
-    # (epoch, bucket) and the per-task partition sort is over ~1 group.
+    # (epoch, bucket), on every core (`write_tasks`).
     (
-        staged.repartition(F.col("epoch"), F.col("bucket"))
+        staged.repartition(
+            write_tasks(spark, len(epochs) * table.n_buckets),
+            F.col("epoch"), F.col("bucket"),
+        )
         .observe(
             fingerprint,
             *[
@@ -283,7 +289,7 @@ def apply_change_batch(
     metrics: MetricsLog,
     registry: SchemaRegistry,
     cfg: ReplayConfig,
-    maybe_schema_changes: bool = True,
+    schema_changes: list | None = None,
 ) -> dict | None:
     """Apply ONE micro-batch as the run of one epoch, `batch_id`; then fold
     the deltas when the delta-file-count cadence says so. Returns the
@@ -292,7 +298,7 @@ def apply_change_batch(
         return None
     (record,) = apply_epochs(
         spark, batch.withColumn("epoch", F.lit(batch_id).cast("long")),
-        [batch_id], table, ledger, metrics, registry, cfg, maybe_schema_changes,
+        [batch_id], table, ledger, metrics, registry, cfg, schema_changes,
     )
     # Runs AFTER the ledger commit — compaction is read optimization, never
     # part of the batch's exactly-once window (a crash mid-compact leaves
@@ -328,38 +334,52 @@ def drain_available_now(
     return q
 
 
-def _norm_path(p: str) -> str:
-    p = unquote(p)
-    return p.split("://", 1)[-1] if "://" in p else p.removeprefix("file:")
+def _local_path(uri: str) -> str | None:
+    """The local filesystem path of a source-log `path` URI; None for a
+    remote one."""
+    p = unquote(uri)
+    if p.startswith("file:"):
+        return "/" + p.removeprefix("file:").lstrip("/")
+    return None if "://" in p else p
 
 
-def _batch_fully_profiled(
-    checkpoint_dir: str, batch_id: int, profiled_files: frozenset[str]
-) -> bool:
-    """True iff every file of micro-batch `batch_id` was in the profile.
+def _batch_schema_changes(checkpoint_dir: str, batch_id: int) -> list[dict] | None:
+    """Micro-batch `batch_id`'s schema_change events in LSN order (`[]` when
+    it has none), read with pyarrow from the batch's own files: no Spark job.
 
-    The batch's file set comes from the checkpoint's file-source log,
-    `<ckpt>/sources/0/<batchId>`, written by the source BEFORE foreachBatch
-    runs; every compaction interval (10 by default) the entry is
-    `<batchId>.compact` instead, listing every file up to that batch. A
-    missing, unreadable or malformed log answers False: the caller then
-    escalates to the full schema-change scan, the safe direction.
+    The batch's file set is its entry in the checkpoint's file-source log,
+    `<ckpt>/sources/0/<batchId>`, which the source writes BEFORE foreachBatch
+    runs, so a segment landing mid-drain is read like any other. Each file's
+    `op` column is read, and the sc columns only of files holding a change.
+    None (the core then collects the changes with one Spark job, the safe
+    direction) wherever the answer is not certain: a compaction batch
+    (`<batchId>.compact` lists every file so far, not the batch's own), a
+    missing, torn or malformed entry, a remote path, or a file pyarrow cannot
+    read.
     """
-    path = os.path.join(checkpoint_dir, "sources", "0", str(batch_id))
-    if not os.path.exists(path):
-        path += ".compact"
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     try:
-        with open(path) as f:
-            for line in f:
-                line = line.strip()
-                if not line.startswith("{"):
-                    continue  # version header
-                p = json.loads(line).get("path")
-                if p and _norm_path(p) not in profiled_files:
-                    return False
-        return True
-    except (OSError, ValueError):
-        return False
+        with open(os.path.join(checkpoint_dir, "sources", "0", str(batch_id))) as f:
+            header, *lines = f.read().splitlines()
+        paths = [_local_path(json.loads(ln)["path"]) for ln in lines if ln.strip()]
+        if not header.startswith("v") or not paths or None in paths:
+            return None
+        changes = []
+        for path in paths:
+            pf = pq.ParquetFile(path)
+            is_sc = pc.equal(pf.read(columns=["op"]).column("op"), "schema_change")
+            if pc.any(is_sc).as_py():
+                changes += (
+                    pf.read(columns=["lsn", "sc_kind", "sc_column", "sc_arg"])
+                    .filter(is_sc)
+                    .to_pylist()
+                )
+        return sorted(changes, key=lambda c: c["lsn"])
+    except (OSError, ValueError, KeyError, TypeError, pa.ArrowException):
+        return None
 
 
 def stream_replay(
@@ -373,7 +393,7 @@ def stream_replay(
     cfg: ReplayConfig | None = None,
     max_files_per_trigger: int = 4,
     timeout_sec: int = 600,
-    _post_profile_hook=None,
+    _pre_start_hook=None,
 ) -> dict:
     """Drain the event-log directory through Structured Streaming.
 
@@ -382,46 +402,24 @@ def stream_replay(
     files, then stops. Re-invoking with the same checkpoint resumes after
     the last committed trigger — new files only (the WAL-tail loop).
 
-    `_post_profile_hook` is test-only: invoked between the schema-change
-    profile and the stream start, it deterministically reproduces a
-    concurrent WAL writer landing a segment inside that window (the race
-    the per-batch coverage check below exists for).
+    `_pre_start_hook` is test-only: invoked between the WAL schema read and
+    the stream start, it lands a segment the way a concurrent WAL writer
+    would.
     """
     cfg = cfg or ReplayConfig()
-    log = spark.read.parquet(events_dir)
-    schema = log.schema
+    # The drain's one job outside its micro-batches: the stream reads every
+    # WAL file with this schema.
+    schema = spark.read.parquet(events_dir).schema
 
-    # Upfront profile (ONE tiny job per drain, the batch replayer's
-    # max_sc_epoch rule): does the log contain ANY schema-change event? If
-    # not, every micro-batch skips its schema-change filter+collect job — a
-    # fixed per-trigger cost on the (typical) schema-stable WAL tail.
-    #
-    # Soundness under a CONCURRENT WAL writer: the profile's batch read and
-    # the streaming query's AvailableNow snapshot are two separate file
-    # listings, so a segment landing between them would be drained without
-    # having been profiled. We therefore record exactly WHICH files the
-    # profile covered and, per micro-batch, escalate back to the full
-    # schema-change scan if the batch contains any file the profile never
-    # saw (`_batch_fully_profiled`: a driver-side JSON read, zero Spark
-    # jobs — micro-batch frames expose no inputFiles()).
-    maybe_sc = (
-        "op" in schema.fieldNames()
-        and log.filter(F.col("op") == "schema_change").limit(1).count() > 0
-    )
-    profiled_files = frozenset(_norm_path(p) for p in log.inputFiles())
-
-    if _post_profile_hook is not None:
-        _post_profile_hook()
+    if _pre_start_hook is not None:
+        _pre_start_hook()
 
     n_batches = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_maybe_sc = maybe_sc or not _batch_fully_profiled(
-            checkpoint_dir, int(batch_id), profiled_files
-        )
         apply_change_batch(
-            spark, batch_df, int(batch_id), table, ledger, metrics, registry,
-            cfg, maybe_schema_changes=batch_maybe_sc,
+            spark, batch_df, int(batch_id), table, ledger, metrics, registry, cfg,
+            _batch_schema_changes(checkpoint_dir, int(batch_id)),
         )
         n_batches["n"] += 1
 

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import pandas as pd
 import pytest
 
@@ -44,3 +47,36 @@ def assert_state_equal(actual: pd.DataFrame, expected: pd.DataFrame) -> None:
         f"final-state mismatch: {len(actual)} vs {len(expected)} rows;\n"
         f"actual head:\n{actual.head()}\nexpected head:\n{expected.head()}"
     )
+
+
+@contextmanager
+def _job_group(spark):
+    """Yields a callable counting the Spark jobs run so far in the block."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@contextmanager
+def _all_jobs(spark):
+    """Like `_job_group`, but counts every job submitted in the block from
+    any thread. A streaming query runs foreachBatch on its own thread under
+    its own job group, which the caller's job group does not reach."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = dag.numTotalJobs()
+    yield lambda: dag.numTotalJobs() - start
+
+
+def _last_job_tasks(spark) -> int:
+    """Tasks in the final stage of the latest Spark job (for a write job:
+    the tasks that wrote its files)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    job = tracker.getJobInfo(jsc.dagScheduler().numTotalJobs() - 1)
+    return tracker.getStageInfo(max(job.stageIds)).numTasks

@@ -248,9 +248,51 @@ def test_snapshot_upsert_keyed_on_a_column_outside_the_default_schema(
     with pytest.raises(ValueError, match="unsupported type"):
         other.evolve_schema([
             {"name": "id", "type": "bigint", "sources": ["id"]},
-            {"name": "blob", "type": "binary", "sources": ["blob"]},
+            {"name": "ids", "type": "array<int>", "sources": ["ids"]},
         ])
     assert other.current_version() == 0
+
+
+def test_snapshot_upsert_round_trips_decimal_and_binary_columns(spark, tmp_path):
+    """A jobspec snapshot upsert stores decimal, binary, smallint and tinyint
+    columns at their own types and reads them back; a re-upsert updates
+    them. Nested types still raise at `evolve_schema`, before any commit."""
+    from decimal import Decimal
+
+    from hdata_spark.sinks.snapshot import SnapshotTable
+
+    tdir = str(tmp_path / "snap")
+    schema = ("id bigint, price decimal(12,3), blob binary, qty smallint, "
+              "flag tinyint, lsn bigint")
+
+    def job(rows, name):
+        src = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, schema).write.parquet(src)
+        run_job(spark, {
+            "reader": {"name": "parquet", "path": src},
+            "writer": {"name": "snapshot", "path": tdir, "upsert.columns": "id"},
+        })
+        out = SnapshotTable(tdir).read(spark)
+        return out.schema.simpleString(), sorted(tuple(r) for r in out.collect())
+
+    row1 = (1, Decimal("12.345"), bytearray(b"\x00\xff"), 7, 1, 1)
+    row2 = (2, Decimal("-0.500"), bytearray(b"ab"), -3, -1, 2)
+    types, rows = job([row1, row2], "s0")
+    assert types == (
+        "struct<id:bigint,price:decimal(12,3),blob:binary,qty:smallint,flag:tinyint>"
+    )
+    assert rows == [row1[:5], row2[:5]]
+    row2b = (2, Decimal("99.999"), bytearray(b"cd"), 4, 0, 3)
+    assert job([row2b], "s1")[1] == [row1[:5], row2b[:5]]
+
+    table = SnapshotTable(tdir)
+    version = table.current_version()
+    for nested in ("array<int>", "map<string,int>"):
+        with pytest.raises(ValueError, match="unsupported type"):
+            table.evolve_schema(table.schema_spec() + [
+                {"name": "ids", "type": nested, "sources": ["ids"]},
+            ])
+    assert table.current_version() == version
 
 
 def test_excel_roundtrip(spark, tmp_path):

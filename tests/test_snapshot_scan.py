@@ -6,8 +6,6 @@ bucket, equal-LSN ties, and the Spark jobs per call."""
 from __future__ import annotations
 
 import os
-import uuid
-from contextlib import contextmanager
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -17,6 +15,8 @@ from hdata_spark.sinks.snapshot import SnapshotTable
 from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
 from hdata_spark.streaming.replay import ReplayConfig, replay
+
+from tests.conftest import _job_group, _last_job_tasks
 
 _EVENTS = (
     "lsn int, epoch int, op string, repo string, path string, commit bigint, "
@@ -43,19 +43,6 @@ def _sc(lsn, epoch, kind, column, arg):
 def _ev(lsn, epoch, op, path, commit, content, stars):
     return (lsn, epoch, op, "o/r", path, commit, "python", content, stars,
             None, None, None)
-
-
-@contextmanager
-def _job_group(spark):
-    """Yields a callable counting the Spark jobs run so far in the block."""
-    sc = spark.sparkContext
-    group = f"snapshot-scan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
 
 
 def _rows(df):
@@ -233,3 +220,28 @@ def test_rewrite_runs_two_spark_jobs(spark, tmp_path):
         assert jobs() <= 2
     got = {r["path"]: r["content"] for r in table.read(spark).collect()}
     assert got == {p: ("v1" if i < 30 else "v0") for i, p in enumerate(paths)}
+
+
+def test_first_overwrite_runs_one_spark_job(spark, tmp_path):
+    """With nothing stored, `merge` skips the touched-bucket collect: a first
+    `overwrite` is one Spark job (the bucket rewrite), still reports the
+    buckets it wrote, and writes each on min(n_buckets, shuffle.partitions)
+    tasks. A later merge collects its touched buckets as before."""
+    table = SnapshotTable(str(tmp_path / "t"), n_buckets=64)
+    paths = [f"f{i:03d}.py" for i in range(300)]
+    with _job_group(spark) as jobs:
+        stats = table.overwrite(spark, _base(spark, paths))
+        assert jobs() == 1
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _last_job_tasks(spark) == min(64, shuffle_partitions)
+    m = table._read_manifest(table.current_version())
+    written = sorted(int(b) for b, fs in m["buckets"].items() if fs)
+    assert stats["buckets"] == written and stats["applied_buckets"] == len(written)
+    assert all(len(m["buckets"][str(b)]) == 1 for b in written)
+    stored = {r["path"]: r["bucket"] for r in table.read_internal(spark).collect()}
+    assert sorted(stored) == paths and sorted(set(stored.values())) == written
+
+    stats = table.merge(spark, _batch(spark, [(p, "v1", 1) for p in paths[:5]]))
+    assert stats["buckets"] == sorted({stored[p] for p in paths[:5]})
+    got = {r["path"]: r["content"] for r in table.read(spark).collect()}
+    assert got == {p: ("v1" if i < 5 else "v0") for i, p in enumerate(paths)}

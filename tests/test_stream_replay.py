@@ -18,7 +18,12 @@ from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
 from hdata_spark.streaming.stream_replay import stream_replay
 
-from tests.conftest import assert_state_equal
+from tests.conftest import (
+    _all_jobs,
+    _job_group,
+    _last_job_tasks,
+    assert_state_equal,
+)
 
 
 def _write_event_files(events: pd.DataFrame, d: str) -> str:
@@ -287,12 +292,11 @@ def test_schema_change_only_epoch_commits_empty_record(spark, tmp_path):
 
 
 def test_stream_concurrent_writer_schema_change_not_skipped(spark, tmp_path):
-    """A WAL segment landing BETWEEN the schema-change profile and the
-    stream's AvailableNow snapshot (a concurrent writer) must still get its
-    schema_change applied: the per-batch source-log read in
-    `_batch_fully_profiled` escalates any unprofiled file back to the full
-    schema-change scan instead of trusting the stale maybe_sc=False
-    profile."""
+    """A WAL segment landing BETWEEN the WAL schema read and the stream's
+    AvailableNow snapshot (a concurrent writer) must still get its
+    schema_change applied: each micro-batch reads its schema changes from
+    the files its own source-log entry names (`_batch_schema_changes`), not
+    from anything read before the stream started."""
     from hdata_spark.fixtures import CDCFixtureConfig, generate_base, generate_events
     from hdata_spark.streaming.replay import ReplayConfig, replay
 
@@ -310,14 +314,14 @@ def test_stream_concurrent_writer_schema_change_not_skipped(spark, tmp_path):
     ]
     injected.loc[i, ["sc_kind", "sc_column", "sc_arg"]] = ["add", "stars", "int"]
     events_dir = str(tmp_path / "events")
-    _write_event_files(first, events_dir)  # profile sees ONLY these
+    _write_event_files(first, events_dir)  # the schema read sees ONLY these
 
     table, ledger, metrics, registry, ckpt = _mk(tmp_path, "race")
     table.overwrite(spark, spark.createDataFrame(base))
     stream_replay(
         spark, events_dir, table, ledger, metrics, registry, ckpt,
         max_files_per_trigger=1,
-        _post_profile_hook=lambda: _write_event_files(injected, events_dir),
+        _pre_start_hook=lambda: _write_event_files(injected, events_dir),
     )
     assert "stars" in table.columns()  # the racing change was NOT skipped
 
@@ -360,26 +364,161 @@ def _source_log(ckpt, name: str, lines: list[str]) -> None:
         f.write("\n".join(lines) + "\n")
 
 
-def test_batch_fully_profiled_fails_safe(tmp_path):
-    """The per-batch profile-coverage check answers False — escalate to the
-    full schema-change scan — on a malformed or missing source log entry,
-    and reads `<batchId>.compact` when the plain entry was compacted away."""
+def test_batch_schema_changes_reads_the_batch_files(tmp_path):
+    """The per-batch reader returns the schema changes of exactly the files
+    the batch's source-log entry names, in LSN order, and `[]` for files
+    without one. It answers None (the core then collects with a Spark job)
+    for a torn or missing entry, a `.compact` entry and a file pyarrow
+    cannot read."""
     import json
+    from urllib.parse import quote
 
-    from hdata_spark.streaming.stream_replay import _batch_fully_profiled
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hdata_spark.streaming.stream_replay import _batch_schema_changes
+
+    wal = tmp_path / "wal"
+    wal.mkdir()
+
+    def segment(name, rows):
+        lsn, op, repo, kind, column, arg = zip(*rows)
+        path = str(wal / name)
+        pq.write_table(pa.table({
+            "lsn": pa.array(lsn, pa.int64()), "op": op, "repo": repo,
+            "sc_kind": kind, "sc_column": column, "sc_arg": arg,
+        }), path)
+        return path
 
     def entry(path: str) -> str:
-        return json.dumps({"path": f"file://{path}", "size": 1})
+        return json.dumps({"path": "file://" + quote(path), "size": 1})
 
+    plain = segment("plain segment.parquet", [
+        (1, "insert", "o/a", None, None, None),
+        (2, "delete", "o/b", None, None, None),
+    ])
+    two = segment("two.parquet", [
+        (9, "schema_change", None, "rename", "stars", "stargazers"),
+        (5, "update", "o/a", None, None, None),
+        (7, "schema_change", None, "add", "stars", "int"),
+    ])
     ckpt = str(tmp_path / "ckpt")
-    seen = frozenset({"/wal/a.parquet", "/wal/b.parquet"})
 
+    _source_log(ckpt, "0", ["v1", entry(plain)])
+    assert _batch_schema_changes(ckpt, 0) == []
+    _source_log(ckpt, "1", ["v1", entry(plain), entry(two)])
+    assert _batch_schema_changes(ckpt, 1) == [
+        {"lsn": 7, "sc_kind": "add", "sc_column": "stars", "sc_arg": "int"},
+        {"lsn": 9, "sc_kind": "rename", "sc_column": "stars", "sc_arg": "stargazers"},
+    ]
     # a truncated JSON line (a torn write) must not raise
-    _source_log(ckpt, "0", ["v1", entry("/wal/a.parquet"), '{"path": "file:///wal/b'])
-    assert _batch_fully_profiled(ckpt, 0, seen) is False
+    _source_log(ckpt, "2", ["v1", entry(plain), '{"path": "file:///wal/b'])
+    assert _batch_schema_changes(ckpt, 2) is None
     # no log entry for the batch at all
-    assert _batch_fully_profiled(ckpt, 1, seen) is False
+    assert _batch_schema_changes(ckpt, 3) is None
     # a compaction batch writes only `<id>.compact`, listing every file so far
-    _source_log(ckpt, "9.compact", ["v1", entry("/wal/a.parquet"), entry("/wal/b.parquet")])
-    assert _batch_fully_profiled(ckpt, 9, seen) is True
-    assert _batch_fully_profiled(ckpt, 9, frozenset({"/wal/a.parquet"})) is False
+    _source_log(ckpt, "9.compact", ["v1", entry(plain), entry(two)])
+    assert _batch_schema_changes(ckpt, 9) is None
+    # a file that is not parquet
+    (wal / "bad.parquet").write_text("not parquet")
+    _source_log(ckpt, "4", ["v1", entry(plain), entry(str(wal / "bad.parquet"))])
+    assert _batch_schema_changes(ckpt, 4) is None
+
+
+def _segment_frame(spark, events, tmp_path):
+    """One WAL segment (epoch 0 of `events`) as a one-file parquet read."""
+    d = _write_event_files(events[events["epoch"] == 0], str(tmp_path / "seg"))
+    return spark.read.parquet(d)
+
+
+def test_apply_epochs_with_known_schema_changes_runs_no_collect(
+    spark, tmp_path, small_fixture
+):
+    """`schema_changes=[]` runs no schema-change job; `None` makes the core
+    collect the changes itself, in exactly one more job."""
+    from hdata_spark.streaming.stream_replay import ReplayConfig, apply_epochs
+
+    _, events = small_fixture
+    frame = _segment_frame(spark, events, tmp_path)
+    counts = {}
+    for changes in ([], None):
+        table, ledger, metrics, registry, _ = _mk(tmp_path, f"sc-{changes}")
+        with _job_group(spark) as jobs:
+            apply_epochs(spark, frame, [0], table, ledger, metrics, registry,
+                         ReplayConfig(), changes)
+            counts[str(changes)] = jobs()
+        assert ledger.committed_epochs() == [0]
+    assert counts["None"] == counts["[]"] + 1
+
+
+def test_stage_write_runs_on_every_core(spark, tmp_path, small_fixture):
+    """A one-segment stage write into 64 buckets runs its write stage on
+    min(64, shuffle.partitions) tasks, not on the one task AQE would
+    coalesce the shuffle into, and still writes one file per bucket."""
+    from hdata_spark.streaming.stream_replay import ReplayConfig, apply_epochs
+
+    _, events = small_fixture
+    frame = _segment_frame(spark, events, tmp_path)
+    _, ledger, metrics, registry, _ = _mk(tmp_path, "cores")
+    table = SnapshotTable(str(tmp_path / "cores" / "table64"), n_buckets=64)
+    (record,) = apply_epochs(spark, frame, [0], table, ledger, metrics, registry,
+                             ReplayConfig(), [])
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _last_job_tasks(spark) == min(64, shuffle_partitions)
+    m = table._read_manifest(table.current_version())
+    assert len(m["delta_files"]) == len(record["partitions"]) > 8
+
+
+def test_drain_runs_one_job_outside_its_batches(
+    spark, tmp_path, monkeypatch, small_fixture
+):
+    """The WAL schema read is a drain's only Spark job outside its
+    micro-batches, and each batch gets its schema changes from its own
+    files: the batch holding a schema change is handed it, and later
+    batches are handed `[]`, so no batch collects them with a job."""
+    import importlib
+
+    from hdata_spark.streaming.stream_replay import ReplayConfig
+
+    # the package re-exports a function of the module's name
+    sr = importlib.import_module("hdata_spark.streaming.stream_replay")
+
+    base, events = small_fixture
+    events = events[events["epoch"] < 3].copy()
+    i = events.index[events["epoch"] == 0][0]
+    events.loc[i, ["op", "repo", "path", "commit", "lang", "content"]] = [
+        "schema_change", None, None, None, None, None,
+    ]
+    events.loc[i, ["sc_kind", "sc_column", "sc_arg"]] = ["add", "stars", "int"]
+    table, ledger, metrics, registry, ckpt = _mk(tmp_path, "drain")
+    table.overwrite(spark, spark.createDataFrame(base))
+
+    apply_change_batch = sr.apply_change_batch
+    handed, apply_jobs = [], []
+
+    def counted(*args):
+        handed.append(args[-1])
+        with _all_jobs(spark) as jobs:
+            out = apply_change_batch(*args)
+            apply_jobs.append(jobs())
+        return out
+
+    monkeypatch.setattr(sr, "apply_change_batch", counted)
+    wal = str(tmp_path / "wal")
+    overhead = []
+    for epoch in range(3):  # land one segment, then drain it
+        _write_event_files(events[events["epoch"] == epoch], wal)
+        with _all_jobs(spark) as jobs:
+            sr.stream_replay(spark, wal, table, ledger, metrics, registry, ckpt,
+                             ReplayConfig(stream_compact_delta_files=None))
+            overhead.append(jobs() - apply_jobs[-1])
+    assert overhead == [1, 1, 1]
+    assert handed == [
+        [{"lsn": events.loc[i, "lsn"], "sc_kind": "add", "sc_column": "stars",
+          "sc_arg": "int"}],
+        [],
+        [],
+    ]
+    assert apply_jobs[0] == apply_jobs[1] == apply_jobs[2]
+    assert ledger.committed_epochs() == [0, 1, 2]
+    assert "stars" in table.columns()

@@ -20,6 +20,32 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def test_normalize_lang_col_matches_lower_and_the_pandas_twin(spark):
+    """The ASCII fast path changes no label: `normalize_lang_col` equals
+    `lower(trim(x))` followed by the variant map, and agrees with
+    `normalize_lang_pudf`, on ASCII, padded, mixed-case, non-ASCII, null
+    and empty labels."""
+    from hdata_spark.functions.text import (
+        _LANG_MAP,
+        normalize_lang_col,
+        normalize_lang_pudf,
+    )
+
+    labels = ["python", "Python", "  PY  ", "GoLang", "JavaScript", "c++",
+              "Rust ", "ÉLIXIR", "İstanbul", "ΣΟΦΟΣ", " Ünïcode ", None, "", "  "]
+    got = spark.createDataFrame([(x,) for x in labels], "lang string").select(
+        "lang",
+        normalize_lang_col(F.col("lang")).alias("col"),
+        normalize_lang_pudf(F.col("lang")).alias("pudf"),
+        F.lower(F.trim(F.col("lang"))).alias("low"),
+    ).collect()
+    assert [r["lang"] for r in got] == labels
+    for r in got:
+        expected = None if r["low"] is None else _LANG_MAP.get(r["low"], r["low"])
+        assert r["col"] == expected == r["pudf"], r["lang"]
+    assert [r["col"] for r in got][:4] == ["python", "python", "python", "go"]
+
+
 def test_scrub_newlines(spark):
     """JDBC-reader newline scrub parity (JDBCReader.java:133-134)."""
     from hdata_spark.functions.text import scrub_newlines
