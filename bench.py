@@ -327,7 +327,7 @@ def run_stream_replay(
     # is what makes fpt experiments comparable.
     n_triggers = max(n_files // files_per_trigger, 1)
     cfg = ReplayConfig(
-        stream_compact_delta_files=max((n_triggers - 1) * N_BUCKETS, 0)
+        compact_delta_files=max((n_triggers - 1) * N_BUCKETS, 0)
     )
 
     # Warmup: tiny stream through the same code path (JIT + streaming

@@ -4,8 +4,8 @@ A from-scratch rebuild of the capabilities of the reference ETL engine
 (fork-archive-hub/hdata, a single-JVM Java reader->ring-buffer->writer data
 mover; see /root/reference) re-expressed Spark-first:
 
-- partitioned parallel extraction  -> Spark source partition planning + explicit
-  repartition/salting (reference: JDBCSplitter/HiveSplitter/HBaseSplitter family)
+- partitioned parallel extraction  -> Spark source partition planning + key-hash
+  bucketing (reference: JDBCSplitter/HiveSplitter/HBaseSplitter family)
 - ordered event consumption        -> LSN-windowed batch replay / Structured
   Streaming (reference: Kafka offset tail, KafkaConsumer.java)
 - keyed upsert                     -> MERGE-style upsert into a bucketed,

@@ -72,7 +72,7 @@ def _make_normalize_lang_pudf():
 
 
 normalize_lang_pudf = _make_normalize_lang_pudf()
-"""Arrow-vectorized twin of normalize_lang_col (north-star UDF axis)."""
+"""Arrow-vectorized twin of normalize_lang_col (parity-tested against it)."""
 
 
 def scrub_newlines(col: Column, replacement: str = " ") -> Column:
@@ -127,11 +127,6 @@ def parse_int_empty_zero(col: Column, target: str = "bigint") -> Column:
     )
 
 
-def sha256_col(col: Column) -> Column:
-    """sha256 hex digest of a string column — built-in (F.sha2, JVM-side)."""
-    return F.sha2(col.cast("string"), 256)
-
-
 def _make_sha256_pudf():
     """By-value pickling factory — see _make_normalize_lang_pudf."""
 
@@ -147,4 +142,4 @@ def _make_sha256_pudf():
 
 
 sha256_pudf = _make_sha256_pudf()
-"""Arrow-vectorized sha256 — pandas_udf twin for the UDF-axis tests."""
+"""Arrow-vectorized sha256 (query doc_content_hashes)."""

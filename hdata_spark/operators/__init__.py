@@ -1,9 +1,4 @@
 from hdata_spark.operators.dedup import lww_latest, lww_latest_window
-from hdata_spark.operators.partitioning import (
-    build_salt_map,
-    with_bucket,
-    with_salt,
-)
 from hdata_spark.operators.similarity import cosine_topk, ivf_assign, ivf_search
 from hdata_spark.operators.text_dedup import (
     lang_id_scores,

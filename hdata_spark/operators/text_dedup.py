@@ -63,13 +63,6 @@ def word_shingles(toks: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_col(shingles: Column, perm: int) -> Column:
-    """Min-wise hash for one permutation: min md5('{perm}:' || shingle)."""
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{perm}:"), s)))
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",

@@ -598,10 +598,6 @@ class SnapshotTable:
         m = self._read_manifest(self.current_version())
         return len(m["delta_files"])
 
-    def data_file_count(self) -> int:
-        m = self._read_manifest(self.current_version())
-        return sum(len(fs) for fs in m["buckets"].values())
-
     def overwrite(self, spark: SparkSession, df: DataFrame, lsn_col=None) -> dict:
         """Full load. df has the logical columns (+ optional lsn column).
 

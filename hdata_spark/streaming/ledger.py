@@ -43,10 +43,6 @@ class CommitLedger:
             if fn.startswith("epoch_") and fn.endswith(".json")
         )
 
-    def resume_epoch(self) -> int:
-        done = self.committed_epochs()
-        return (done[-1] + 1) if done else 0
-
     def commit(self, epoch: int, record: dict) -> None:
         path = self._path(epoch)
         tmp = path + f".tmp-{uuid.uuid4().hex}"

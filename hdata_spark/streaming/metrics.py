@@ -46,12 +46,11 @@ class MetricsLog:
                 int(r["lag_events"]),
                 int(r["applied_events"]),
                 float(r["skew_ratio"]),
-                int(r["salt_buckets"]),
             )
             for r in self.rows()
         ]
         return spark.createDataFrame(
             rows,
             "epoch long, partition_id int, lag_events long, applied_events long, "
-            "skew_ratio double, salt_buckets int",
+            "skew_ratio double",
         )

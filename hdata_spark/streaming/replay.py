@@ -8,7 +8,7 @@ WAL tail applies its micro-batches through:
 
     for each run of epochs (split at schema-change epochs):
         apply_epochs(run)   one scan + LWW + stage write, k epoch commits
-    compact once at the end
+    compact once at the end, when the compaction rule says so
 
 Run batching is the key scan optimization: a resume-from-scratch replay of E
 epochs reads the event log ONCE (filtered to uncommitted epochs — parquet
@@ -24,9 +24,8 @@ Shuffle budget for a run of k epochs (the 100 TB question): one partial-agg
 exchange for the LWW groupBy (shuffle volume = per-epoch distinct keys, not
 events, thanks to map-side combine) + one (epoch, bucket) exchange for the
 stage write. Hot-repo skew cannot hurt either: both are keyed by
-(repo, path)/bucket, which is uniform; repo-grained aggregations (the
-skew-visible ones) go through the salted two-stage path
-(operators/partitioning.py).
+(repo, path)/bucket, which is uniform even under a 25x hot repo
+(tests/test_partitioning.py).
 """
 
 from __future__ import annotations
@@ -38,9 +37,17 @@ from hdata_spark.plans.schema_registry import SchemaRegistry
 from hdata_spark.sinks.snapshot import SnapshotTable
 from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
-from hdata_spark.streaming.stream_replay import ReplayConfig, apply_epochs
+from hdata_spark.streaming.stream_replay import (
+    ReplayConfig,
+    _compact_if_due,
+    apply_epochs,
+)
 
 __all__ = ["ReplayConfig", "replay"]
+
+# A run holds at most this many epochs, which bounds one run's scan and
+# stage write.
+MAX_EPOCHS_PER_RUN = 16
 
 
 def replay(
@@ -52,7 +59,6 @@ def replay(
     registry: SchemaRegistry,
     cfg: ReplayConfig | None = None,
     upto_epoch: int | None = None,
-    max_epochs_per_run: int = 16,
 ) -> dict:
     """Run the epoch loop; resumable — committed epochs are skipped.
 
@@ -95,7 +101,7 @@ def replay(
             todo.append(epoch)
 
     # Runs: contiguous uncommitted epochs, split at schema-change epochs
-    # (each of those runs alone) and capped at max_epochs_per_run.
+    # (each of those runs alone) and capped at MAX_EPOCHS_PER_RUN.
     runs: list[list[int]] = []
     for epoch in todo:
         if (
@@ -103,7 +109,7 @@ def replay(
             and epoch == runs[-1][-1] + 1
             and epoch not in sc_epochs
             and runs[-1][-1] not in sc_epochs
-            and len(runs[-1]) < max_epochs_per_run
+            and len(runs[-1]) < MAX_EPOCHS_PER_RUN
         ):
             runs[-1].append(epoch)
         else:
@@ -112,17 +118,13 @@ def replay(
     for run in runs:
         apply_epochs(
             spark, events.filter(F.col("epoch").between(run[0], run[-1])), run,
-            table, ledger, metrics, registry, cfg,
+            table, ledger, metrics, registry,
             [r for r in sc_rows if run[0] <= r["epoch"] <= run[-1]],
         )
-    compacted = False
-    if cfg.compact_at_end and todo:
-        # Fold MOR deltas back to one row per key (read-optimize the table).
-        # Policy, not correctness: readers resolve deltas either way. On a
-        # real deployment this runs on its own cadence (every k-th run /
-        # delta-file threshold), amortized across many fast-append commits.
-        table.compact(spark)
-        compacted = True
+    # Fold MOR deltas back to one row per key (read-optimize the table) under
+    # the rule the WAL tail applies per micro-batch. Policy, not correctness:
+    # readers resolve deltas either way.
+    compacted = bool(todo) and _compact_if_due(spark, table, cfg)
     return {
         "epochs_applied": len(todo),
         "epochs_skipped": skipped,

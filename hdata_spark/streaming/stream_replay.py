@@ -58,14 +58,11 @@ import uuid
 from dataclasses import dataclass
 from urllib.parse import unquote
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from hdata_spark.functions.text import (
-    normalize_lang_col,
-    normalize_lang_pudf,
-    sha256_pudf,
-)
+from hdata_spark.functions.text import normalize_lang_col
 from hdata_spark.operators.dedup import lww_latest
 from hdata_spark.plans.schema_registry import SchemaRegistry, spec_evolves
 from hdata_spark.sinks.snapshot import (
@@ -80,27 +77,31 @@ from hdata_spark.streaming.metrics import MetricsLog
 
 @dataclass
 class ReplayConfig:
-    use_pandas_udfs: bool = False  # pandas_udf twins instead of built-ins
-    # Batch replay folds the run's delta files back to one row per key once
-    # every epoch is committed (read-optimize the table).
-    compact_at_end: bool = True
-    # Streaming-mode compaction trigger: when a micro-batch commit leaves
-    # more than this many UNCOMPACTED delta files in the table, the stream
-    # path folds them with `compact()` before the next trigger. Per-batch
-    # commit stays metadata-only (the fast-append invariant); compaction cost
-    # is amortized over ~threshold batches. None disables auto-compaction
-    # (callers own the cadence, e.g. a separate maintenance job).
-    stream_compact_delta_files: int | None = 64
+    # The one compaction rule of both planners: once a commit leaves more
+    # than this many UNCOMPACTED delta files in the table, fold them with
+    # `compact()` — after each micro-batch on the WAL tail, once after all
+    # runs in batch replay. Each commit stays metadata-only (the fast-append
+    # invariant); compaction cost is amortized over ~threshold files. None
+    # disables auto-compaction (callers own the cadence, e.g. a separate
+    # maintenance job).
+    compact_delta_files: int | None = 64
 
 
-def _transform(data: DataFrame, registry: SchemaRegistry, cfg: ReplayConfig) -> DataFrame:
-    """Vectorized per-event transforms + registry projection."""
-    if cfg.use_pandas_udfs:
-        data = data.withColumn("lang", normalize_lang_pudf(F.col("lang")))
-        data = data.withColumn("content_sha256", sha256_pudf(F.col("content")))
-    else:
-        data = data.withColumn("lang", normalize_lang_col(F.col("lang")))
-        data = data.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+def _compact_if_due(spark: SparkSession, table: SnapshotTable, cfg: ReplayConfig) -> bool:
+    """Apply the compaction rule; True when it compacted. Runs AFTER the
+    ledger commit — compaction is read optimization, never part of an
+    epoch's exactly-once window (a crash mid-compact leaves the pre-compact
+    snapshot fully committed, and compact() itself commits atomically)."""
+    if cfg.compact_delta_files is None or table.delta_file_count() <= cfg.compact_delta_files:
+        return False
+    table.compact(spark)
+    return True
+
+
+def _transform(data: DataFrame, registry: SchemaRegistry) -> DataFrame:
+    """Per-event transforms on JVM built-ins + registry projection."""
+    data = data.withColumn("lang", normalize_lang_col(F.col("lang")))
+    data = data.withColumn("content_sha256", F.sha2(F.col("content"), 256))
     return registry.project_batch(data)
 
 
@@ -132,7 +133,6 @@ def apply_epochs(
     ledger: CommitLedger,
     metrics: MetricsLog,
     registry: SchemaRegistry,
-    cfg: ReplayConfig,
     schema_changes: list | None = None,
 ) -> list[dict]:
     """Apply a run of uncommitted epochs: one scan, one stage write, one
@@ -193,7 +193,7 @@ def apply_epochs(
     # operators.dedup). Transforms are row-wise, so the reorder is
     # semantics-free.
     winners = lww_latest(data, keys=("epoch", *table.keys), order_col="lsn")
-    winners = _transform(winners, registry, cfg)
+    winners = _transform(winners, registry)
     # Staged files carry exactly their generation's declared schema (the
     # snapshot scan reads with it): the projection casts the logical columns.
     staged = winners.select(
@@ -260,7 +260,6 @@ def apply_epochs(
                 "applied_events": s["applied_events"],
                 "lag_events": top - s["max_applied_lsn"],
                 "skew_ratio": s["applied_events"] / mean_rows,
-                "salt_buckets": 1,
             }
             for s in stats
         ]
@@ -292,23 +291,15 @@ def apply_change_batch(
     schema_changes: list | None = None,
 ) -> dict | None:
     """Apply ONE micro-batch as the run of one epoch, `batch_id`; then fold
-    the deltas when the delta-file-count cadence says so. Returns the
+    the deltas when the compaction rule says so. Returns the
     batch's ledger record, or None for an already-committed batch."""
     if ledger.is_committed(batch_id):
         return None
     (record,) = apply_epochs(
         spark, batch.withColumn("epoch", F.lit(batch_id).cast("long")),
-        [batch_id], table, ledger, metrics, registry, cfg, schema_changes,
+        [batch_id], table, ledger, metrics, registry, schema_changes,
     )
-    # Runs AFTER the ledger commit — compaction is read optimization, never
-    # part of the batch's exactly-once window (a crash mid-compact leaves
-    # the pre-compact snapshot fully committed, and compact() itself
-    # commits atomically).
-    if (
-        cfg.stream_compact_delta_files is not None
-        and table.delta_file_count() > cfg.stream_compact_delta_files
-    ):
-        table.compact(spark)
+    _compact_if_due(spark, table, cfg)
     return record
 
 
@@ -408,8 +399,15 @@ def stream_replay(
     """
     cfg = cfg or ReplayConfig()
     # The drain's one job outside its micro-batches: the stream reads every
-    # WAL file with this schema.
-    schema = spark.read.parquet(events_dir).schema
+    # WAL file with this schema. A WAL with no data file yet (empty, or only
+    # a hidden `.landing-*` temp) has none to infer: nothing to drain. A
+    # missing directory still raises.
+    try:
+        schema = spark.read.parquet(events_dir).schema
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return {"batches": 0, "final_snapshot_version": table.current_version()}
 
     if _pre_start_hook is not None:
         _pre_start_hook()

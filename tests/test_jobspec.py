@@ -202,7 +202,7 @@ def test_snapshot_upsert_without_lsn_column_updates_on_rerun(spark, tmp_path):
         spark, spark.createDataFrame(events), table,
         CommitLedger(str(tmp_path / "l")), MetricsLog(str(tmp_path / "m")),
         SchemaRegistry(state_path=str(tmp_path / "r.json")),
-        ReplayConfig(compact_at_end=False),
+        ReplayConfig(compact_delta_files=None),
     )
     assert table.delta_file_count() == 1 and table.max_stored_lsn() == 50
     v3 = v0.assign(commit="c3", content="v3")

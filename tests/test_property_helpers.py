@@ -1,4 +1,4 @@
-"""Property-based tests for the pure jobspec/partitioning helpers."""
+"""Property-based tests for the pure jobspec helpers."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ from hypothesis import given
 from hypothesis import strategies as st
 
 from hdata_spark.jobspec import expand_shards, mongo_id_split_conditions
-from hdata_spark.operators.partitioning import salt_counts
 
 _prefix = st.text(
     alphabet="abcdefghijklmnopqrstuvwxyz_.", min_size=1, max_size=8
@@ -36,29 +35,6 @@ def test_expand_shards_range_properties(pre, lo, hi, width):
     if width >= 3:
         assert all(len(s) == len(pre) + max(width, len(str(max(lo, hi))))
                    or len(s[len(pre):]) >= width for s in out)
-
-
-@given(
-    counts=st.dictionaries(
-        st.text(alphabet="abc/xyz0123456789", min_size=1, max_size=10),
-        st.integers(1, 10**9),
-        min_size=1,
-        max_size=40,
-    ),
-    threshold=st.floats(1.0, 10.0),
-    max_salts=st.integers(2, 64),
-)
-def test_salt_counts_policy_properties(counts, threshold, max_salts):
-    """Only above-threshold keys get salts; every salt count in [2, max]."""
-    out = salt_counts(counts, threshold=threshold, max_salts=max_salts)
-    mean = sum(counts.values()) / len(counts)
-    for k, n_salts in out.items():
-        assert counts[k] > threshold * mean
-        assert 2 <= n_salts <= max_salts
-    # keys at or below the threshold never appear
-    for k, n in counts.items():
-        if n <= threshold * mean:
-            assert k not in out
 
 
 @given(

@@ -1,6 +1,8 @@
-"""Property-based LWW tests (hypothesis): for ANY event log — duplicate
+"""LWW tests. Property-based (hypothesis): for ANY event log — duplicate
 keys, delete/reinsert races, arbitrary arrival order, any epoch split — the
-engine's final state equals the single-threaded oracle (SURVEY §5.2.4).
+engine's final state equals the single-threaded oracle (SURVEY §5.2.4),
+both merge-on-read and after compaction. Plus the agreement of the two
+`lww_latest` variants on a skewed fixture log.
 """
 
 from __future__ import annotations
@@ -8,8 +10,10 @@ from __future__ import annotations
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from hdata_spark.fixtures import oracle_final_state
+from hdata_spark.fixtures import CDCFixtureConfig, generate_events, oracle_final_state
+from hdata_spark.operators.dedup import lww_latest, lww_latest_window
 from hdata_spark.plans.schema_registry import SchemaRegistry
 from hdata_spark.sinks.snapshot import SnapshotTable
 from hdata_spark.streaming.ledger import CommitLedger
@@ -79,5 +83,25 @@ def test_any_log_matches_oracle(spark, tmp_path_factory, raw, shuffle_seed, epoc
     )
     base = pd.DataFrame(columns=["repo", "path", "commit", "lang", "content"])
     expected = oracle_final_state(base, events)
-    actual = table.read(spark).toPandas()
-    assert_state_equal(actual, expected)
+    assert_state_equal(table.read(spark).toPandas(), expected)
+    table.compact(spark)
+    assert_state_equal(table.read(spark).toPandas(), expected)
+
+
+def test_lww_aggregate_and_window_variants_agree(spark):
+    cfg = CDCFixtureConfig(
+        seed=44, n_repos=10, paths_per_repo=10, hot_repos=1,
+        hot_factor=25, n_events=3_000, epoch_size=3_000, base_rows=0,
+    )
+    df = spark.createDataFrame(generate_events(cfg)).filter(
+        F.col("op") != "schema_change"
+    )
+    a = {
+        tuple(r) for r in lww_latest(df, ("repo", "path"), "lsn")
+        .select("repo", "path", "lsn", "commit").collect()
+    }
+    b = {
+        tuple(r) for r in lww_latest_window(df, ("repo", "path"), "lsn")
+        .select("repo", "path", "lsn", "commit").collect()
+    }
+    assert a == b

@@ -173,11 +173,3 @@ def test_crash_between_data_commit_and_ledger(spark, tmp_path, small_fixture):
     assert stats["epochs_applied"] == 1  # only the unledgered epoch re-runs
     assert sha256_fingerprint(table.read(spark).toPandas()) == expected_fp
 
-
-def test_pandas_udf_path_matches_builtin(spark, tmp_path, small_fixture):
-    base, events = small_fixture
-    t1, *_ = _run(spark, tmp_path / "a", base, events, cfg=ReplayConfig(use_pandas_udfs=False))
-    t2, *_ = _run(spark, tmp_path / "b", base, events, cfg=ReplayConfig(use_pandas_udfs=True))
-    assert sha256_fingerprint(t1.read(spark).toPandas()) == sha256_fingerprint(
-        t2.read(spark).toPandas()
-    )

@@ -31,7 +31,7 @@ def _replay(spark, tmp_path, table, rows):
         spark, spark.createDataFrame(rows, _EVENTS), table,
         CommitLedger(str(tmp_path / "l")), MetricsLog(str(tmp_path / "m")),
         SchemaRegistry(state_path=str(tmp_path / "r.json")),
-        ReplayConfig(compact_at_end=False),
+        ReplayConfig(compact_delta_files=None),
     )
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 
 from hdata_spark.fixtures import oracle_final_state, sha256_fingerprint
 from hdata_spark.plans.schema_registry import SchemaRegistry
@@ -123,7 +124,7 @@ def test_stream_fast_append_metadata_only_commits(spark, tmp_path, small_fixture
     v_base = table.current_version()
     stats = stream_replay(
         spark, events_dir, table, ledger, metrics, registry, ckpt,
-        cfg=ReplayConfig(stream_compact_delta_files=None),
+        cfg=ReplayConfig(compact_delta_files=None),
         max_files_per_trigger=1,
     )
     assert stats["batches"] >= 2
@@ -142,7 +143,7 @@ def test_stream_fast_append_metadata_only_commits(spark, tmp_path, small_fixture
 
 
 def test_stream_delta_threshold_compaction(spark, tmp_path, small_fixture):
-    """Crossing stream_compact_delta_files triggers an in-stream compaction;
+    """Crossing compact_delta_files triggers an in-stream compaction;
     state stays correct and the delta backlog is bounded by ~one batch."""
     from hdata_spark.streaming.replay import ReplayConfig
 
@@ -152,7 +153,7 @@ def test_stream_delta_threshold_compaction(spark, tmp_path, small_fixture):
     table.overwrite(spark, spark.createDataFrame(base))
     stats = stream_replay(
         spark, events_dir, table, ledger, metrics, registry, ckpt,
-        cfg=ReplayConfig(stream_compact_delta_files=4),
+        cfg=ReplayConfig(compact_delta_files=4),
         max_files_per_trigger=1,
     )
     assert stats["batches"] >= 2
@@ -160,6 +161,80 @@ def test_stream_delta_threshold_compaction(spark, tmp_path, small_fixture):
     # batch's worth of buckets (16 here)
     assert table.delta_file_count() <= 4 + table.n_buckets
     assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, events))
+
+
+@pytest.mark.parametrize("threshold", [None, 4])
+@pytest.mark.parametrize("planner", ["replay", "stream_replay"])
+def test_one_compaction_rule_for_both_planners(
+    spark, tmp_path, monkeypatch, small_fixture, planner, threshold
+):
+    """`compact_delta_files` is both planners' one compaction rule: None
+    leaves every delta file in place; a threshold below the delta-file count
+    folds them, once after batch replay's runs and after every micro-batch
+    that crosses it. Either way the table matches the oracle."""
+    from hdata_spark.streaming.replay import ReplayConfig, replay
+
+    base, events = small_fixture
+    table, ledger, metrics, registry, ckpt = _mk(tmp_path, "eng")
+    table.overwrite(spark, spark.createDataFrame(base))
+    compact, compactions = table.compact, []
+
+    def counted(*args, **kwargs):
+        compactions.append(table.delta_file_count())
+        return compact(*args, **kwargs)
+
+    monkeypatch.setattr(table, "compact", counted)
+    cfg = ReplayConfig(compact_delta_files=threshold)
+    if planner == "replay":
+        stats = replay(spark, spark.createDataFrame(events), table, ledger,
+                       metrics, registry, cfg)
+        assert stats["epochs_applied"] == 4
+        assert stats["compacted"] == (threshold is not None)
+        expected_compactions = 1
+    else:
+        events_dir = _write_event_files(events, str(tmp_path / "events"))
+        stats = stream_replay(spark, events_dir, table, ledger, metrics,
+                              registry, ckpt, cfg, max_files_per_trigger=1)
+        assert stats["batches"] == 4
+        expected_compactions = 4
+    if threshold is None:
+        assert compactions == []
+        assert table.delta_file_count() > 4
+    else:
+        assert len(compactions) == expected_compactions
+        assert all(n > threshold for n in compactions)
+        assert table.delta_file_count() == 0
+    assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, events))
+
+
+def test_stream_drains_an_empty_wal(spark, tmp_path, small_fixture):
+    """A tail that polls a WAL with no data file yet — empty, or holding only
+    a segment still landing — drains nothing instead of failing the schema
+    read; the first landed segment then drains as usual. A missing WAL
+    directory still raises."""
+    from pyspark.errors import AnalysisException
+
+    base, events = small_fixture
+    first = events[events["epoch"] == 0]
+    table, ledger, metrics, registry, ckpt = _mk(tmp_path, "eng")
+    table.overwrite(spark, spark.createDataFrame(base))
+    v0 = table.current_version()
+    wal = tmp_path / "wal"
+    wal.mkdir()
+    empty = {"batches": 0, "final_snapshot_version": v0}
+    assert stream_replay(spark, str(wal), table, ledger, metrics, registry, ckpt) == empty
+    landing = tmp_path / "landing"
+    _write_event_files(first, str(landing))
+    (seg,) = os.listdir(landing)
+    os.replace(landing / seg, wal / ".landing-0")
+    assert stream_replay(spark, str(wal), table, ledger, metrics, registry, ckpt) == empty
+    os.replace(wal / ".landing-0", wal / seg)
+    stats = stream_replay(spark, str(wal), table, ledger, metrics, registry, ckpt)
+    assert stats["batches"] == 1 and ledger.committed_epochs() == [0]
+    assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, first))
+    with pytest.raises(AnalysisException):
+        stream_replay(spark, str(tmp_path / "missing"), table, ledger, metrics,
+                      registry, str(tmp_path / "ckpt-missing"))
 
 
 def test_stream_schema_evolution(spark, tmp_path):
@@ -436,7 +511,7 @@ def test_apply_epochs_with_known_schema_changes_runs_no_collect(
 ):
     """`schema_changes=[]` runs no schema-change job; `None` makes the core
     collect the changes itself, in exactly one more job."""
-    from hdata_spark.streaming.stream_replay import ReplayConfig, apply_epochs
+    from hdata_spark.streaming.stream_replay import apply_epochs
 
     _, events = small_fixture
     frame = _segment_frame(spark, events, tmp_path)
@@ -444,8 +519,7 @@ def test_apply_epochs_with_known_schema_changes_runs_no_collect(
     for changes in ([], None):
         table, ledger, metrics, registry, _ = _mk(tmp_path, f"sc-{changes}")
         with _job_group(spark) as jobs:
-            apply_epochs(spark, frame, [0], table, ledger, metrics, registry,
-                         ReplayConfig(), changes)
+            apply_epochs(spark, frame, [0], table, ledger, metrics, registry, changes)
             counts[str(changes)] = jobs()
         assert ledger.committed_epochs() == [0]
     assert counts["None"] == counts["[]"] + 1
@@ -455,14 +529,13 @@ def test_stage_write_runs_on_every_core(spark, tmp_path, small_fixture):
     """A one-segment stage write into 64 buckets runs its write stage on
     min(64, shuffle.partitions) tasks, not on the one task AQE would
     coalesce the shuffle into, and still writes one file per bucket."""
-    from hdata_spark.streaming.stream_replay import ReplayConfig, apply_epochs
+    from hdata_spark.streaming.stream_replay import apply_epochs
 
     _, events = small_fixture
     frame = _segment_frame(spark, events, tmp_path)
     _, ledger, metrics, registry, _ = _mk(tmp_path, "cores")
     table = SnapshotTable(str(tmp_path / "cores" / "table64"), n_buckets=64)
-    (record,) = apply_epochs(spark, frame, [0], table, ledger, metrics, registry,
-                             ReplayConfig(), [])
+    (record,) = apply_epochs(spark, frame, [0], table, ledger, metrics, registry, [])
     shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert _last_job_tasks(spark) == min(64, shuffle_partitions)
     m = table._read_manifest(table.current_version())
@@ -510,7 +583,7 @@ def test_drain_runs_one_job_outside_its_batches(
         _write_event_files(events[events["epoch"] == epoch], wal)
         with _all_jobs(spark) as jobs:
             sr.stream_replay(spark, wal, table, ledger, metrics, registry, ckpt,
-                             ReplayConfig(stream_compact_delta_files=None))
+                             ReplayConfig(compact_delta_files=None))
             overhead.append(jobs() - apply_jobs[-1])
     assert overhead == [1, 1, 1]
     assert handed == [

@@ -21,7 +21,7 @@ def _replayed(spark, tmp_path, base, events, upto=None):
         spark, spark.createDataFrame(events), table,
         CommitLedger(str(tmp_path / "l")), MetricsLog(str(tmp_path / "m")),
         SchemaRegistry(state_path=str(tmp_path / "r.json")),
-        ReplayConfig(compact_at_end=False),  # keep every snapshot readable
+        ReplayConfig(compact_delta_files=None),  # keep every snapshot readable
         upto_epoch=upto,
     )
     return table
