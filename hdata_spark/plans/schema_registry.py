@@ -1,4 +1,4 @@
-"""Schema registry: versioned target-schema state + batch projection.
+"""Schema registry: versioned target-schema state.
 
 The reference's schema system is name-only and dynamic — a reader declares
 field NAMES into OutputFieldsDeclarer (hdata-api/.../api/OutputFieldsDeclarer.java:3-13)
@@ -10,7 +10,10 @@ rename / type-widen) produces a new registry version effective from its LSN.
 
 The registry is plain data — materializable as a DataFrame (north-star:
 "schema-registry DataFrame") and persisted as JSON next to the ledger so a
-resumed replay reconstructs the exact schema state at its checkpoint.
+resumed replay reconstructs the exact schema state at its checkpoint. The
+sink projects rows to its spec (`sinks.snapshot._project`), and its type
+names are the sink's (`sinks.snapshot._parse_type`): a type the sink cannot
+store is refused before it is persisted.
 
 Widen lattice (SURVEY §7.5.4): int -> bigint -> double, float -> double;
 anything -> string. Any other transition raises loudly.
@@ -23,7 +26,8 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from hdata_spark.sinks.snapshot import _default_schema, _parse_type
 
 _WIDEN_OK = {
     ("int", "bigint"),
@@ -35,11 +39,12 @@ _WIDEN_OK = {
     ("float", "string"),
     ("double", "string"),
 }
-_CANON = {"integer": "int", "long": "bigint"}
 
 
 def _canon(t: str) -> str:
-    return _CANON.get(t.lower(), t.lower())
+    """The canonical name of a spec type; raises for one the sink cannot
+    store."""
+    return _parse_type(t).simpleString()
 
 
 def spec_evolves(old_spec: list[dict], new_spec: list[dict]) -> bool:
@@ -83,8 +88,6 @@ class SchemaRegistry:
     """Versioned logical schema; entries mirror SnapshotTable's manifest spec."""
 
     def __init__(self, spec: list[dict] | None = None, state_path: str | None = None):
-        from hdata_spark.sinks.snapshot import _default_schema
-
         self.state_path = state_path
         self.versions: list[dict] = []
         if state_path and os.path.exists(state_path):
@@ -180,35 +183,6 @@ class SchemaRegistry:
         )
         self._persist()
         return spec
-
-    # ---------------- projection ----------------
-
-    def project_batch(self, df: DataFrame) -> DataFrame:
-        """Align an event batch to the current schema.
-
-        Present columns are cast to the registry type; renamed columns
-        resolve through their source lineage; missing columns become typed
-        nulls — `select([coalesce(...) ...])` exactly as SURVEY §1.4 plans.
-        Non-schema passthrough columns (lsn/op/...) are preserved.
-        """
-        present = set(df.columns)
-        logical_names = set()
-        cols = []
-        for c in self.spec:
-            logical_names.update(c["sources"])
-            sources = [s for s in c["sources"] if s in present]
-            if not sources:
-                cols.append(F.lit(None).cast(c["type"]).alias(c["name"]))
-            elif len(sources) == 1:
-                cols.append(F.col(sources[0]).cast(c["type"]).alias(c["name"]))
-            else:
-                cols.append(
-                    F.coalesce(*[F.col(s) for s in sources])
-                    .cast(c["type"])
-                    .alias(c["name"])
-                )
-        passthrough = [c for c in df.columns if c not in logical_names]
-        return df.select(*cols, *[F.col(c) for c in passthrough])
 
     # ---------------- DataFrame view (FIXTURES.md §3) ----------------
 

@@ -21,6 +21,13 @@ manifest + atomic pointer — the same design Iceberg itself uses:
   10^10 rows in 4096 buckets and an incremental batch touching 5% of
   buckets, 95% of the table is neither read nor written.
 
+This module alone owns how a row is stored, as Iceberg's table format
+alone defines its data files: the projection to a logical schema
+(`_project`), the event -> stored-row encoding (`_stored_rows`: `_lsn`
+bigint, `_op`, `bucket`), the bucket-file layout (`_write`, behind
+`_rewrite` and the apply core's `stage_deltas`) and the spec type names
+(`_parse_type`, which the schema registry canonicalizes through).
+
 Idempotence anchor: every stored row carries ``_lsn`` (the LSN that produced
 it). Every key resolves to its highest-``_lsn`` version — at read time across
 fast-append deltas, and in `_rewrite`, where stored rows win LSN ties — so
@@ -45,10 +52,10 @@ import os
 import re
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -286,8 +293,8 @@ class SnapshotTable:
         # widen via cast); generations then union. This is what makes
         # add/rename/widen metadata-only: old files are never rewritten,
         # just re-projected — and type-widened generations can coexist.
-        # Writer invariant: every writer (`_rewrite`, the apply core's stage
-        # write) writes exactly its generation's declared schema — logical
+        # Writer invariant: every file is written through `_stored_rows`, so
+        # it carries exactly its generation's declared schema — logical
         # columns at their spec types, `_lsn` bigint, `_op` string. A file
         # that does not fails the scan with a type mismatch.
         file_gens = m["file_gens"]
@@ -429,8 +436,9 @@ class SnapshotTable:
     def merge(self, spark: SparkSession, batch: DataFrame) -> dict:
         """MERGE batch into the table; returns commit stats.
 
-        `batch` columns: logical table columns + `op` ('insert' | 'update' |
-        'delete') + `lsn`. The buckets the batch touches are rewritten with
+        `batch` columns: logical table columns (by current or, after a
+        rename, older name) + `op` ('insert' | 'update' | 'delete') + `lsn`.
+        The buckets the batch touches are rewritten with
         it (`_rewrite`): per key the highest LSN wins and, at equal LSN, the
         stored row — equal LSN means the same event, already applied, so
         replays are no-ops. This is the `MERGE INTO ... WHEN MATCHED AND
@@ -446,31 +454,20 @@ class SnapshotTable:
                 f"key columns {missing} are not in the table schema {names}; "
                 "declare them with evolve_schema"
             )
-        # Write exactly the generation's declared schema (`_scan` reads with
-        # it): logical columns at their spec types (typed nulls where the
-        # batch lacks one), `lsn` bigint; keys then hash at stored types.
-        batch = batch.withColumns(
-            {
-                c["name"]: (
-                    F.col(c["name"]) if c["name"] in batch.columns else F.lit(None)
-                ).cast(c["type"])
-                for c in spec
-            }
-            | {"lsn": F.col("lsn").cast("bigint")}
-        ).withColumn("bucket", self._bucket_expr())
+        rows = self._stored_rows(batch, spec)
         if any(manifest["buckets"].values()):
             with _no_aqe(spark):
                 # Touched buckets: tiny collect (<= n_buckets ints).
                 touched = sorted(
-                    r["bucket"] for r in batch.select("bucket").distinct().collect()
+                    r["bucket"] for r in rows.select("bucket").distinct().collect()
                 )
             if touched:
-                manifest = self._rewrite(spark, manifest, touched, incoming=batch)
+                manifest = self._rewrite(spark, manifest, touched, incoming=rows)
         else:
             # Nothing stored to carry over: rewrite every bucket from the
             # batch alone (one job); the touched buckets are those written.
             manifest = self._rewrite(
-                spark, manifest, range(self.n_buckets), incoming=batch
+                spark, manifest, range(self.n_buckets), incoming=rows
             )
             touched = sorted(int(b) for b, fs in manifest["buckets"].items() if fs)
         self._commit(version + 1, manifest)
@@ -489,54 +486,40 @@ class SnapshotTable:
         """Copy-on-write rewrite of `buckets`, shared by `merge` and
         `compact`; returns the manifest to commit.
 
-        Scans the buckets' stored files, unions in the `incoming` batch
-        (logical columns + `lsn`, `op`, `bucket`), keeps one row per key —
-        the highest `_lsn`, stored rows winning ties (the strict `s.lsn >
-        t._lsn` rule) — drops tombstones below `expire_below`, and writes
-        one file per bucket. The returned manifest swaps those buckets'
-        files in `buckets`, `file_gens` and `delta_files`, and keeps only
-        the `gen_specs` its files still reference.
+        Scans the buckets' stored files, unions in the `incoming` stored
+        rows (`_stored_rows` of the manifest's schema), keeps one row per
+        key — the highest `_lsn`, stored rows winning ties (the strict
+        `s.lsn > t._lsn` rule) — drops tombstones below `expire_below`, and
+        writes one file per bucket. The returned manifest swaps those
+        buckets' files in `buckets`, `file_gens` and `delta_files`, and
+        keeps only the `gen_specs` its files still reference.
         """
-        names = [c["name"] for c in manifest["schema"]]
         parts = []
         if any(manifest["buckets"].get(str(b)) for b in buckets):
-            stored = self._scan(spark, manifest, buckets)
-            parts.append(stored.withColumn("_in", F.lit(0)))
+            parts.append(self._scan(spark, manifest, buckets).withColumn("_in", F.lit(0)))
         if incoming is not None:
-            # A delete persists as a TOMBSTONE row (_op='d'), see the
-            # module docstring.
-            parts.append(
-                incoming.select(
-                    *names,
-                    F.col("lsn").alias("_lsn"),
-                    F.when(F.col("op") == "delete", F.lit("d"))
-                    .otherwise(F.lit("u"))
-                    .alias("_op"),
-                    "bucket",
-                    F.lit(1).alias("_in"),
-                )
-            )
+            parts.append(incoming.withColumn("_in", F.lit(1)))
         rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        # One exchange, hashed on `bucket`: each bucket lands wholly in one
-        # task (so as a single file), and the window's (bucket, *keys)
-        # clustering is met by it — `bucket` is a function of the keys, so
-        # this is the per-key window.
-        out = lww_latest_window(
-            rows.repartition(write_tasks(spark, len(buckets)), F.col("bucket")),
-            keys=["bucket", *self.keys], order_col="_lsn", tie_col="_in",
-        )
-        if expire_below is not None:
-            out = out.filter(
-                (F.col("_op") != "d") | (F.col("_lsn") >= F.lit(expire_below))
+
+        def resolve(rows: DataFrame) -> DataFrame:
+            # The write's one exchange, hashed on `bucket`, meets the
+            # window's (bucket, *keys) clustering: `bucket` is a function of
+            # the keys, so this is the per-key window.
+            out = lww_latest_window(
+                rows, keys=["bucket", *self.keys], order_col="_lsn", tie_col="_in"
             )
+            if expire_below is not None:
+                out = out.filter(
+                    (F.col("_op") != "d") | (F.col("_lsn") >= F.lit(expire_below))
+                )
+            return out.drop("_in")
+
         version = manifest.get("version", 0) + 1
-        out_rel = os.path.join("data", f"v{version:08d}-{uuid.uuid4().hex[:8]}")
-        out_abs = os.path.join(self.root, out_rel)
         with _no_aqe(spark):
-            out.drop("_in").write.partitionBy("bucket").mode("overwrite").parquet(
-                out_abs
+            written = self._write(
+                spark, rows, ["bucket"], len(buckets),
+                f"v{version:08d}-{uuid.uuid4().hex[:8]}", resolve,
             )
-        written = list_bucket_files(out_abs, out_rel)
 
         rewritten = {str(b) for b in buckets}
         old = {f for b in rewritten for f in manifest["buckets"].get(b, [])}
@@ -560,20 +543,70 @@ class SnapshotTable:
             },
         }
 
+    def _stored_rows(self, events: DataFrame, spec: list[dict], *keep: str) -> DataFrame:
+        """Change events (logical columns, `lsn`, `op`) as the rows a data
+        file of `spec` stores: the logical columns projected to `spec`,
+        `_lsn` bigint, `_op`, then the `keep` columns and `bucket`, hashed
+        over the keys at their stored types. A delete persists as a
+        TOMBSTONE row (`_op='d'`), see the module docstring."""
+        return _project(events, spec).select(
+            *[c["name"] for c in spec],
+            F.col("lsn").cast("bigint").alias("_lsn"),
+            F.when(F.col("op") == "delete", F.lit("d")).otherwise(F.lit("u")).alias("_op"),
+            *keep,
+            self._bucket_expr().alias("bucket"),
+        )
+
+    def _write(
+        self, spark: SparkSession, rows: DataFrame, by: list[str], groups: int,
+        name: str, then: Callable[[DataFrame], DataFrame],
+    ) -> dict:
+        """The one writer of the bucket-file layout, behind `_rewrite` and
+        `stage_deltas`. Repartitions `rows` by the `by` columns on
+        `write_tasks(groups)` tasks, so each output group lands wholly in one
+        task and is written as ONE file on every core; applies `then` to the
+        repartitioned rows; writes them to `data/<name>` partitioned by `by`.
+        Returns the files: {value: ...} nested one level per `by` column,
+        each leaf the sorted paths relative to the table root."""
+        rel = os.path.join("data", name)
+        path = os.path.join(self.root, rel)
+        by_group = rows.repartition(write_tasks(spark, groups), *[F.col(c) for c in by])
+        then(by_group).write.partitionBy(*by).mode("overwrite").parquet(path)
+        return _list_files(path, rel, by)
+
+    def stage_deltas(
+        self, spark: SparkSession, events: DataFrame, epochs: list[int],
+        observation: Observation, *metrics: Column,
+    ) -> dict[int, dict[int, list[str]]]:
+        """Write a run of epochs' change events (`_stored_rows` input plus
+        `epoch`) as delta files of the current schema, one file per (epoch,
+        bucket), and compute `metrics` over the stored rows into
+        `observation` as they are written (no Spark job of its own).
+        Nothing is committed: returns {epoch: {bucket: files}} (`{}` for an
+        epoch without a row) for `register_deltas`."""
+        rows = self._stored_rows(events, self.schema_spec(), "epoch")
+        files = self._write(
+            spark, rows, ["epoch", "bucket"], len(epochs) * self.n_buckets,
+            f"delta_{epochs[0]:08d}_{epochs[-1]:08d}_{uuid.uuid4().hex[:8]}",
+            lambda rows: rows.observe(observation, *metrics),
+        )
+        return {e: files.get(e, {}) for e in epochs}
+
     def register_deltas(self, files_by_bucket: dict[int, list[str]]) -> dict:
         """Fast-append commit (merge-on-read): register already-written delta
         files as part of their buckets — a METADATA-ONLY snapshot commit, no
         Spark job, no read of stored data.
 
         This is Iceberg's fast-append / Hudi's MOR ingest path: the apply
-        core writes one epoch-and-bucket-partitioned file set per run, then
-        commits each epoch as a manifest append (milliseconds, driver-side),
-        so per-epoch commit cost is O(1) in table size. Readers resolve key
-        versions by stored LSN (read_internal); `_rewrite` (`compact`, or a
-        `merge` touching the bucket) folds deltas back to one row per key.
+        core stages one epoch-and-bucket-partitioned file set per run
+        (`stage_deltas`), then commits each epoch as a manifest append
+        (milliseconds, driver-side), so per-epoch commit cost is O(1) in
+        table size. Readers resolve key versions by stored LSN
+        (read_internal); `_rewrite` (`compact`, or a `merge` touching the
+        bucket) folds deltas back to one row per key.
 
-        `files_by_bucket`: {bucket: [paths relative to table root]} — files
-        must already carry the logical columns + `_lsn` + `_op`.
+        `files_by_bucket`: {bucket: [paths relative to table root]}, one
+        epoch of `stage_deltas`' result.
         """
         version = self.current_version()
         m = self._read_manifest(version)
@@ -676,37 +709,40 @@ class SnapshotTable:
         return removed
 
 
-def _project(raw: DataFrame, spec: list[dict]) -> DataFrame:
-    """Project one schema generation's files to the logical schema `spec`:
-    rename lineage via coalesce over `sources`, widening via cast, and
-    null-fill for columns the files predate."""
-    present = set(raw.columns)
+def _project(df: DataFrame, spec: list[dict]) -> DataFrame:
+    """Project `df` to the logical schema `spec` — the one projection, for
+    event batches, `merge` batches and stored generations alike: each column
+    coalesces the names of its `sources` (rename lineage, newest first) that
+    `df` has, cast to its spec type (widening), or is a typed null when `df`
+    has none; columns outside every entry's lineage (`lsn`, `op`, `_lsn`,
+    ...) are kept after them."""
+    present = set(df.columns)
+    lineage = {s for c in spec for s in c["sources"]}
     cols = []
     for c in spec:
         sources = [F.col(s) for s in c["sources"] if s in present] or [F.lit(None)]
         value = F.coalesce(*sources) if len(sources) > 1 else sources[0]
         cols.append(value.cast(c["type"]).alias(c["name"]))
-    return raw.select(*cols, F.col("_lsn"), F.col("_op"))
+    return df.select(*cols, *[F.col(c) for c in df.columns if c not in lineage])
 
 
-def list_bucket_files(abs_dir: str, rel_dir: str) -> dict[int, list[str]]:
-    """{bucket: sorted relative parquet paths} for a `bucket=N`-partitioned
-    parquet dataset staged at `abs_dir` (= <table.root>/<rel_dir>).
-
-    The one listing used by every writer of the bucket layout — the apply
-    core's stage write and `_rewrite` — so the physical layout contract
-    (dir naming, file suffix) lives in exactly one place.
-    """
-    out: dict[int, list[str]] = {}
-    for entry in sorted(os.listdir(abs_dir)):
-        if not entry.startswith("bucket="):
+def _list_files(path: str, rel: str, by: Sequence[str]) -> dict:
+    """{value: ...} of the parquet dataset at `path` (= <table.root>/<rel>)
+    partitioned by `by`, nested one level per column; each leaf holds the
+    sorted parquet paths relative to the table root."""
+    col, *rest = by
+    out: dict = {}
+    for entry in sorted(os.listdir(path)):
+        if not entry.startswith(f"{col}="):
             continue
-        b = int(entry.split("=", 1)[1])
-        out[b] = [
-            os.path.join(rel_dir, entry, fn)
-            for fn in sorted(os.listdir(os.path.join(abs_dir, entry)))
-            if fn.endswith(".parquet")
-        ]
+        sub, sub_rel = os.path.join(path, entry), os.path.join(rel, entry)
+        out[int(entry.split("=", 1)[1])] = (
+            _list_files(sub, sub_rel, rest) if rest else [
+                os.path.join(sub_rel, fn)
+                for fn in sorted(os.listdir(sub))
+                if fn.endswith(".parquet")
+            ]
+        )
     return out
 
 
@@ -778,8 +814,10 @@ def _stored_schema(spec: list[dict]) -> T.StructType:
 
 
 def _parse_type(type_str: str) -> T.DataType:
-    """The Spark type of a spec's `type` name: the atomic types and
-    `decimal(p,s)`. Nested types (arrays, maps, structs) raise."""
+    """The Spark type of a spec's `type` name, in any case: the atomic types
+    and `decimal(p,s)`. Nested types (arrays, maps, structs) raise. The one
+    table of type names: the registry canonicalizes through it."""
+    type_str = type_str.lower()
     if m := re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", type_str):
         return T.DecimalType(int(m[1]), int(m[2]))
     mapping = {

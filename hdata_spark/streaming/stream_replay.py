@@ -14,14 +14,18 @@ Structured Streaming tail below are two planners in front of it:
 One call of the core:
 
     schema_change events -> registry (LSN order) -> table manifest catch-up
-    LWW winners per (epoch, key) -> transforms -> registry projection
-    ONE (epoch, bucket)-partitioned stage write of the winners, carrying an
-        observed per-epoch fingerprint (no extra Spark job), on up to
-        shuffle.partitions tasks
+    LWW winners per (epoch, key) -> transforms
+    the sink stages them (`SnapshotTable.stage_deltas`: projection to the
+        table's schema, stored-row encoding, ONE (epoch, bucket)-partitioned
+        write on up to shuffle.partitions tasks), observing a per-epoch
+        fingerprint over the stored rows (no extra Spark job)
     for each epoch, in order:
         per-bucket counts + max LSN from the staged files' parquet footers
         metadata-only manifest append of the epoch's files (fast-append)
         metrics row, then ledger record
+
+How a row is stored and where its file goes is the sink's alone
+(sinks/snapshot.py); this module only decides what to apply and records it.
 
 The reference's Kafka reader is its streaming archetype — an offset-tracked
 topic tail, bounded per run by `max.fetch.size` / `max.wait.second`
@@ -54,7 +58,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from dataclasses import dataclass
 from urllib.parse import unquote
 
@@ -65,12 +68,7 @@ from pyspark.sql import functions as F
 from hdata_spark.functions.text import normalize_lang_col
 from hdata_spark.operators.dedup import lww_latest
 from hdata_spark.plans.schema_registry import SchemaRegistry, spec_evolves
-from hdata_spark.sinks.snapshot import (
-    SnapshotTable,
-    delta_footer_stats,
-    list_bucket_files,
-    write_tasks,
-)
+from hdata_spark.sinks.snapshot import SnapshotTable, delta_footer_stats
 from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
 
@@ -98,11 +96,10 @@ def _compact_if_due(spark: SparkSession, table: SnapshotTable, cfg: ReplayConfig
     return True
 
 
-def _transform(data: DataFrame, registry: SchemaRegistry) -> DataFrame:
-    """Per-event transforms on JVM built-ins + registry projection."""
+def _transform(data: DataFrame) -> DataFrame:
+    """Per-event transforms on JVM built-ins."""
     data = data.withColumn("lang", normalize_lang_col(F.col("lang")))
-    data = data.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-    return registry.project_batch(data)
+    return data.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
 def _evolve_table_forward(table: SnapshotTable, registry: SchemaRegistry) -> None:
@@ -177,12 +174,12 @@ def apply_epochs(
     data = frame.filter(F.col("op") != "schema_change").drop(
         "sc_kind", "sc_column", "sc_arg"
     )
-    # One pass for the whole run: per-epoch LWW winners, STAGED to an
-    # (epoch, bucket)-partitioned parquet dataset inside the table. Staging
-    # (instead of .persist) matters twice over: the columnar cache builder
-    # anti-scales with cores (measured 22s@8 -> 57s@32 for the same data),
-    # while a parquet write scales; and at 10^10 events the winners don't
-    # fit executor storage memory anyway.
+    # One pass for the whole run: per-epoch LWW winners, STAGED by the
+    # sink to an (epoch, bucket)-partitioned parquet dataset inside the
+    # table. Staging (instead of .persist) matters twice over: the columnar
+    # cache builder anti-scales with cores (measured 22s@8 -> 57s@32 for the
+    # same data), while a parquet write scales; and at 10^10 events the
+    # winners don't fit executor storage memory anyway.
     # Dedup FIRST, transform AFTER: the winner set is typically a small
     # fraction of the event stream (LWW collapses per-key churn), so running
     # the vectorized transforms (sha256, lang normalization, projection) on
@@ -193,48 +190,21 @@ def apply_epochs(
     # operators.dedup). Transforms are row-wise, so the reorder is
     # semantics-free.
     winners = lww_latest(data, keys=("epoch", *table.keys), order_col="lsn")
-    winners = _transform(winners, registry)
-    # Staged files carry exactly their generation's declared schema (the
-    # snapshot scan reads with it): the projection casts the logical columns.
-    staged = winners.select(
-        *[c["name"] for c in registry.spec],
-        F.col("lsn").cast("bigint").alias("_lsn"),
-        F.when(F.col("op") == "delete", F.lit("d")).otherwise(F.lit("u")).alias("_op"),
-        "epoch",
-        table._bucket_expr().alias("bucket"),
-    )
     # Order-insensitive per-epoch fingerprint: BIT_XOR of xxhash64(keys,
-    # lsn) over the epoch's winners. XOR is commutative and overflow-free
-    # (a SUM of hashes would overflow under ANSI mode). Observed on the
-    # stage write itself, so it costs no Spark job of its own; observed
-    # metrics reject FILTER clauses, hence the CASE per epoch.
+    # lsn) over the epoch's stored rows. XOR is commutative and
+    # overflow-free (a SUM of hashes would overflow under ANSI mode).
+    # Observed on the stage write itself, so it costs no Spark job of its
+    # own; observed metrics reject FILTER clauses, hence the CASE per epoch.
     key_hash = F.xxhash64(*[F.col(k) for k in table.keys], F.col("_lsn"))
     fingerprint = Observation()
-    stage_rel = os.path.join(
-        "data", f"delta_{epochs[0]:08d}_{epochs[-1]:08d}_{uuid.uuid4().hex[:8]}"
-    )
-    # repartition BY (epoch, bucket): each output group lands wholly in one
-    # task, so the dynamic-partition write emits exactly one file per
-    # (epoch, bucket), on every core (`write_tasks`).
-    (
-        staged.repartition(
-            write_tasks(spark, len(epochs) * table.n_buckets),
-            F.col("epoch"), F.col("bucket"),
-        )
-        .observe(
-            fingerprint,
-            *[
-                F.bit_xor(
-                    F.when(F.col("epoch") == e, key_hash).otherwise(
-                        F.lit(0).cast("long")
-                    )
-                ).alias(f"fp_{e}")
-                for e in epochs
-            ],
-        )
-        .write.partitionBy("epoch", "bucket")
-        .mode("overwrite")
-        .parquet(os.path.join(table.root, stage_rel))
+    staged = table.stage_deltas(
+        spark, _transform(winners), epochs, fingerprint,
+        *[
+            F.bit_xor(
+                F.when(F.col("epoch") == e, key_hash).otherwise(F.lit(0).cast("long"))
+            ).alias(f"fp_{e}")
+            for e in epochs
+        ],
     )
     observed = fingerprint.get
 
@@ -244,9 +214,7 @@ def apply_epochs(
         # commit leaves a committed-but-unledgered epoch; its re-apply
         # stages and registers IDENTICAL-content rows, and the MOR read's
         # LWW window keeps exactly one copy per key — a no-op on final state.
-        rel = os.path.join(stage_rel, f"epoch={epoch}")
-        abs_dir = os.path.join(table.root, rel)
-        files = list_bucket_files(abs_dir, rel) if os.path.isdir(abs_dir) else {}
+        files = staged[epoch]
         # Per-bucket counts and max LSN come off the staged files' parquet
         # FOOTERS — a driver-side metadata read, not a Spark job over files
         # this call just wrote (see sinks.snapshot.delta_footer_stats).
@@ -384,7 +352,6 @@ def stream_replay(
     cfg: ReplayConfig | None = None,
     max_files_per_trigger: int = 4,
     timeout_sec: int = 600,
-    _pre_start_hook=None,
 ) -> dict:
     """Drain the event-log directory through Structured Streaming.
 
@@ -392,10 +359,6 @@ def stream_replay(
     in `events_dir` in checkpointed micro-batches of `max_files_per_trigger`
     files, then stops. Re-invoking with the same checkpoint resumes after
     the last committed trigger — new files only (the WAL-tail loop).
-
-    `_pre_start_hook` is test-only: invoked between the WAL schema read and
-    the stream start, it lands a segment the way a concurrent WAL writer
-    would.
     """
     cfg = cfg or ReplayConfig()
     # The drain's one job outside its micro-batches: the stream reads every
@@ -408,9 +371,6 @@ def stream_replay(
         if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
             raise
         return {"batches": 0, "final_snapshot_version": table.current_version()}
-
-    if _pre_start_hook is not None:
-        _pre_start_hook()
 
     n_batches = {"n": 0}
 

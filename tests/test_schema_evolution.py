@@ -159,6 +159,18 @@ def test_rename_reads_old_physical_files(spark, tmp_path):
     out3 = table.read(spark).toPandas()
     assert out3.iloc[0]["stargazers"] == 7
 
+    # a merge batch that still names renamed columns stores their values
+    # under the new names, as events do
+    reg.apply_change("rename", "commit", "sha", at_lsn=5)
+    table.evolve_schema(reg.spec)
+    table.merge(spark, spark.createDataFrame(pd.DataFrame(
+        [{"repo": "o/r", "path": "b.py", "commit": "c6", "lang": "python",
+          "content": "y", "stars": 8, "lsn": 6, "op": "insert"}]
+    )))
+    out4 = table.read(spark).toPandas().set_index("path")
+    assert out4.loc["b.py", "sha"] == "c6" and out4.loc["b.py", "stargazers"] == 8
+    assert out4.loc["a.py", "sha"] == "c1"
+
 
 def test_crash_window_in_schema_change_epoch_resumes(spark, tmp_path, evo_cfg):
     """Crash AFTER the registry persisted a change but BEFORE the epoch's
@@ -324,3 +336,23 @@ def test_registry_apply_change_idempotent_per_lsn(tmp_path):
     spec = reg.apply_change("add", "stars", "int", at_lsn=5)  # crash re-apply
     assert len(reg.versions) == n
     assert any(c["name"] == "stars" for c in spec)
+
+
+def test_registry_refuses_a_type_the_sink_cannot_store(tmp_path):
+    """`add` and `widen` check their type against the sink's type table
+    BEFORE persisting: a refused change leaves no version behind, so a
+    reopened registry does not claim its LSN and the table can still
+    follow the registry."""
+    path = str(tmp_path / "r.json")
+    reg = SchemaRegistry(state_path=path)
+    with pytest.raises(ValueError, match="unsupported type"):
+        reg.apply_change("add", "stars", "varchar(10)", at_lsn=7)
+    reopened = SchemaRegistry(state_path=path)
+    assert len(reopened.versions) == 1 and not reopened.has_lsn(7)
+
+    reopened.apply_change("add", "stars", "INTEGER", at_lsn=8)
+    assert reopened.spec[-1]["type"] == "int"
+    with pytest.raises(ValueError, match="unsupported type"):
+        reopened.apply_change("widen", "stars", "varchar(10)", at_lsn=9)
+    reopened = SchemaRegistry(state_path=path)
+    assert len(reopened.versions) == 2 and not reopened.has_lsn(9)

@@ -366,12 +366,16 @@ def test_schema_change_only_epoch_commits_empty_record(spark, tmp_path):
     assert t_s.columns() == t_b.columns() and t_b.columns()[-1] == "stars"
 
 
-def test_stream_concurrent_writer_schema_change_not_skipped(spark, tmp_path):
+def test_stream_concurrent_writer_schema_change_not_skipped(
+    spark, tmp_path, monkeypatch
+):
     """A WAL segment landing BETWEEN the WAL schema read and the stream's
     AvailableNow snapshot (a concurrent writer) must still get its
     schema_change applied: each micro-batch reads its schema changes from
     the files its own source-log entry names (`_batch_schema_changes`), not
     from anything read before the stream started."""
+    import importlib
+
     from hdata_spark.fixtures import CDCFixtureConfig, generate_base, generate_events
     from hdata_spark.streaming.replay import ReplayConfig, replay
 
@@ -393,10 +397,18 @@ def test_stream_concurrent_writer_schema_change_not_skipped(spark, tmp_path):
 
     table, ledger, metrics, registry, ckpt = _mk(tmp_path, "race")
     table.overwrite(spark, spark.createDataFrame(base))
+    # the package re-exports a function of the module's name
+    sr = importlib.import_module("hdata_spark.streaming.stream_replay")
+    drain = sr.drain_available_now
+
+    def land_then_drain(*args):
+        _write_event_files(injected, events_dir)  # lands before the start
+        return drain(*args)
+
+    monkeypatch.setattr(sr, "drain_available_now", land_then_drain)
     stream_replay(
         spark, events_dir, table, ledger, metrics, registry, ckpt,
         max_files_per_trigger=1,
-        _pre_start_hook=lambda: _write_event_files(injected, events_dir),
     )
     assert "stars" in table.columns()  # the racing change was NOT skipped
 
