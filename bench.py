@@ -319,12 +319,13 @@ def run_stream_replay(
     work = tempfile.mkdtemp(prefix=f"bench_stream_{cpus}_", dir=scratch_root)
     base = spark.read.parquet(os.path.join(fixture, "base.parquet"))
     # Compaction folds deltas ONCE at the tail regardless of trigger count
-    # (threshold = (n_triggers - 1) x N_BUCKETS: only the LAST batch's file
-    # count crosses it) — the per-batch commit stays metadata-only, the
-    # measured work always includes exactly one delta fold, and one fold
-    # per ~threshold batches is the amortized cadence a long-running tail
-    # sees. Keeping the fold in the leg at every files_per_trigger setting
-    # is what makes fpt experiments comparable.
+    # (threshold = (n_triggers - 1) x N_BUCKETS: only the LAST batch's
+    # count of (delta file, bucket) pairs crosses it) — the per-batch
+    # commit stays metadata-only, the measured work always includes
+    # exactly one delta fold, and one fold per ~threshold batches is the
+    # amortized cadence a long-running tail sees. Keeping the fold in the
+    # leg at every files_per_trigger setting is what makes fpt experiments
+    # comparable.
     n_triggers = max(n_files // files_per_trigger, 1)
     cfg = ReplayConfig(
         compact_delta_files=max((n_triggers - 1) * N_BUCKETS, 0)
@@ -784,7 +785,7 @@ vs a true 32-core one (without pinning, local[8] borrows the other 24 cores
 for GC and codec threads and the comparison is meaningless).
 
 Workload: full CDC pipeline — LWW dedup (broadcast-semi-join plan) ->
-vectorized transforms -> (epoch, bucket)-partitioned winner staging ->
+vectorized transforms -> epoch-partitioned winner staging ->
 per-epoch fast-append commits (metadata-only, merge-on-read) -> ledger +
 per-partition metrics -> end-of-run compaction. {report["events"]:,} change
 events over a {cfg.base_rows:,}-row base table, {EPOCHS} epochs, fixture

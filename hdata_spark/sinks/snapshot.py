@@ -8,10 +8,20 @@ runtime jar) we implement the identical semantics on plain parquet with a
 manifest + atomic pointer — the same design Iceberg itself uses:
 
 - data files are immutable parquet, hash-bucketed by key:
-  ``bucket = pmod(xxhash64(repo, path), n_buckets)``;
-- a *manifest* (JSON) maps bucket -> data files and records the logical
-  schema, including rename lineage (``sources``: newest-first physical
-  column names — the parquet-fallback analog of Iceberg column IDs);
+  ``bucket = pmod(xxhash64(repo, path), n_buckets)``. A *base* file holds
+  one bucket (``data/v<version>-*/bucket=<b>/``). A fast-append *delta*
+  file holds every bucket one write task staged for one epoch, sorted by
+  ``bucket``, which it stores as a column (``data/delta_*/epoch=<e>/``): a
+  file is sized by the data, not by the bucket count;
+- a *manifest* (JSON) maps bucket -> base files and lists each delta file
+  once with its *live bucket set*, as an Iceberg manifest records each data
+  file's partition tuple. The set starts as the buckets the file holds; a
+  bucket rewrite removes the buckets it folded, scans read a delta file for
+  its live buckets only, and the file leaves the manifest once its set is
+  empty. The manifest also records the logical schema, including rename
+  lineage (``sources``: newest-first names), and, per schema generation, a
+  stable id per column (Iceberg's column IDs) by which old generations are
+  projected;
 - ``_latest`` is a pointer file updated via ``os.replace`` (atomic on POSIX):
   readers always see a complete snapshot, never a partial commit;
 - MERGE and compaction are one copy-on-write **bucket rewrite**
@@ -22,11 +32,17 @@ manifest + atomic pointer — the same design Iceberg itself uses:
   buckets, 95% of the table is neither read nor written.
 
 This module alone owns how a row is stored, as Iceberg's table format
-alone defines its data files: the projection to a logical schema
-(`_project`), the event -> stored-row encoding (`_stored_rows`: `_lsn`
-bigint, `_op`, `bucket`), the bucket-file layout (`_write`, behind
-`_rewrite` and the apply core's `stage_deltas`) and the spec type names
-(`_parse_type`, which the schema registry canonicalizes through).
+alone defines its data files: the projection of a batch to a logical
+schema (`_project`) and of a stored generation to it (`_project_gen`, by
+column id), the event -> stored-row encoding (`_stored_rows`: `_lsn`
+bigint, `_op`, `bucket`), the file layout (`_write`, behind `_rewrite` and
+the apply core's `stage_deltas`) and the spec type names (`_parse_type`,
+which the schema registry canonicalizes through).
+
+Compaction cadence: `delta_bucket_count` counts (delta file, live bucket)
+pairs — the delta files a one-file-per-bucket layout would hold — so the
+apply core's compaction rule fires where it did before delta files were
+shared by buckets.
 
 Idempotence anchor: every stored row carries ``_lsn`` (the LSN that produced
 it). Every key resolves to its highest-``_lsn`` version — at read time across
@@ -52,7 +68,7 @@ import os
 import re
 import shutil
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -194,10 +210,12 @@ class SnapshotTable:
                 m = json.load(f)
         m.setdefault("schema", _default_schema())
         m.setdefault("gen", 0)
-        m.setdefault("gen_specs", {"0": m["schema"]})
+        m.setdefault(
+            "gen_specs", {"0": [dict(c, id=i) for i, c in enumerate(m["schema"])]}
+        )
         m.setdefault("file_gens", {})
-        m.setdefault("delta_files", [])
-        return m
+        m.setdefault("delta_files", {})
+        return _upgrade(m)
 
     def _commit(self, version: int, manifest: dict) -> None:
         """Atomic snapshot commit with optimistic concurrency.
@@ -217,7 +235,11 @@ class SnapshotTable:
         manifest["keys"] = list(self.keys)
         manifest["n_buckets"] = self.n_buckets
         manifest["bucket_cols"] = list(self.bucket_cols)
-        manifest["has_deltas"] = bool(manifest["delta_files"])
+        # A bucket listing several files holds deltas of the one-file-per-
+        # bucket layout (see `_upgrade`); `_rewrite` writes one per bucket.
+        manifest["has_deltas"] = bool(manifest["delta_files"]) or any(
+            len(fs) > 1 for fs in manifest["buckets"].values()
+        )
         path = self._manifest_path(version)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -245,16 +267,21 @@ class SnapshotTable:
     def max_stored_lsn(self) -> int:
         """Highest _lsn in the current snapshot (0 for an empty table).
 
-        Read from the parquet footers of the manifest's files: no Spark job.
-        The maximum over every stored version (superseded rows and
-        tombstones included) equals the maximum over the LWW winners, since
-        each key's winner is its highest-LSN version.
+        Read with pyarrow, no Spark job: base files from their footers,
+        delta files for their live buckets only. The maximum over every
+        stored version (superseded rows and tombstones included) equals the
+        maximum over the LWW winners, since each key's winner is its
+        highest-LSN version.
         """
         m = self._read_manifest(self.current_version())
-        stats = delta_footer_stats(
-            self.root, {int(b): fs for b, fs in m["buckets"].items()}
+        base = [_footer_max_lsn(os.path.join(self.root, f))
+                for fs in m["buckets"].values() for f in fs]
+        deltas = delta_footer_stats(self.root, m["delta_files"])
+        return max(
+            [x for x in base if x is not None]
+            + [mx for bs in deltas.values() for _, mx in bs.values()],
+            default=0,
         )
-        return max((s["max_applied_lsn"] for s in stats), default=0)
 
     # ---------------- reads ----------------
 
@@ -264,6 +291,22 @@ class SnapshotTable:
             F.lit(self.n_buckets),
         ).cast("int")
 
+    def _files(
+        self, m: dict, buckets: Sequence[int] | None = None
+    ) -> list[tuple[str, list[int] | None]]:
+        """The data files of manifest `m` that hold rows of `buckets` (all
+        when None): each base file with None, each delta file with the
+        buckets of its live set to read."""
+        wanted = None if buckets is None else {int(b) for b in buckets}
+        out: list[tuple[str, list[int] | None]] = [
+            (f, None) for b, fs in m["buckets"].items()
+            if wanted is None or int(b) in wanted for f in fs
+        ]
+        for f, live in m["delta_files"].items():
+            if read := [b for b in live if wanted is None or b in wanted]:
+                out.append((f, read))
+        return out
+
     def _scan(
         self,
         spark: SparkSession,
@@ -272,14 +315,12 @@ class SnapshotTable:
         spec: list[dict] | None = None,
     ) -> DataFrame:
         """Every stored row version in manifest `m`'s files of `buckets` (all
-        when None), projected to `spec` (default: `m`'s schema), with
-        `bucket`. No LWW resolution: `read_internal` and `_rewrite` add it."""
-        spec = spec or m["schema"]
-        files_by_bucket = m["buckets"]
-        if buckets is not None:
-            wanted = {str(b) for b in buckets}
-            files_by_bucket = {b: fs for b, fs in files_by_bucket.items() if b in wanted}
-        files = [f for fs in files_by_bucket.values() for f in fs]
+        when None), projected to `spec` (a `gen_specs` entry, with column
+        ids; default: `m`'s current generation), with `bucket`. A delta
+        file is read for its live buckets only. No LWW resolution:
+        `read_internal` and `_rewrite` add it."""
+        spec = spec or m["gen_specs"][str(m["gen"])]
+        files = self._files(m, buckets)
         if not files:
             schema = _stored_schema(spec).add("bucket", T.IntegerType())
             return spark.createDataFrame([], schema)
@@ -289,18 +330,22 @@ class SnapshotTable:
         # Iceberg plans one: each generation is read with the schema its
         # `gen_specs` entry declares (no schema-inference job) from the
         # manifest's file list (no file-listing job), then projected to the
-        # target logical schema (rename lineage via `sources` coalesce,
-        # widen via cast); generations then union. This is what makes
-        # add/rename/widen metadata-only: old files are never rewritten,
-        # just re-projected — and type-widened generations can coexist.
+        # target logical schema by column id (`_project_gen`); generations
+        # then union. This is what makes add/rename/widen metadata-only:
+        # old files are never rewritten, just re-projected — and
+        # type-widened generations can coexist. Delta files are grouped
+        # further by the buckets to read, and filtered on their stored
+        # `bucket` (row-group min/max prunes the rest, since each file is
+        # sorted by it).
         # Writer invariant: every file is written through `_stored_rows`, so
         # it carries exactly its generation's declared schema — logical
-        # columns at their spec types, `_lsn` bigint, `_op` string. A file
-        # that does not fails the scan with a type mismatch.
-        file_gens = m["file_gens"]
-        by_gen: dict[int, list[str]] = {}
-        for f in files:
-            by_gen.setdefault(int(file_gens.get(f, 0)), []).append(f)
+        # columns at their spec types, `_lsn` bigint, `_op` string, and a
+        # delta file `bucket` int. A file that does not fails the scan with
+        # a type mismatch.
+        groups: dict[tuple[int, tuple[int, ...]], list[str]] = {}
+        for f, live in files:
+            key = (int(m["file_gens"].get(f, 0)), tuple(live or ()))
+            groups.setdefault(key, []).append(os.path.join(self.root, f))
         frames = []
         # Spark lists more than `parallelPartitionDiscovery.threshold` (32)
         # explicit paths with a distributed job; the manifest already names
@@ -310,18 +355,26 @@ class SnapshotTable:
             spark, "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(2**31 - 1),
         ):
-            for g, fs in sorted(by_gen.items()):
-                raw = spark.read.schema(
-                    _stored_schema(m["gen_specs"][str(g)])
-                ).parquet(*[os.path.join(self.root, f) for f in fs])
-                frames.append(_project(raw, spec))
+            for (g, live), paths in sorted(groups.items()):
+                gen_spec = m["gen_specs"][str(g)]
+                schema = _stored_schema(gen_spec)
+                if live:
+                    raw = spark.read.schema(schema.add("bucket", T.IntegerType()))
+                    raw = raw.parquet(*paths).filter(F.col("bucket").isin(*live))
+                    frames.append(_project_gen(raw, gen_spec, spec))
+                else:
+                    # A base file's `bucket` is directory-encoded and a pure
+                    # function of the keys: recompute it instead of relying
+                    # on partition discovery over explicit file paths.
+                    raw = spark.read.schema(schema).parquet(*paths)
+                    frames.append(
+                        _project_gen(raw, gen_spec, spec)
+                        .withColumn("bucket", self._bucket_expr())
+                    )
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)
-        # `bucket` is directory-encoded at write time (partitionBy) and a pure
-        # function of the keys, so recompute it instead of relying on
-        # partition discovery over explicit file paths.
-        return out.withColumn("bucket", self._bucket_expr())
+        return out
 
     def read_internal(
         self,
@@ -335,13 +388,14 @@ class SnapshotTable:
         Bucket pruning is manifest-level file pruning — pruned buckets' files
         are never opened (equivalent of Iceberg partition pruning; reference
         analog: HBase region-range scan, hdata-hbase/.../HBaseSplitter.java:57-133).
-        Rename lineage resolves via coalesce over the column's historical
-        physical names (newest first) — the parquet stand-in for column IDs.
+        Each stored generation is projected to the schema by column id, so
+        a rename reads old files under the new name.
 
         `version` time-travels to an older snapshot (manifests are retained;
         valid until `vacuum()` expires that snapshot's files, exactly
-        Iceberg's snapshot-expiry contract). `spec` projects it to another
-        logical schema than its own (default: the version's schema).
+        Iceberg's snapshot-expiry contract). `spec` (a `gen_specs` entry,
+        with column ids) projects it to another logical schema than its own
+        (default: the version's schema).
         """
         m = self._read_manifest(
             self.current_version() if version is None else version
@@ -384,7 +438,8 @@ class SnapshotTable:
         lineage + widen casts + null-fill), so a feed spanning a schema
         evolution boundary is well-formed.
         """
-        spec = self.schema_spec()
+        m = self._read_manifest(self.current_version())
+        spec = m["gen_specs"][str(m["gen"])]
         a = self.read_internal(spark, version=v_from, spec=spec).alias("a")
         b = self.read_internal(spark, version=v_to, spec=spec).alias("b")
         cond = None
@@ -405,7 +460,7 @@ class SnapshotTable:
             )
             .otherwise(F.lit(None))
         )
-        logical = self.columns()
+        logical = [c["name"] for c in spec]
         # Payload comes from the NEW side whenever its row exists — a
         # coalesce would resurrect the old value for updates that set a
         # column to NULL. Only deletes-by-absence fall back to the old row.
@@ -455,7 +510,7 @@ class SnapshotTable:
                 "declare them with evolve_schema"
             )
         rows = self._stored_rows(batch, spec)
-        if any(manifest["buckets"].values()):
+        if self._files(manifest):
             with _no_aqe(spark):
                 # Touched buckets: tiny collect (<= n_buckets ints).
                 touched = sorted(
@@ -486,58 +541,58 @@ class SnapshotTable:
         """Copy-on-write rewrite of `buckets`, shared by `merge` and
         `compact`; returns the manifest to commit.
 
-        Scans the buckets' stored files, unions in the `incoming` stored
+        Scans the buckets' stored rows, unions in the `incoming` stored
         rows (`_stored_rows` of the manifest's schema), keeps one row per
         key — the highest `_lsn`, stored rows winning ties (the strict
         `s.lsn > t._lsn` rule) — drops tombstones below `expire_below`, and
-        writes one file per bucket. The returned manifest swaps those
-        buckets' files in `buckets`, `file_gens` and `delta_files`, and
-        keeps only the `gen_specs` its files still reference.
+        writes one base file per bucket. The returned manifest swaps those
+        buckets' base files, removes the buckets from every delta file's
+        live set (dropping a file whose set empties), and keeps only the
+        `gen_specs` its files still reference.
         """
         parts = []
-        if any(manifest["buckets"].get(str(b)) for b in buckets):
+        if self._files(manifest, buckets):
             parts.append(self._scan(spark, manifest, buckets).withColumn("_in", F.lit(0)))
         if incoming is not None:
             parts.append(incoming.withColumn("_in", F.lit(1)))
         rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
-        def resolve(rows: DataFrame) -> DataFrame:
+        version = manifest.get("version", 0) + 1
+        with _no_aqe(spark):
             # The write's one exchange, hashed on `bucket`, meets the
             # window's (bucket, *keys) clustering: `bucket` is a function of
             # the keys, so this is the per-key window.
-            out = lww_latest_window(
-                rows, keys=["bucket", *self.keys], order_col="_lsn", tie_col="_in"
+            rows = lww_latest_window(
+                rows.repartition(write_tasks(spark, len(buckets)), F.col("bucket")),
+                keys=["bucket", *self.keys], order_col="_lsn", tie_col="_in",
             )
             if expire_below is not None:
-                out = out.filter(
+                rows = rows.filter(
                     (F.col("_op") != "d") | (F.col("_lsn") >= F.lit(expire_below))
                 )
-            return out.drop("_in")
-
-        version = manifest.get("version", 0) + 1
-        with _no_aqe(spark):
             written = self._write(
-                spark, rows, ["bucket"], len(buckets),
-                f"v{version:08d}-{uuid.uuid4().hex[:8]}", resolve,
+                rows.drop("_in"), "bucket", f"v{version:08d}-{uuid.uuid4().hex[:8]}"
             )
 
-        rewritten = {str(b) for b in buckets}
-        old = {f for b in rewritten for f in manifest["buckets"].get(b, [])}
-        new_buckets = {
-            b: fs for b, fs in manifest["buckets"].items() if b not in rewritten
+        rewritten = {int(b) for b in buckets}
+        base = {
+            b: fs for b, fs in manifest["buckets"].items() if int(b) not in rewritten
         } | {str(b): fs for b, fs in written.items()}
+        deltas = {
+            f: kept for f, live in manifest["delta_files"].items()
+            if (kept := [b for b in live if b not in rewritten])
+        }
+        live_files = {f for fs in base.values() for f in fs} | deltas.keys()
         gen = int(manifest["gen"])
         file_gens = {
-            f: g for f, g in manifest["file_gens"].items() if f not in old
+            f: g for f, g in manifest["file_gens"].items() if f in live_files
         } | {f: gen for fs in written.values() for f in fs}
-        live_gens = {str(gen)} | {
-            str(file_gens.get(f, 0)) for fs in new_buckets.values() for f in fs
-        }
+        live_gens = {str(gen)} | {str(g) for g in file_gens.values()}
         return {
             **manifest,
-            "buckets": new_buckets,
+            "buckets": base,
             "file_gens": file_gens,
-            "delta_files": [f for f in manifest["delta_files"] if f not in old],
+            "delta_files": deltas,
             "gen_specs": {
                 g: s for g, s in manifest["gen_specs"].items() if g in live_gens
             },
@@ -557,79 +612,90 @@ class SnapshotTable:
             self._bucket_expr().alias("bucket"),
         )
 
-    def _write(
-        self, spark: SparkSession, rows: DataFrame, by: list[str], groups: int,
-        name: str, then: Callable[[DataFrame], DataFrame],
-    ) -> dict:
-        """The one writer of the bucket-file layout, behind `_rewrite` and
-        `stage_deltas`. Repartitions `rows` by the `by` columns on
-        `write_tasks(groups)` tasks, so each output group lands wholly in one
-        task and is written as ONE file on every core; applies `then` to the
-        repartitioned rows; writes them to `data/<name>` partitioned by `by`.
-        Returns the files: {value: ...} nested one level per `by` column,
-        each leaf the sorted paths relative to the table root."""
+    def _write(self, rows: DataFrame, by: str, name: str) -> dict[int, list[str]]:
+        """The one writer of data files, behind `_rewrite` (`by` = bucket)
+        and `stage_deltas` (`by` = epoch): writes `rows`, as their caller
+        partitioned them, to `data/<name>` partitioned by the `by` column.
+        Returns {value: sorted parquet paths relative to the table root}."""
         rel = os.path.join("data", name)
         path = os.path.join(self.root, rel)
-        by_group = rows.repartition(write_tasks(spark, groups), *[F.col(c) for c in by])
-        then(by_group).write.partitionBy(*by).mode("overwrite").parquet(path)
-        return _list_files(path, rel, by)
+        rows.write.partitionBy(by).mode("overwrite").parquet(path)
+        return {
+            int(d.split("=", 1)[1]): [
+                os.path.join(rel, d, fn)
+                for fn in sorted(os.listdir(os.path.join(path, d)))
+                if fn.endswith(".parquet")
+            ]
+            for d in sorted(os.listdir(path)) if d.startswith(f"{by}=")
+        }
 
     def stage_deltas(
         self, spark: SparkSession, events: DataFrame, epochs: list[int],
         observation: Observation, *metrics: Column,
-    ) -> dict[int, dict[int, list[str]]]:
+    ) -> dict[int, list[str]]:
         """Write a run of epochs' change events (`_stored_rows` input plus
-        `epoch`) as delta files of the current schema, one file per (epoch,
-        bucket), and compute `metrics` over the stored rows into
-        `observation` as they are written (no Spark job of its own).
-        Nothing is committed: returns {epoch: {bucket: files}} (`{}` for an
-        epoch without a row) for `register_deltas`."""
+        `epoch`) as delta files of the current schema, and compute `metrics`
+        over the stored rows into `observation` as they are written (no
+        Spark job of its own). Nothing is committed: returns {epoch: files}
+        (`[]` for an epoch without a row) for `register_deltas`.
+
+        The rows are rebalanced on `epoch`, so AQE sizes the write tasks
+        from the bytes staged, not from a group count: a small run writes
+        one file per epoch, a large one splits each epoch into files of the
+        advisory partition size. Each file holds every bucket its task
+        got, sorted by (epoch, bucket), with `bucket` stored."""
         rows = self._stored_rows(events, self.schema_spec(), "epoch")
         files = self._write(
-            spark, rows, ["epoch", "bucket"], len(epochs) * self.n_buckets,
+            rows.hint("rebalance", F.col("epoch"))
+            .observe(observation, *metrics)
+            .sortWithinPartitions("epoch", "bucket"),
+            "epoch",
             f"delta_{epochs[0]:08d}_{epochs[-1]:08d}_{uuid.uuid4().hex[:8]}",
-            lambda rows: rows.observe(observation, *metrics),
         )
-        return {e: files.get(e, {}) for e in epochs}
+        return {e: files.get(e, []) for e in epochs}
 
-    def register_deltas(self, files_by_bucket: dict[int, list[str]]) -> dict:
+    def register_deltas(self, files: dict[str, Sequence[int]]) -> dict:
         """Fast-append commit (merge-on-read): register already-written delta
-        files as part of their buckets — a METADATA-ONLY snapshot commit, no
-        Spark job, no read of stored data.
+        files with their live bucket sets — a METADATA-ONLY snapshot commit,
+        no Spark job, no read of stored data.
 
         This is Iceberg's fast-append / Hudi's MOR ingest path: the apply
-        core stages one epoch-and-bucket-partitioned file set per run
-        (`stage_deltas`), then commits each epoch as a manifest append
-        (milliseconds, driver-side), so per-epoch commit cost is O(1) in
-        table size. Readers resolve key versions by stored LSN
-        (read_internal); `_rewrite` (`compact`, or a `merge` touching the
-        bucket) folds deltas back to one row per key.
+        core stages one epoch-partitioned file set per run (`stage_deltas`),
+        then commits each epoch as a manifest append (milliseconds,
+        driver-side), so per-epoch commit cost is O(1) in table size.
+        Readers resolve key versions by stored LSN (read_internal);
+        `_rewrite` (`compact`, or a `merge` touching a bucket) folds deltas
+        back to one row per key.
 
-        `files_by_bucket`: {bucket: [paths relative to table root]}, one
-        epoch of `stage_deltas`' result.
+        `files`: {path relative to the table root: the buckets it holds},
+        one epoch of `stage_deltas`' files (`delta_footer_stats` gives the
+        buckets).
         """
         version = self.current_version()
         m = self._read_manifest(version)
-        added = {str(b): list(fs) for b, fs in files_by_bucket.items() if fs}
-        files = [f for fs in added.values() for f in fs]
+        added = {f: sorted(bs) for f, bs in files.items() if bs}
         m.update(
-            buckets=m["buckets"]
-            | {b: m["buckets"].get(b, []) + fs for b, fs in added.items()},
-            file_gens=m["file_gens"] | dict.fromkeys(files, int(m["gen"])),
-            delta_files=m["delta_files"] + files,
+            delta_files=m["delta_files"] | added,
+            file_gens=m["file_gens"] | dict.fromkeys(added, int(m["gen"])),
         )
         self._commit(version + 1, m)
         return {
             "version": version + 1,
-            "applied_buckets": len(files_by_bucket),
-            "files_registered": len(files),
+            "applied_buckets": len({b for bs in added.values() for b in bs}),
+            "files_registered": len(added),
         }
 
     def delta_file_count(self) -> int:
-        """Number of UNCOMPACTED delta files (the MOR compaction trigger);
-        0 after compact()."""
+        """Number of UNCOMPACTED delta files; 0 after compact()."""
         m = self._read_manifest(self.current_version())
         return len(m["delta_files"])
+
+    def delta_bucket_count(self) -> int:
+        """Number of (delta file, live bucket) pairs: the delta files a
+        one-file-per-bucket layout would hold, and the measure of the
+        compaction rule; 0 after compact()."""
+        m = self._read_manifest(self.current_version())
+        return sum(len(live) for live in m["delta_files"].values())
 
     def overwrite(self, spark: SparkSession, df: DataFrame, lsn_col=None) -> dict:
         """Full load. df has the logical columns (+ optional lsn column).
@@ -660,10 +726,12 @@ class SnapshotTable:
             return version
         for c in new_spec:
             _parse_type(c["type"])  # fail here, not on every later scan
-        manifest["schema"] = new_spec
         gen = int(manifest["gen"]) + 1
+        manifest["gen_specs"] = {
+            **manifest["gen_specs"], str(gen): _with_ids(manifest, new_spec)
+        }
+        manifest["schema"] = new_spec
         manifest["gen"] = gen
-        manifest["gen_specs"] = {**manifest["gen_specs"], str(gen): new_spec}
         self._commit(version + 1, manifest)
         return version + 1
 
@@ -681,7 +749,9 @@ class SnapshotTable:
         """
         version = self.current_version()
         manifest = self._read_manifest(version)
-        buckets = sorted(int(b) for b, fs in manifest["buckets"].items() if fs)
+        buckets = sorted({
+            int(b) for b, fs in manifest["buckets"].items() if fs
+        } | {b for live in manifest["delta_files"].values() for b in live})
         if buckets:
             manifest = self._rewrite(
                 spark, manifest, buckets, expire_below=expire_tombstones_below_lsn
@@ -690,11 +760,11 @@ class SnapshotTable:
         return {"version": version + 1, "buckets": len(manifest["buckets"])}
 
     def vacuum(self) -> int:
-        """Delete data files unreferenced by the current manifest."""
+        """Delete data files unreferenced by the current manifest: a delta
+        file stays while any bucket holds it live."""
         live = {
             os.path.join(self.root, f)
-            for fs in self._read_manifest(self.current_version())["buckets"].values()
-            for f in fs
+            for f, _ in self._files(self._read_manifest(self.current_version()))
         }
         removed = 0
         data_root = os.path.join(self.root, "data")
@@ -710,96 +780,164 @@ class SnapshotTable:
 
 
 def _project(df: DataFrame, spec: list[dict]) -> DataFrame:
-    """Project `df` to the logical schema `spec` — the one projection, for
-    event batches, `merge` batches and stored generations alike: each column
+    """Project a batch `df` to the logical schema `spec` — the one
+    projection of event batches and `merge` batches alike: each column
     coalesces the names of its `sources` (rename lineage, newest first) that
     `df` has, cast to its spec type (widening), or is a typed null when `df`
-    has none; columns outside every entry's lineage (`lsn`, `op`, `_lsn`,
-    ...) are kept after them."""
+    has none; columns outside every entry's lineage (`lsn`, `op`, ...) are
+    kept after them. An old name that a column of `spec` holds now binds to
+    that column alone: after `content`->`body` and an add of `content`, a
+    batch's `content` is the new column. Stored generations are projected
+    by column id instead (`_project_gen`)."""
     present = set(df.columns)
+    names = {c["name"] for c in spec}
     lineage = {s for c in spec for s in c["sources"]}
     cols = []
     for c in spec:
-        sources = [F.col(s) for s in c["sources"] if s in present] or [F.lit(None)]
+        sources = [
+            F.col(s) for s in c["sources"]
+            if s in present and (s == c["name"] or s not in names)
+        ] or [F.lit(None)]
         value = F.coalesce(*sources) if len(sources) > 1 else sources[0]
         cols.append(value.cast(c["type"]).alias(c["name"]))
     return df.select(*cols, *[F.col(c) for c in df.columns if c not in lineage])
 
 
-def _list_files(path: str, rel: str, by: Sequence[str]) -> dict:
-    """{value: ...} of the parquet dataset at `path` (= <table.root>/<rel>)
-    partitioned by `by`, nested one level per column; each leaf holds the
-    sorted parquet paths relative to the table root."""
-    col, *rest = by
-    out: dict = {}
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith(f"{col}="):
-            continue
-        sub, sub_rel = os.path.join(path, entry), os.path.join(rel, entry)
-        out[int(entry.split("=", 1)[1])] = (
-            _list_files(sub, sub_rel, rest) if rest else [
-                os.path.join(sub_rel, fn)
-                for fn in sorted(os.listdir(sub))
-                if fn.endswith(".parquet")
-            ]
+def _upgrade(m: dict) -> dict:
+    """Manifest `m` in the current layout when an older writer wrote it.
+    Delta files of the one-file-per-bucket layout (a `delta_files` list)
+    stay in their bucket's file list: each holds that one bucket and no
+    stored `bucket`, so they are scanned like base files, still resolved by
+    the merge-on-read window, and folded by the next rewrite of the bucket.
+    Generations without column ids get the ids the name lineage gave them:
+    a current column's id goes to the first of its `sources` a generation
+    has, and any other column of it gets a fresh id."""
+    if isinstance(m["delta_files"], list):
+        m["delta_files"] = {}
+    if all("id" in c for g in m["gen_specs"].values() for c in g):
+        return m
+    cur = [dict(c, id=i) for i, c in enumerate(m["schema"])]
+    fresh = len(cur)
+    for g, spec in m["gen_specs"].items():
+        names = [c["name"] for c in spec]
+        id_of: dict[str, int] = {}
+        for c in cur:
+            n = next((n for n in c["sources"] if n in names), None)
+            if n is not None:
+                id_of.setdefault(n, c["id"])
+        for n in names:
+            if n not in id_of:
+                id_of[n], fresh = fresh, fresh + 1
+        m["gen_specs"][g] = [dict(c, id=id_of[c["name"]]) for c in spec]
+    return m
+
+
+def _project_gen(raw: DataFrame, gen_spec: list[dict], spec: list[dict]) -> DataFrame:
+    """A stored generation's rows `raw` (read with `gen_spec`) in the logical
+    schema `spec`, matched by column id: each column reads the generation's
+    column of the same id, cast to its spec type (widening), or is a typed
+    null where the generation has none (added later); `_lsn`, `_op` and a
+    stored `bucket` are kept. Names alone cannot bind a rename that reuses a
+    freed name: after `commit`->`sha`, `lang`->`commit`, old files' `commit`
+    is the new `sha` and their `lang` the new `commit`."""
+    name_of = {c["id"]: c["name"] for c in gen_spec}
+    return raw.select(
+        *[
+            (F.col(name_of[c["id"]]) if c["id"] in name_of else F.lit(None))
+            .cast(c["type"]).alias(c["name"])
+            for c in spec
+        ],
+        *[c for c in ("_lsn", "_op", "bucket") if c in raw.columns],
+    )
+
+
+def _with_ids(m: dict, spec: list[dict]) -> list[dict]:
+    """`spec`, the next generation of manifest `m`, with a stable column
+    `id` on every entry. A column keeps the id of the current generation's
+    column it descends from: the one whose `sources` its own `sources` end
+    with (a rename prepends the new name, a widen keeps them), claimed by
+    the longest lineage first, so a rename keeps its id ahead of an add
+    that reuses the freed name; else the column of the same name; else the
+    first of its `sources` that names one. Any other column is new and
+    gets a fresh id. The ids stay out of the `schema` entries, which mirror
+    the registry's spec."""
+    old = m["gen_specs"][str(m["gen"])]
+    by_sources = {tuple(c["sources"]): c["id"] for c in old}
+    by_name = {c["name"]: c["id"] for c in old}
+    fresh = 1 + max(c["id"] for g in m["gen_specs"].values() for c in g)
+    ids: dict[int, int] = {}
+    for i, c in sorted(enumerate(spec), key=lambda ic: -len(ic[1]["sources"])):
+        s = c["sources"]
+        candidates = [by_sources.get(tuple(s[k:])) for k in range(len(s))]
+        candidates += [by_name.get(n) for n in (c["name"], *s)]
+        ids[i] = next(
+            (x for x in candidates if x is not None and x not in ids.values()), None
         )
-    return out
+        if ids[i] is None:
+            ids[i], fresh = fresh, fresh + 1
+    return [dict(c, id=ids[i]) for i, c in enumerate(spec)]
 
 
 def delta_footer_stats(
-    root: str, files_by_bucket: dict[int, list[str]], lsn_col: str = "_lsn"
-) -> list[dict]:
-    """Per-bucket (applied_events, max `lsn_col`) of data files, read from
-    the PARQUET FOOTERS — zero Spark jobs. Used for just-staged delta files
-    and, by `max_stored_lsn`, for a whole snapshot.
+    root: str, files: dict[str, Sequence[int] | None]
+) -> dict[str, dict[int, tuple[int, int]]]:
+    """{file: {bucket: (rows, max `_lsn`)}} of delta files, each read for
+    the buckets `files` maps it to (every bucket it holds when None): its
+    `bucket` and `_lsn` columns, read with pyarrow — zero Spark jobs. Used
+    for just-staged files (whose buckets and per-bucket ledger counts this
+    gives) and, by `max_stored_lsn`, for a snapshot's live deltas.
 
-    A read job over files the same call just wrote would be a fixed
-    per-run cost capping WAL-tail throughput; row counts and int64 min/max
-    statistics are already in each footer (one metadata read per file).
-    Falls back to a pyarrow single-column read (still no Spark job) for any
-    row group whose writer skipped statistics.
+    A Spark read job over files the same call just wrote would be a fixed
+    per-run cost capping WAL-tail throughput; a shared delta file holds
+    many buckets, so one footer's min/max cannot tell them apart, but its
+    two int columns are a small read.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    out: list[dict] = []
-    for bucket, rels in sorted(files_by_bucket.items()):
-        n = 0
-        mx: int | None = None
-        for rel in rels:
-            pf = pq.ParquetFile(os.path.join(root, rel))
-            md = pf.metadata
-            n += md.num_rows
-            idx = md.schema.names.index(lsn_col)
-            need_fallback = False
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    need_fallback = True
-                    break
-                mx = int(st.max) if mx is None else max(mx, int(st.max))
-            if need_fallback:
-                col = pf.read(columns=[lsn_col]).column(lsn_col)
-                if len(col):
-                    import pyarrow.compute as pc
-
-                    fmx = pc.max(col).as_py()
-                    if fmx is not None:
-                        mx = fmx if mx is None else max(mx, int(fmx))
-        if n:
-            # A bucket with rows but no resolvable max LSN means lsn_col was
-            # all-NULL — a contract violation (_lsn is non-null by
-            # construction). Raising beats silently dropping the bucket,
-            # which would undercount applied_events in the metrics/ledger
-            # row.
-            if mx is None:
+    out: dict[str, dict[int, tuple[int, int]]] = {}
+    for rel, buckets in files.items():
+        t = pq.read_table(os.path.join(root, rel), columns=["bucket", "_lsn"])
+        if buckets is not None:
+            t = t.filter(pc.is_in(t["bucket"], pa.array(buckets, t["bucket"].type)))
+        stats = {}
+        for r in t.group_by("bucket").aggregate(
+            [("_lsn", "count", pc.CountOptions(mode="all")), ("_lsn", "max")]
+        ).to_pylist():
+            # A bucket with rows but no max LSN means `_lsn` was all-NULL —
+            # a contract violation (`_lsn` is non-null by construction).
+            # Raising beats silently dropping the bucket, which would
+            # undercount applied_events in the ledger record.
+            if r["_lsn_max"] is None:
                 raise ValueError(
-                    f"delta bucket {bucket}: {n} rows but no resolvable "
-                    f"max({lsn_col}) — {lsn_col} must be non-null"
+                    f"delta file {rel} bucket {r['bucket']}: {r['_lsn_count']} "
+                    "rows but no resolvable max(_lsn) — _lsn must be non-null"
                 )
-            out.append(
-                {"bucket": bucket, "applied_events": n, "max_applied_lsn": mx}
-            )
+            stats[r["bucket"]] = (r["_lsn_count"], r["_lsn_max"])
+        out[rel] = dict(sorted(stats.items()))
     return out
+
+
+def _footer_max_lsn(path: str) -> int | None:
+    """Max `_lsn` of a data file from its parquet footer (None when it has
+    no row), falling back to a pyarrow column read where a row group has no
+    statistics. Raises where rows have no max: `_lsn` is non-null."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    if not md.num_rows:
+        return None
+    idx = md.schema.names.index("_lsn")
+    stats = [md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)]
+    if all(st is not None and st.has_min_max for st in stats):
+        return max(int(st.max) for st in stats)
+    mx = pc.max(pf.read(columns=["_lsn"]).column("_lsn")).as_py()
+    if mx is None:
+        raise ValueError(f"{path}: {md.num_rows} rows but no max(_lsn) — _lsn must be non-null")
+    return int(mx)
 
 
 def _stored_schema(spec: list[dict]) -> T.StructType:

@@ -22,10 +22,11 @@ schema change).
 
 Shuffle budget for a run of k epochs (the 100 TB question): one partial-agg
 exchange for the LWW groupBy (shuffle volume = per-epoch distinct keys, not
-events, thanks to map-side combine) + one (epoch, bucket) exchange for the
-stage write. Hot-repo skew cannot hurt either: both are keyed by
-(repo, path)/bucket, which is uniform even under a 25x hot repo
-(tests/test_partitioning.py).
+events, thanks to map-side combine) + one rebalance on epoch for the stage
+write, which AQE sizes by bytes. Hot-repo skew cannot hurt either: the
+groupBy is keyed by (repo, path), which is uniform even under a 25x hot
+repo (tests/test_partitioning.py), and the rebalance splits a large epoch
+into write tasks of the advisory partition size.
 """
 
 from __future__ import annotations

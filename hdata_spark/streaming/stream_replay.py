@@ -16,12 +16,14 @@ One call of the core:
     schema_change events -> registry (LSN order) -> table manifest catch-up
     LWW winners per (epoch, key) -> transforms
     the sink stages them (`SnapshotTable.stage_deltas`: projection to the
-        table's schema, stored-row encoding, ONE (epoch, bucket)-partitioned
-        write on up to shuffle.partitions tasks), observing a per-epoch
-        fingerprint over the stored rows (no extra Spark job)
+        table's schema, stored-row encoding, ONE epoch-partitioned write of
+        files sized by the data, each holding many buckets), observing a
+        per-epoch fingerprint over the stored rows (no extra Spark job)
     for each epoch, in order:
-        per-bucket counts + max LSN from the staged files' parquet footers
-        metadata-only manifest append of the epoch's files (fast-append)
+        per-bucket counts + max LSN from the staged files' `bucket` and
+        `_lsn` columns (pyarrow, no Spark job)
+        metadata-only manifest append of the epoch's files with the buckets
+        each holds (fast-append)
         metrics row, then ledger record
 
 How a row is stored and where its file goes is the sink's alone
@@ -76,10 +78,12 @@ from hdata_spark.streaming.metrics import MetricsLog
 @dataclass
 class ReplayConfig:
     # The one compaction rule of both planners: once a commit leaves more
-    # than this many UNCOMPACTED delta files in the table, fold them with
-    # `compact()` — after each micro-batch on the WAL tail, once after all
-    # runs in batch replay. Each commit stays metadata-only (the fast-append
-    # invariant); compaction cost is amortized over ~threshold files. None
+    # than this many UNCOMPACTED (delta file, live bucket) pairs in the
+    # table (`SnapshotTable.delta_bucket_count`: the delta files a
+    # one-file-per-bucket layout would hold), fold them with `compact()` —
+    # after each micro-batch on the WAL tail, once after all runs in batch
+    # replay. Each commit stays metadata-only (the fast-append
+    # invariant); compaction cost is amortized over ~threshold pairs. None
     # disables auto-compaction (callers own the cadence, e.g. a separate
     # maintenance job).
     compact_delta_files: int | None = 64
@@ -90,7 +94,7 @@ def _compact_if_due(spark: SparkSession, table: SnapshotTable, cfg: ReplayConfig
     ledger commit — compaction is read optimization, never part of an
     epoch's exactly-once window (a crash mid-compact leaves the pre-compact
     snapshot fully committed, and compact() itself commits atomically)."""
-    if cfg.compact_delta_files is None or table.delta_file_count() <= cfg.compact_delta_files:
+    if cfg.compact_delta_files is None or table.delta_bucket_count() <= cfg.compact_delta_files:
         return False
     table.compact(spark)
     return True
@@ -175,8 +179,8 @@ def apply_epochs(
         "sc_kind", "sc_column", "sc_arg"
     )
     # One pass for the whole run: per-epoch LWW winners, STAGED by the
-    # sink to an (epoch, bucket)-partitioned parquet dataset inside the
-    # table. Staging (instead of .persist) matters twice over: the columnar
+    # sink to an epoch-partitioned parquet dataset inside the table.
+    # Staging (instead of .persist) matters twice over: the columnar
     # cache builder anti-scales with cores (measured 22s@8 -> 57s@32 for the
     # same data), while a parquet write scales; and at 10^10 events the
     # winners don't fit executor storage memory anyway.
@@ -214,22 +218,29 @@ def apply_epochs(
         # commit leaves a committed-but-unledgered epoch; its re-apply
         # stages and registers IDENTICAL-content rows, and the MOR read's
         # LWW window keeps exactly one copy per key — a no-op on final state.
-        files = staged[epoch]
-        # Per-bucket counts and max LSN come off the staged files' parquet
-        # FOOTERS — a driver-side metadata read, not a Spark job over files
-        # this call just wrote (see sinks.snapshot.delta_footer_stats).
-        stats = delta_footer_stats(table.root, files)
-        commit = table.register_deltas(files)
-        top = max((s["max_applied_lsn"] for s in stats), default=0)
-        mean_rows = sum(s["applied_events"] for s in stats) / len(stats) if stats else 0.0
+        # Each staged file's buckets, and per-bucket counts and max LSN,
+        # come off its `bucket` and `_lsn` columns — a driver-side pyarrow
+        # read, not a Spark job over files this call just wrote (see
+        # sinks.snapshot.delta_footer_stats). A bucket may span files.
+        stats = delta_footer_stats(table.root, dict.fromkeys(staged[epoch]))
+        commit = table.register_deltas({f: list(bs) for f, bs in stats.items()})
+        by_bucket: dict[int, tuple[int, int]] = {}
+        for bs in stats.values():
+            for b, (n, mx) in bs.items():
+                n0, mx0 = by_bucket.get(b, (0, mx))
+                by_bucket[b] = (n0 + n, max(mx0, mx))
+        top = max((mx for _, mx in by_bucket.values()), default=0)
+        mean_rows = (
+            sum(n for n, _ in by_bucket.values()) / len(by_bucket) if by_bucket else 0.0
+        )
         partitions = [
             {
-                "partition_id": s["bucket"],
-                "applied_events": s["applied_events"],
-                "lag_events": top - s["max_applied_lsn"],
-                "skew_ratio": s["applied_events"] / mean_rows,
+                "partition_id": b,
+                "applied_events": n,
+                "lag_events": top - mx,
+                "skew_ratio": n / mean_rows,
             }
-            for s in stats
+            for b, (n, mx) in sorted(by_bucket.items())
         ]
         record = {
             "partitions": partitions,

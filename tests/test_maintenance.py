@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -26,12 +28,12 @@ def test_compact_folds_deltas(spark, tmp_path, small_fixture):
         SchemaRegistry(state_path=str(tmp_path / "r.json")),
         ReplayConfig(compact_delta_files=None),
     )
-    n_files_before = table.delta_file_count()
-    assert n_files_before > 8  # base + per-epoch deltas
+    # per-epoch delta files, each live in many buckets
+    assert table.delta_file_count() > 0 and table.delta_bucket_count() > 8
     fp_before = sha256_fingerprint(table.read(spark).toPandas())
     stats = table.compact(spark)
     assert stats["buckets"] <= 8
-    assert table.delta_file_count() <= 8
+    assert table.delta_file_count() == table.delta_bucket_count() == 0
     assert sha256_fingerprint(table.read(spark).toPandas()) == fp_before
     expected = oracle_final_state(base, events)
     assert_state_equal(table.read(spark).toPandas(), expected)
@@ -109,6 +111,26 @@ def test_vacuum_removes_unreferenced_files(spark, tmp_path, small_fixture):
     assert removed > 0
     assert sha256_fingerprint(table.read(spark).toPandas()) == fp
 
+    # A delta file shared by buckets stays while any bucket holds it live.
+    table = SnapshotTable(str(tmp_path / "shared"), n_buckets=8)
+    table.overwrite(spark, spark.createDataFrame(base))
+    replay(
+        spark, spark.createDataFrame(events), table,
+        CommitLedger(str(tmp_path / "l2")), MetricsLog(str(tmp_path / "m2")),
+        SchemaRegistry(state_path=str(tmp_path / "r2.json")),
+        ReplayConfig(compact_delta_files=None),
+    )
+    deltas = table._read_manifest(table.current_version())["delta_files"]
+    assert all(len(live) > 1 for live in deltas.values())
+    for folded in ([0, 1, 2, 3], [4, 5, 6, 7]):
+        v = table.current_version()
+        table._commit(v + 1, table._rewrite(spark, table._read_manifest(v), folded))
+        removed = table.vacuum()
+        left = [f for f in deltas if os.path.exists(os.path.join(table.root, f))]
+        assert left == ([] if folded[0] else list(deltas))
+        assert removed == len(folded) + (len(deltas) if folded[0] else 0)
+        assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, events))
+
 
 def test_delta_file_count_zero_after_compact(spark, tmp_path, small_fixture):
     base, events = small_fixture
@@ -174,7 +196,6 @@ def test_orphan_manifest_adopted_after_crashed_publish(spark, tmp_path):
     orphan manifest is a committed snapshot whose publish was lost — it must
     be adopted, not collide with every future commit."""
     import json
-    import os
 
     t = SnapshotTable(str(tmp_path / "t"), n_buckets=4)
     t.merge(spark, spark.createDataFrame(pd.DataFrame(

@@ -172,6 +172,45 @@ def test_rename_reads_old_physical_files(spark, tmp_path):
     assert out4.loc["a.py", "sha"] == "c1"
 
 
+@pytest.mark.parametrize("evolve_each", [True, False])
+def test_renames_that_reuse_a_freed_name_read_by_column_id(spark, tmp_path, evolve_each):
+    """Renaming `commit`->`sha` and then `lang`->`commit` reads old files'
+    `commit` under `sha` and their `lang` under the new `commit`; an `add`
+    of a name renamed away (`content`->`body`, then `content`) reads null
+    from old files. Either with the table evolved after each change or once
+    after all of them, and again after compaction. Column ids stay out of
+    the table's schema, which equals the registry's. A later batch's
+    `commit` and `content` land in the columns of those names alone."""
+    table = SnapshotTable(str(tmp_path / "t"), n_buckets=4)
+    reg = SchemaRegistry(state_path=str(tmp_path / "r.json"))
+    table.merge(spark, spark.createDataFrame(pd.DataFrame(
+        [{"repo": "o/r", "path": "a.py", "commit": "c1", "lang": "python",
+          "content": "x", "lsn": 1, "op": "insert"}]
+    )))
+    for lsn, (kind, column, arg) in enumerate([
+        ("rename", "commit", "sha"), ("rename", "lang", "commit"),
+        ("rename", "content", "body"), ("add", "content", "string"),
+    ], start=2):
+        reg.apply_change(kind, column, arg, at_lsn=lsn)
+        if evolve_each:
+            table.evolve_schema(reg.spec)
+    table.evolve_schema(reg.spec)
+    assert table.schema_spec() == reg.spec
+    for compacted in (False, True):
+        row = table.read(spark).toPandas().iloc[0]
+        assert (row["sha"], row["commit"], row["body"]) == ("c1", "python", "x")
+        assert row["content"] is None, compacted
+        table.compact(spark)
+    table.merge(spark, spark.createDataFrame(pd.DataFrame(
+        [{"repo": "o/r", "path": "b.py", "commit": "rust", "content": "y",
+          "lsn": 9, "op": "insert"}]
+    )))
+    row = {r["path"]: r for r in table.read(spark).collect()}["b.py"]
+    assert (row["sha"], row["commit"], row["body"], row["content"]) == (
+        None, "rust", None, "y"
+    )
+
+
 def test_crash_window_in_schema_change_epoch_resumes(spark, tmp_path, evo_cfg):
     """Crash AFTER the registry persisted a change but BEFORE the epoch's
     ledger commit: resume re-processes the epoch and the re-applied

@@ -54,7 +54,8 @@ def test_writers_write_the_declared_schema(spark, tmp_path):
     """A batch whose types differ from the spec (commit bigint, lsn int)
     merged into a default-spec table, then a delta generation of events
     with the same off-spec types: every file carries exactly its
-    generation's declared schema, and every version reads back."""
+    generation's declared schema (a delta file also its stored `bucket`),
+    and every version reads back."""
     table = SnapshotTable(str(tmp_path / "t"), n_buckets=4)
     table.merge(spark, spark.createDataFrame(
         [("o/r", "a.py", 11, "python", "a1", 1, "insert"),
@@ -80,6 +81,8 @@ def test_writers_write_the_declared_schema(spark, tmp_path):
         for f, g in m["file_gens"].items():
             want = {c["name"]: _ARROW[c["type"]] for c in m["gen_specs"][str(g)]}
             want.update(_lsn="int64", _op="string")
+            if f in m["delta_files"]:
+                want.update(bucket="int32")
             got = pq.read_schema(os.path.join(table.root, f))
             assert {n: str(got.field(n).type) for n in got.names} == want, f
 
@@ -104,10 +107,10 @@ def test_writers_write_the_declared_schema(spark, tmp_path):
 
 
 def test_building_snapshot_frames_runs_no_spark_job(spark, tmp_path):
-    """A 64-bucket table with base files and delta files in two schema
-    generations (after an add and a rename), each generation over Spark's
-    32-path parallel-listing threshold: building scan and change-feed frames
-    lists no files and infers no schema through Spark."""
+    """A 64-bucket table with base files over Spark's 32-path
+    parallel-listing threshold and delta files in two more schema
+    generations (after an add and a rename): building scan and change-feed
+    frames lists no files and infers no schema through Spark."""
     table = SnapshotTable(str(tmp_path / "t"), n_buckets=64)
     keys = [f"f{i:03d}.py" for i in range(256)]
     table.overwrite(spark, spark.createDataFrame(pd.DataFrame({
@@ -124,7 +127,7 @@ def test_building_snapshot_frames_runs_no_spark_job(spark, tmp_path):
     _replay(spark, tmp_path, table, events)
     m = table._read_manifest(table.current_version())
     per_gen = pd.Series(list(m["file_gens"].values())).value_counts()
-    assert sorted(per_gen.index) == [0, 1, 2] and per_gen.min() > 32
+    assert sorted(per_gen.index) == [0, 1, 2] and per_gen[0] > 32
 
     with _job_group(spark) as jobs:
         current = table.read_internal(spark)
@@ -135,6 +138,58 @@ def test_building_snapshot_frames_runs_no_spark_job(spark, tmp_path):
         assert current.filter("_lsn >= 600").count() == 128
         assert feed.filter("change_type = 'update'").count() == 256
         assert jobs()
+
+
+def test_reads_a_table_of_the_one_file_per_bucket_layout(spark, tmp_path):
+    """A manifest of the older layout — delta files listed in their bucket
+    and in a `delta_files` list, generations without column ids — reads
+    through the merge-on-read window with its rename lineage, and the next
+    rewrite of the bucket folds the deltas and clears `has_deltas`."""
+    import json
+
+    import pyarrow as pa
+
+    root = tmp_path / "t"
+    gen0 = [{"name": c, "type": "string", "sources": [c]} for c in ("repo", "path", "stars")]
+    gen1 = gen0[:2] + [
+        {"name": "stargazers", "type": "string", "sources": ["stargazers", "stars"]}
+    ]
+    files = {}
+    for name, gen, rows in [
+        ("base", gen0, [("a.py", "1", 1), ("b.py", "2", 2)]),
+        ("delta", gen1, [("a.py", "9", 5)]),
+    ]:
+        rel = os.path.join("data", name, "bucket=0", "part-0.parquet")
+        os.makedirs(root / os.path.dirname(rel))
+        pq.write_table(pa.table({
+            "repo": ["o/r"] * len(rows),
+            "path": [r[0] for r in rows],
+            gen[2]["name"]: [r[1] for r in rows],
+            "_lsn": pa.array([r[2] for r in rows], pa.int64()),
+            "_op": ["u"] * len(rows),
+        }), root / rel)
+        files[name] = rel
+    os.makedirs(root / "manifests")
+    with open(root / "manifests" / "v00000001.json", "w") as f:
+        json.dump({
+            "buckets": {"0": [files["base"], files["delta"]]}, "schema": gen1,
+            "gen": 1, "gen_specs": {"0": gen0, "1": gen1},
+            "file_gens": {files["base"]: 0, files["delta"]: 1},
+            "delta_files": [files["delta"]], "version": 1,
+            "keys": ["repo", "path"], "n_buckets": 1, "bucket_cols": ["repo", "path"],
+            "has_deltas": True,
+        }, f)
+    (root / "_latest").write_text("1")
+
+    table = SnapshotTable(str(root))
+    want = {"a.py": "9", "b.py": "2"}
+    assert table.delta_file_count() == 0 and table.max_stored_lsn() == 5
+    got = {r["path"]: r["stargazers"] for r in table.read(spark).collect()}
+    assert got == want
+    table.compact(spark)
+    m = table._read_manifest(table.current_version())
+    assert len(m["buckets"]["0"]) == 1 and not m["has_deltas"]
+    assert {r["path"]: r["stargazers"] for r in table.read(spark).collect()} == want
 
 
 def _base(spark, paths):
@@ -154,11 +209,13 @@ def _batch(spark, rows):
 
 
 def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
-    """A merge into a bucket holding fast-append deltas rewrites that bucket
-    alone: its delta files leave `delta_files`, other buckets' deltas stay,
-    reads equal the oracle, and an equal-LSN row with another payload
-    leaves the stored row. Folding the remaining delta buckets the same
-    way clears `has_deltas`."""
+    """A merge into a bucket that shares a fast-append delta file with other
+    buckets rewrites that bucket alone: the bucket leaves the file's live
+    set, other buckets keep their base files, later scans of the bucket no
+    longer read the file's rows of it, reads (full and bucket-pruned) equal
+    the oracle, and an equal-LSN row with another payload leaves the stored
+    row. Folding the remaining live buckets the same way drops the file
+    from the manifest and clears `has_deltas`."""
     table = SnapshotTable(str(tmp_path / "t"), n_buckets=8)
     paths = [f"f{i:02d}.py" for i in range(40)]
     table.overwrite(spark, _base(spark, paths))
@@ -171,9 +228,8 @@ def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
         r["path"]: r["bucket"] for r in table.read_internal(spark).collect()
     }
     m = table._read_manifest(table.current_version())
-    delta_buckets = sorted(
-        int(b) for b, fs in m["buckets"].items() if set(fs) & set(m["delta_files"])
-    )
+    ((delta, delta_buckets),) = m["delta_files"].items()
+    assert delta_buckets == sorted({bucket_of[p] for p in paths[:24]})
     assert len(delta_buckets) > 2 and m["has_deltas"]
 
     updated = [p for p in paths if lsn[p] > 0]
@@ -187,14 +243,23 @@ def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
     oracle[newer] = "v2"
     assert stats["buckets"] == [b]
     m2 = table._read_manifest(table.current_version())
-    assert set(m2["delta_files"]) == set(m["delta_files"]) - set(m["buckets"][str(b)])
+    assert m2["delta_files"] == {delta: [d for d in delta_buckets if d != b]}
     assert m2["buckets"][str(b)] != m["buckets"][str(b)]
     assert len(m2["buckets"][str(b)]) == 1
     for other in set(m["buckets"]) - {str(b)}:
         assert m2["buckets"][other] == m["buckets"][other]
+    # one stored version per key of `b`: the delta's rows of it are dead
+    assert table._scan(spark, m2, [b]).count() == sum(bucket_of[p] == b for p in paths)
     got = {r["path"]: r["content"] for r in table.read(spark).collect()}
     assert got == oracle
     assert m2["has_deltas"]
+    other = next(d for d in delta_buckets if d != b)
+    for pruned in (b, other):
+        got = {
+            r["path"]: r["content"]
+            for r in table.read_internal(spark, buckets=[pruned]).collect()
+        }
+        assert got == {p: c for p, c in oracle.items() if bucket_of[p] == pruned}
 
     rest = [
         (p, oracle[p], lsn[p]) for p in paths
@@ -202,7 +267,8 @@ def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
     ]
     table.merge(spark, _batch(spark, rest))  # equal LSNs: payloads unchanged
     m3 = table._read_manifest(table.current_version())
-    assert m3["delta_files"] == [] and not m3["has_deltas"]
+    assert m3["delta_files"] == {} and not m3["has_deltas"]
+    assert delta not in m3["file_gens"]
     assert {r["path"]: r["content"] for r in table.read(spark).collect()} == oracle
 
 

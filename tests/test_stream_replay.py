@@ -22,7 +22,6 @@ from hdata_spark.streaming.stream_replay import stream_replay
 from tests.conftest import (
     _all_jobs,
     _job_group,
-    _last_job_tasks,
     assert_state_equal,
 )
 
@@ -135,7 +134,7 @@ def test_stream_fast_append_metadata_only_commits(spark, tmp_path, small_fixture
     prev = None
     for v in range(v_base, table.current_version() + 1):
         m = table._read_manifest(v)
-        files = {f for fs in m["buckets"].values() for f in fs}
+        files = {f for fs in m["buckets"].values() for f in fs} | set(m["delta_files"])
         if prev is not None:
             assert prev <= files, f"v{v} dropped files committed by v{v-1}"
         prev = files
@@ -169,9 +168,9 @@ def test_one_compaction_rule_for_both_planners(
     spark, tmp_path, monkeypatch, small_fixture, planner, threshold
 ):
     """`compact_delta_files` is both planners' one compaction rule: None
-    leaves every delta file in place; a threshold below the delta-file count
-    folds them, once after batch replay's runs and after every micro-batch
-    that crosses it. Either way the table matches the oracle."""
+    leaves every delta file in place; a threshold below the count of
+    (delta file, live bucket) pairs folds them, once after batch replay's
+    runs and after every micro-batch that crosses it. Either way the table matches the oracle."""
     from hdata_spark.streaming.replay import ReplayConfig, replay
 
     base, events = small_fixture
@@ -180,7 +179,7 @@ def test_one_compaction_rule_for_both_planners(
     compact, compactions = table.compact, []
 
     def counted(*args, **kwargs):
-        compactions.append(table.delta_file_count())
+        compactions.append(table.delta_bucket_count())
         return compact(*args, **kwargs)
 
     monkeypatch.setattr(table, "compact", counted)
@@ -199,7 +198,7 @@ def test_one_compaction_rule_for_both_planners(
         expected_compactions = 4
     if threshold is None:
         assert compactions == []
-        assert table.delta_file_count() > 4
+        assert table.delta_bucket_count() > 4
     else:
         assert len(compactions) == expected_compactions
         assert all(n > threshold for n in compactions)
@@ -422,26 +421,54 @@ def test_stream_concurrent_writer_schema_change_not_skipped(
     )
 
 
-def test_delta_footer_stats_raises_on_all_null_lsn(tmp_path):
-    """A staged delta bucket with rows but an all-NULL _lsn violates the
-    non-null contract; delta_footer_stats must raise rather than silently
-    drop the bucket (which would undercount applied_events)."""
+def test_delta_footer_stats_raises_on_all_null_lsn(spark, tmp_path):
+    """A delta bucket with rows but an all-NULL _lsn violates the non-null
+    contract; delta_footer_stats must raise rather than silently drop the
+    bucket (which would undercount applied_events) — also when the bucket
+    shares its file with valid ones. `max_stored_lsn` reads a shared delta
+    file for its live buckets only."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
 
     from hdata_spark.sinks.snapshot import delta_footer_stats
 
-    root = str(tmp_path)
-    rel = os.path.join("data", "delta_x", "bucket=0", "part-0.parquet")
-    os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
-    tbl = pa.table({
-        "repo": ["a", "b"],
-        "_lsn": pa.array([None, None], type=pa.int64()),
-    })
-    pq.write_table(tbl, os.path.join(root, rel))
+    root = str(tmp_path / "t")
+
+    def staged(name, buckets, lsns, ops=None):
+        rel = os.path.join("data", name, "epoch=0", "part-0.parquet")
+        os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
+        n = len(buckets)
+        pq.write_table(pa.table({
+            "repo": ["o/r"] * n,
+            "path": [f"f{i}.py" for i in range(n)],
+            **{c: pa.array([None] * n, pa.string())
+               for c in ("commit", "lang", "content", "content_sha256")},
+            "_lsn": pa.array(lsns, pa.int64()),
+            "_op": ops or ["u"] * n,
+            "bucket": pa.array(buckets, pa.int32()),
+        }), os.path.join(root, rel))
+        return rel
+
+    alone = staged("alone", [0, 0], [None, None])
     with pytest.raises(ValueError, match="non-null"):
-        delta_footer_stats(root, {0: [rel]})
+        delta_footer_stats(root, {alone: None})
+    shared = staged("shared", [1, 1, 2, 2, 3], [5, 7, None, None, 9])
+    with pytest.raises(ValueError, match="non-null"):
+        delta_footer_stats(root, {shared: None})
+    assert delta_footer_stats(root, {shared: [1, 3]}) == {shared: {1: (2, 7), 3: (1, 9)}}
+
+    # A shared file whose top LSN is a tombstone in bucket 3: once a
+    # rewrite of bucket 3 expires it, the file stays live for bucket 1
+    # alone, and the stored maximum is bucket 1's.
+    table = SnapshotTable(root, n_buckets=4)
+    top = staged("top", [1, 1, 3], [5, 7, 9], ["u", "u", "d"])
+    table.register_deltas({top: [1, 3]})
+    assert table.max_stored_lsn() == 9
+    v = table.current_version()
+    table._commit(v + 1, table._rewrite(spark, table._read_manifest(v), [3], expire_below=10))
+    assert table._read_manifest(v + 1)["delta_files"] == {top: [1]}
+    assert table.max_stored_lsn() == 7
 
 
 def _source_log(ckpt, name: str, lines: list[str]) -> None:
@@ -537,21 +564,28 @@ def test_apply_epochs_with_known_schema_changes_runs_no_collect(
     assert counts["None"] == counts["[]"] + 1
 
 
-def test_stage_write_runs_on_every_core(spark, tmp_path, small_fixture):
-    """A one-segment stage write into 64 buckets runs its write stage on
-    min(64, shuffle.partitions) tasks, not on the one task AQE would
-    coalesce the shuffle into, and still writes one file per bucket."""
+def test_stage_write_is_sized_by_the_data(spark, tmp_path, small_fixture):
+    """A one-segment apply into a 64-bucket table stages ONE delta file, not
+    one per bucket: its live bucket set is exactly the buckets the ledger
+    record counts, and the apply runs no more Spark jobs than the
+    one-file-per-bucket stage write did (4)."""
     from hdata_spark.streaming.stream_replay import apply_epochs
 
     _, events = small_fixture
     frame = _segment_frame(spark, events, tmp_path)
-    _, ledger, metrics, registry, _ = _mk(tmp_path, "cores")
-    table = SnapshotTable(str(tmp_path / "cores" / "table64"), n_buckets=64)
-    (record,) = apply_epochs(spark, frame, [0], table, ledger, metrics, registry, [])
-    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert _last_job_tasks(spark) == min(64, shuffle_partitions)
+    _, ledger, metrics, registry, _ = _mk(tmp_path, "sized")
+    table = SnapshotTable(str(tmp_path / "sized" / "table64"), n_buckets=64)
+    with _job_group(spark) as jobs:
+        (record,) = apply_epochs(spark, frame, [0], table, ledger, metrics, registry, [])
+        assert jobs() <= 4
     m = table._read_manifest(table.current_version())
-    assert len(m["delta_files"]) == len(record["partitions"]) > 8
+    assert table.delta_file_count() == len(m["delta_files"]) == 1
+    (live,) = m["delta_files"].values()
+    assert live == [p["partition_id"] for p in record["partitions"]]
+    assert len(live) > 8 and table.delta_bucket_count() == len(live)
+    assert sum(p["applied_events"] for p in record["partitions"]) == (
+        table.read_internal(spark).count()
+    )
 
 
 def test_drain_runs_one_job_outside_its_batches(
