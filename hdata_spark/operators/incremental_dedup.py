@@ -78,15 +78,19 @@ class MinHashIndex:
         # only n_bands rows to its bucket). The bucket-by-(band,sig) reads
         # (candidate_pairs / candidates_for_batch) never bucket-pruned
         # anyway — they shuffle on (band_idx, band_sig) regardless.
-        # An index created before this layout reopens with its stored
-        # manifest bucket_cols (layout is authoritative) and simply skips
-        # the pruning fast path.
         self.table = SnapshotTable(
             root,
             keys=("band_idx", "band_sig", "doc_id"),
             n_buckets=n_buckets,
             bucket_cols=("doc_id",),
         )
+        if self.table.bucket_cols != ["doc_id"]:
+            # The stored layout wins on reopen; a table bucketed otherwise
+            # is not an index this class wrote.
+            raise ValueError(
+                f"{root}: stored bucket_cols {self.table.bucket_cols}, "
+                "a MinHash index buckets on ['doc_id']"
+            )
         if os.path.exists(params_path) and os.path.getsize(params_path) > 0:
             # Stored banding geometry is authoritative (mixing band rows
             # from different geometries silently corrupts candidate recall).
@@ -201,13 +205,9 @@ class MinHashIndex:
             F.lit("insert").alias("op"),
         )
 
-    def _doc_buckets(self, doc_ids: DataFrame) -> list[int] | None:
+    def _doc_buckets(self, doc_ids: DataFrame) -> list[int]:
         """The batch's distinct storage buckets (driver-bounded: at most
-        n_buckets ints). None when the stored layout doesn't bucket on
-        doc_id (an index created before the doc_id-bucketed layout) — the
-        caller then reads unpruned, exactly the old behavior."""
-        if self.table.bucket_cols != ["doc_id"]:
-            return None
+        n_buckets ints)."""
         rows = (
             doc_ids.select(
                 # Stored doc_ids are bigint, and xxhash64 hashes an int32

@@ -1141,12 +1141,14 @@ def doc_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hdata_spark.operators.incremental_dedup import MinHashIndex
     from hdata_spark.operators.text_dedup import LSH_BANDS, N_PERMS
+    from hdata_spark.sinks.snapshot import FORMAT
 
     # The banding geometry is part of the cache key: a stored index's
     # _index_params.json wins on reopen (by design), so a geometry-constant
     # change must land in a FRESH staging dir or the query would keep
-    # serving old-geometry candidates against a new-geometry oracle.
-    d, staged = _staging_dir(f"mhidx_p{N_PERMS}b{LSH_BANDS}", sf_dir)
+    # serving old-geometry candidates against a new-geometry oracle. So is
+    # the sink's manifest format, which refuses a table of another format.
+    d, staged = _staging_dir(f"mhidx_p{N_PERMS}b{LSH_BANDS}f{FORMAT}", sf_dir)
     docs = load(spark, sf_dir, "documents")
     os.makedirs(d, exist_ok=True)
     idx = MinHashIndex(os.path.join(d, "index"))

@@ -13,15 +13,19 @@ manifest + atomic pointer — the same design Iceberg itself uses:
   file holds every bucket one write task staged for one epoch, sorted by
   ``bucket``, which it stores as a column (``data/delta_*/epoch=<e>/``): a
   file is sized by the data, not by the bucket count;
-- a *manifest* (JSON) maps bucket -> base files and lists each delta file
-  once with its *live bucket set*, as an Iceberg manifest records each data
-  file's partition tuple. The set starts as the buckets the file holds; a
-  bucket rewrite removes the buckets it folded, scans read a delta file for
-  its live buckets only, and the file leaves the manifest once its set is
-  empty. The manifest also records the logical schema, including rename
-  lineage (``sources``: newest-first names), and, per schema generation, a
-  stable id per column (Iceberg's column IDs) by which old generations are
-  projected;
+- a *manifest* (JSON) lists each data file once, as an Iceberg manifest
+  lists each data file with its partition tuple: ``files`` maps a path to
+  its schema generation, its *live bucket set* and whether it is a delta.
+  A base file's set is its one bucket; a delta file's starts as the buckets
+  it holds. A bucket rewrite removes the buckets it folded from every set,
+  scans read a delta file for its live buckets only, and a file leaves the
+  manifest once its set is empty. ``gen_specs`` holds, per schema
+  generation, the logical schema with rename lineage (``sources``:
+  newest-first names) and a stable id per column (Iceberg's column IDs) by
+  which old generations are projected; the current schema is
+  ``gen_specs[gen]``. A manifest carries ``format`` (`FORMAT`, Iceberg's
+  table ``format-version``), and a table of any other format is refused
+  at open: there is no upgrade path;
 - ``_latest`` is a pointer file updated via ``os.replace`` (atomic on POSIX):
   readers always see a complete snapshot, never a partial commit;
 - MERGE and compaction are one copy-on-write **bucket rewrite**
@@ -87,6 +91,8 @@ BASE_COLUMNS = ["repo", "path", "commit", "lang", "content"]
 # verification invariant). Stored so change detection / audits never rescan
 # content.
 DERIVED_COLUMNS = ["content_sha256"]
+# The manifest layout `_commit` writes and `_read_manifest` accepts.
+FORMAT = 2
 
 
 @contextmanager
@@ -167,12 +173,9 @@ class SnapshotTable:
         v = self.current_version()
         if v > 0:
             m = self._read_manifest(v)
-            if "keys" in m:
-                self.keys = list(m["keys"])
-            if "n_buckets" in m:
-                self.n_buckets = int(m["n_buckets"])
-            # Older manifests predate bucket_cols: their hash covered keys.
-            self.bucket_cols = list(m.get("bucket_cols", self.keys))
+            self.keys = list(m["keys"])
+            self.n_buckets = int(m["n_buckets"])
+            self.bucket_cols = list(m["bucket_cols"])
 
     # ---------------- manifest / pointer plumbing ----------------
 
@@ -204,42 +207,42 @@ class SnapshotTable:
         return os.path.join(self.root, "manifests", f"v{version:08d}.json")
 
     def _read_manifest(self, version: int) -> dict:
-        m = {"buckets": {}}  # version 0: the empty table
-        if version:
-            with open(self._manifest_path(version)) as f:
-                m = json.load(f)
-        m.setdefault("schema", _default_schema())
-        m.setdefault("gen", 0)
-        m.setdefault(
-            "gen_specs", {"0": [dict(c, id=i) for i, c in enumerate(m["schema"])]}
-        )
-        m.setdefault("file_gens", {})
-        m.setdefault("delta_files", {})
-        return _upgrade(m)
+        """Manifest `version`; version 0 is the empty table of the default
+        schema. Raises ValueError on a manifest of another `format`."""
+        if not version:
+            spec = [dict(c, id=i) for i, c in enumerate(_default_schema())]
+            return {"version": 0, "gen": 0, "gen_specs": {"0": spec}, "files": {}}
+        path = self._manifest_path(version)
+        with open(path) as f:
+            m = json.load(f)
+        if m.get("format") != FORMAT:
+            raise ValueError(
+                f"{path}: manifest format {m.get('format')}, but this code "
+                f"reads format {FORMAT} only; rebuild the table from its source"
+            )
+        return m
 
     def _commit(self, version: int, manifest: dict) -> None:
         """Atomic snapshot commit with optimistic concurrency.
 
-        A commit claims `version` by creating its manifest with O_EXCL —
-        exactly one of two racing writers wins (same optimistic protocol as
-        an Iceberg catalog swap); the loser gets ConcurrentCommitError and
-        must re-read + retry on top of the winner's snapshot. The pointer
-        swap afterwards is the atomic publish (os.replace).
+        Writes `manifest` (`gen`, `gen_specs`, `files`) stamped with
+        `FORMAT`, the version and the table layout (`keys`, `n_buckets`,
+        `bucket_cols`). A commit claims `version` by creating its manifest
+        with O_EXCL — exactly one of two racing writers wins (same
+        optimistic protocol as an Iceberg catalog swap); the loser gets
+        ConcurrentCommitError and must re-read + retry on top of the
+        winner's snapshot. The pointer swap afterwards is the atomic publish
+        (os.replace).
         """
         if version != self.current_version() + 1:
             raise ConcurrentCommitError(
                 f"stale snapshot: committing v{version} but table is at "
                 f"v{self.current_version()}"
             )
-        manifest["version"] = version
-        manifest["keys"] = list(self.keys)
-        manifest["n_buckets"] = self.n_buckets
-        manifest["bucket_cols"] = list(self.bucket_cols)
-        # A bucket listing several files holds deltas of the one-file-per-
-        # bucket layout (see `_upgrade`); `_rewrite` writes one per bucket.
-        manifest["has_deltas"] = bool(manifest["delta_files"]) or any(
-            len(fs) > 1 for fs in manifest["buckets"].values()
-        )
+        manifest = {
+            **manifest, "format": FORMAT, "version": version, "keys": list(self.keys),
+            "n_buckets": self.n_buckets, "bucket_cols": list(self.bucket_cols),
+        }
         path = self._manifest_path(version)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -259,7 +262,9 @@ class SnapshotTable:
         os.replace(ptr_tmp, self._pointer)  # atomic snapshot swap
 
     def schema_spec(self) -> list[dict]:
-        return self._read_manifest(self.current_version())["schema"]
+        """The current logical schema: the registry's spec shape, without
+        the column ids."""
+        return _logical(self._read_manifest(self.current_version()))
 
     def columns(self) -> list[str]:
         return [c["name"] for c in self.schema_spec()]
@@ -273,10 +278,12 @@ class SnapshotTable:
         maximum over the LWW winners, since each key's winner is its
         highest-LSN version.
         """
-        m = self._read_manifest(self.current_version())
+        files = self._read_manifest(self.current_version())["files"]
         base = [_footer_max_lsn(os.path.join(self.root, f))
-                for fs in m["buckets"].values() for f in fs]
-        deltas = delta_footer_stats(self.root, m["delta_files"])
+                for f, e in files.items() if not e["delta"]]
+        deltas = delta_footer_stats(
+            self.root, {f: e["buckets"] for f, e in files.items() if e["delta"]}
+        )
         return max(
             [x for x in base if x is not None]
             + [mx for bs in deltas.values() for _, mx in bs.values()],
@@ -291,21 +298,14 @@ class SnapshotTable:
             F.lit(self.n_buckets),
         ).cast("int")
 
-    def _files(
-        self, m: dict, buckets: Sequence[int] | None = None
-    ) -> list[tuple[str, list[int] | None]]:
-        """The data files of manifest `m` that hold rows of `buckets` (all
-        when None): each base file with None, each delta file with the
-        buckets of its live set to read."""
+    def _files(self, m: dict, buckets: Sequence[int] | None = None) -> dict[str, list[int]]:
+        """{file: the buckets of its live set to read} of manifest `m`'s
+        files that hold live rows of `buckets` (all when None)."""
         wanted = None if buckets is None else {int(b) for b in buckets}
-        out: list[tuple[str, list[int] | None]] = [
-            (f, None) for b, fs in m["buckets"].items()
-            if wanted is None or int(b) in wanted for f in fs
-        ]
-        for f, live in m["delta_files"].items():
-            if read := [b for b in live if wanted is None or b in wanted]:
-                out.append((f, read))
-        return out
+        return {
+            f: read for f, e in m["files"].items()
+            if (read := [b for b in e["buckets"] if wanted is None or b in wanted])
+        }
 
     def _scan(
         self,
@@ -343,8 +343,9 @@ class SnapshotTable:
         # delta file `bucket` int. A file that does not fails the scan with
         # a type mismatch.
         groups: dict[tuple[int, tuple[int, ...]], list[str]] = {}
-        for f, live in files:
-            key = (int(m["file_gens"].get(f, 0)), tuple(live or ()))
+        for f, read in files.items():
+            e = m["files"][f]
+            key = (e["gen"], tuple(read) if e["delta"] else ())
             groups.setdefault(key, []).append(os.path.join(self.root, f))
         frames = []
         # Spark lists more than `parallelPartitionDiscovery.threshold` (32)
@@ -401,7 +402,7 @@ class SnapshotTable:
             self.current_version() if version is None else version
         )
         out = self._scan(spark, m, buckets, spec)
-        if m.get("has_deltas"):
+        if any(e["delta"] for e in m["files"].values()):
             # Merge-on-read resolution: fast-append commits leave multiple
             # versions of a key across base + delta files; the highest-LSN
             # row wins at read time (row_number, not a semi join — re-applied
@@ -502,7 +503,7 @@ class SnapshotTable:
         """
         version = self.current_version()
         manifest = self._read_manifest(version)
-        spec = manifest["schema"]
+        spec = manifest["gen_specs"][str(manifest["gen"])]
         names = [c["name"] for c in spec]
         if missing := [k for k in self.keys if k not in names]:
             raise ValueError(
@@ -524,7 +525,7 @@ class SnapshotTable:
             manifest = self._rewrite(
                 spark, manifest, range(self.n_buckets), incoming=rows
             )
-            touched = sorted(int(b) for b, fs in manifest["buckets"].items() if fs)
+            touched = _buckets(manifest)
         self._commit(version + 1, manifest)
         return {
             "version": version + 1, "buckets": touched, "applied_buckets": len(touched)
@@ -545,10 +546,10 @@ class SnapshotTable:
         rows (`_stored_rows` of the manifest's schema), keeps one row per
         key — the highest `_lsn`, stored rows winning ties (the strict
         `s.lsn > t._lsn` rule) — drops tombstones below `expire_below`, and
-        writes one base file per bucket. The returned manifest swaps those
-        buckets' base files, removes the buckets from every delta file's
-        live set (dropping a file whose set empties), and keeps only the
-        `gen_specs` its files still reference.
+        writes one base file per bucket. The returned manifest removes the
+        buckets from every file's live set (dropping a file whose set
+        empties), lists the written files, and keeps only the `gen_specs`
+        its files still reference.
         """
         parts = []
         if self._files(manifest, buckets):
@@ -557,7 +558,7 @@ class SnapshotTable:
             parts.append(incoming.withColumn("_in", F.lit(1)))
         rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
-        version = manifest.get("version", 0) + 1
+        version = manifest["version"] + 1
         with _no_aqe(spark):
             # The write's one exchange, hashed on `bucket`, meets the
             # window's (bucket, *keys) clustering: `bucket` is a function of
@@ -575,24 +576,18 @@ class SnapshotTable:
             )
 
         rewritten = {int(b) for b in buckets}
-        base = {
-            b: fs for b, fs in manifest["buckets"].items() if int(b) not in rewritten
-        } | {str(b): fs for b, fs in written.items()}
-        deltas = {
-            f: kept for f, live in manifest["delta_files"].items()
-            if (kept := [b for b in live if b not in rewritten])
+        gen = manifest["gen"]
+        files = {
+            f: dict(e, buckets=kept) for f, e in manifest["files"].items()
+            if (kept := [b for b in e["buckets"] if b not in rewritten])
+        } | {
+            f: {"gen": gen, "buckets": [b], "delta": False}
+            for b, fs in written.items() for f in fs
         }
-        live_files = {f for fs in base.values() for f in fs} | deltas.keys()
-        gen = int(manifest["gen"])
-        file_gens = {
-            f: g for f, g in manifest["file_gens"].items() if f in live_files
-        } | {f: gen for fs in written.values() for f in fs}
-        live_gens = {str(gen)} | {str(g) for g in file_gens.values()}
+        live_gens = {str(gen)} | {str(e["gen"]) for e in files.values()}
         return {
             **manifest,
-            "buckets": base,
-            "file_gens": file_gens,
-            "delta_files": deltas,
+            "files": files,
             "gen_specs": {
                 g: s for g, s in manifest["gen_specs"].items() if g in live_gens
             },
@@ -673,29 +668,29 @@ class SnapshotTable:
         """
         version = self.current_version()
         m = self._read_manifest(version)
-        added = {f: sorted(bs) for f, bs in files.items() if bs}
-        m.update(
-            delta_files=m["delta_files"] | added,
-            file_gens=m["file_gens"] | dict.fromkeys(added, int(m["gen"])),
-        )
+        added = {
+            f: {"gen": m["gen"], "buckets": sorted(bs), "delta": True}
+            for f, bs in files.items() if bs
+        }
+        m["files"] |= added
         self._commit(version + 1, m)
         return {
             "version": version + 1,
-            "applied_buckets": len({b for bs in added.values() for b in bs}),
+            "applied_buckets": len({b for e in added.values() for b in e["buckets"]}),
             "files_registered": len(added),
         }
 
     def delta_file_count(self) -> int:
         """Number of UNCOMPACTED delta files; 0 after compact()."""
         m = self._read_manifest(self.current_version())
-        return len(m["delta_files"])
+        return sum(e["delta"] for e in m["files"].values())
 
     def delta_bucket_count(self) -> int:
         """Number of (delta file, live bucket) pairs: the delta files a
         one-file-per-bucket layout would hold, and the measure of the
         compaction rule; 0 after compact()."""
         m = self._read_manifest(self.current_version())
-        return sum(len(live) for live in m["delta_files"].values())
+        return sum(len(e["buckets"]) for e in m["files"].values() if e["delta"])
 
     def overwrite(self, spark: SparkSession, df: DataFrame, lsn_col=None) -> dict:
         """Full load. df has the logical columns (+ optional lsn column).
@@ -719,18 +714,17 @@ class SnapshotTable:
         """
         version = self.current_version()
         manifest = self._read_manifest(version)
-        if manifest["schema"] == new_spec:
+        if _logical(manifest) == new_spec:
             # Idempotent: crash-resume may re-drive the same spec (the
             # registry persisted but the table commit didn't land); a no-op
             # re-apply must not churn versions or generations.
             return version
         for c in new_spec:
             _parse_type(c["type"])  # fail here, not on every later scan
-        gen = int(manifest["gen"]) + 1
+        gen = manifest["gen"] + 1
         manifest["gen_specs"] = {
             **manifest["gen_specs"], str(gen): _with_ids(manifest, new_spec)
         }
-        manifest["schema"] = new_spec
         manifest["gen"] = gen
         self._commit(version + 1, manifest)
         return version + 1
@@ -749,22 +743,20 @@ class SnapshotTable:
         """
         version = self.current_version()
         manifest = self._read_manifest(version)
-        buckets = sorted({
-            int(b) for b, fs in manifest["buckets"].items() if fs
-        } | {b for live in manifest["delta_files"].values() for b in live})
+        buckets = _buckets(manifest)
         if buckets:
             manifest = self._rewrite(
                 spark, manifest, buckets, expire_below=expire_tombstones_below_lsn
             )
         self._commit(version + 1, manifest)
-        return {"version": version + 1, "buckets": len(manifest["buckets"])}
+        return {"version": version + 1, "buckets": len(_buckets(manifest))}
 
     def vacuum(self) -> int:
         """Delete data files unreferenced by the current manifest: a delta
         file stays while any bucket holds it live."""
         live = {
             os.path.join(self.root, f)
-            for f, _ in self._files(self._read_manifest(self.current_version()))
+            for f in self._read_manifest(self.current_version())["files"]
         }
         removed = 0
         data_root = os.path.join(self.root, "data")
@@ -803,33 +795,17 @@ def _project(df: DataFrame, spec: list[dict]) -> DataFrame:
     return df.select(*cols, *[F.col(c) for c in df.columns if c not in lineage])
 
 
-def _upgrade(m: dict) -> dict:
-    """Manifest `m` in the current layout when an older writer wrote it.
-    Delta files of the one-file-per-bucket layout (a `delta_files` list)
-    stay in their bucket's file list: each holds that one bucket and no
-    stored `bucket`, so they are scanned like base files, still resolved by
-    the merge-on-read window, and folded by the next rewrite of the bucket.
-    Generations without column ids get the ids the name lineage gave them:
-    a current column's id goes to the first of its `sources` a generation
-    has, and any other column of it gets a fresh id."""
-    if isinstance(m["delta_files"], list):
-        m["delta_files"] = {}
-    if all("id" in c for g in m["gen_specs"].values() for c in g):
-        return m
-    cur = [dict(c, id=i) for i, c in enumerate(m["schema"])]
-    fresh = len(cur)
-    for g, spec in m["gen_specs"].items():
-        names = [c["name"] for c in spec]
-        id_of: dict[str, int] = {}
-        for c in cur:
-            n = next((n for n in c["sources"] if n in names), None)
-            if n is not None:
-                id_of.setdefault(n, c["id"])
-        for n in names:
-            if n not in id_of:
-                id_of[n], fresh = fresh, fresh + 1
-        m["gen_specs"][g] = [dict(c, id=id_of[c["name"]]) for c in spec]
-    return m
+def _logical(m: dict) -> list[dict]:
+    """Manifest `m`'s current schema without its column ids: the shape of
+    the registry's spec."""
+    return [
+        {k: v for k, v in c.items() if k != "id"} for c in m["gen_specs"][str(m["gen"])]
+    ]
+
+
+def _buckets(m: dict) -> list[int]:
+    """The buckets that hold live rows in manifest `m`."""
+    return sorted({b for e in m["files"].values() for b in e["buckets"]})
 
 
 def _project_gen(raw: DataFrame, gen_spec: list[dict], spec: list[dict]) -> DataFrame:
@@ -859,8 +835,8 @@ def _with_ids(m: dict, spec: list[dict]) -> list[dict]:
     the longest lineage first, so a rename keeps its id ahead of an add
     that reuses the freed name; else the column of the same name; else the
     first of its `sources` that names one. Any other column is new and
-    gets a fresh id. The ids stay out of the `schema` entries, which mirror
-    the registry's spec."""
+    gets a fresh id. `schema_spec` drops the ids again, so the table's
+    schema compares equal to the registry's spec."""
     old = m["gen_specs"][str(m["gen"])]
     by_sources = {tuple(c["sources"]): c["id"] for c in old}
     by_name = {c["name"]: c["id"] for c in old}

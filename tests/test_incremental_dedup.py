@@ -3,10 +3,12 @@ per-batch cost is provably batch-sized (plan-asserted)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from hdata_spark.operators.incremental_dedup import MinHashIndex
+from hdata_spark.operators.incremental_dedup import _INDEX_SCHEMA, MinHashIndex
 from hdata_spark.operators.text_dedup import minhash_lsh_candidates
+from hdata_spark.sinks.snapshot import SnapshotTable
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -139,7 +141,8 @@ def test_replace_and_delete_reads_bucket_pruned(spark, tmp_path):
     """The replace/delete read path is BOUNDED BY THE BATCH'S BUCKETS
     (round-4 VERDICT item 5): with the index bucketed on doc_id, the stored
     rows consulted for staleness/tombstoning come only from manifest-pruned
-    bucket files — never a full-index scan — and the results are unchanged."""
+    bucket files — never a full-index scan — and the results are unchanged.
+    A stored table bucketed otherwise is refused at open."""
     docs, b1, b2 = _split_docs(spark, tmp_path)
     idx = MinHashIndex(str(tmp_path / "index"))
     idx.ingest(spark, spark.read.parquet(b1), batch_lsn=1)
@@ -151,7 +154,7 @@ def test_replace_and_delete_reads_bucket_pruned(spark, tmp_path):
     ids = spark.createDataFrame([(int(target),)], "doc_id long")
 
     buckets = idx._doc_buckets(ids)
-    assert buckets is not None and len(buckets) == 1  # one doc -> one bucket
+    assert len(buckets) == 1  # one doc -> one bucket
 
     pruned = idx._band_rows(spark, buckets=buckets)
     files = {f for f in pruned.inputFiles()}
@@ -169,3 +172,10 @@ def test_replace_and_delete_reads_bucket_pruned(spark, tmp_path):
     assert _pairs(idx.candidate_pairs(spark)) == _pairs(
         minhash_lsh_candidates(survivors)
     )
+
+    other = str(tmp_path / "full_key_bucketed")
+    SnapshotTable(other, keys=("band_idx", "band_sig", "doc_id")).evolve_schema(
+        _INDEX_SCHEMA
+    )
+    with pytest.raises(ValueError, match=r"bucket_cols \['band_idx', 'band_sig', 'doc_id'\]"):
+        MinHashIndex(other)

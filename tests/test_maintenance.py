@@ -120,7 +120,8 @@ def test_vacuum_removes_unreferenced_files(spark, tmp_path, small_fixture):
         SchemaRegistry(state_path=str(tmp_path / "r2.json")),
         ReplayConfig(compact_delta_files=None),
     )
-    deltas = table._read_manifest(table.current_version())["delta_files"]
+    files = table._read_manifest(table.current_version())["files"]
+    deltas = {f: e["buckets"] for f, e in files.items() if e["delta"]}
     assert all(len(live) > 1 for live in deltas.values())
     for folded in ([0, 1, 2, 3], [4, 5, 6, 7]):
         v = table.current_version()
@@ -146,11 +147,15 @@ def test_delta_file_count_zero_after_compact(spark, tmp_path, small_fixture):
     table.compact(spark)
     assert table.delta_file_count() == 0  # counts DELTAS, not data files
     m = table._read_manifest(table.current_version())
-    assert sum(len(fs) for fs in m["buckets"].values()) > 0
-    # empty fast-append must not set the MOR flag (no pointless read shuffle)
+    assert sum(not e["delta"] for e in m["files"].values()) > 0
+    # empty fast-append must add no delta entry, so reads run no merge-on-read
+    # window (no pointless read shuffle)
     table.register_deltas({})
     assert table.delta_file_count() == 0
-    assert not table._read_manifest(table.current_version())["has_deltas"]
+    files = table._read_manifest(table.current_version())["files"]
+    assert files == m["files"]
+    plan = table.read_internal(spark)._jdf.queryExecution().analyzed().toString()
+    assert "Window" not in plan
 
 
 def test_overwrite_with_duplicate_keys_keeps_one_row(spark, tmp_path):

@@ -1,17 +1,21 @@
 """Snapshot scans planned from the manifest: every writer writes its
-generation's declared schema, and building a scan launches no Spark job.
+generation's declared schema, building a scan launches no Spark job, and a
+manifest of another format is refused.
 The bucket rewrite behind `merge` and `compact`: folding a delta-bearing
 bucket, equal-LSN ties, and the Spark jobs per call."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 import pandas as pd
 import pyarrow.parquet as pq
+import pytest
 
 from hdata_spark.plans.schema_registry import SchemaRegistry
-from hdata_spark.sinks.snapshot import SnapshotTable
+from hdata_spark.sinks.snapshot import FORMAT, SnapshotTable
 from hdata_spark.streaming.ledger import CommitLedger
 from hdata_spark.streaming.metrics import MetricsLog
 from hdata_spark.streaming.replay import ReplayConfig, replay
@@ -78,10 +82,14 @@ def test_writers_write_the_declared_schema(spark, tmp_path):
 
     for v in range(v1, v4 + 1):
         m = table._read_manifest(v)
-        for f, g in m["file_gens"].items():
-            want = {c["name"]: _ARROW[c["type"]] for c in m["gen_specs"][str(g)]}
+        assert set(m) == {
+            "format", "version", "keys", "n_buckets", "bucket_cols", "gen",
+            "gen_specs", "files",
+        }
+        for f, e in m["files"].items():
+            want = {c["name"]: _ARROW[c["type"]] for c in m["gen_specs"][str(e["gen"])]}
             want.update(_lsn="int64", _op="string")
-            if f in m["delta_files"]:
+            if e["delta"]:
                 want.update(bucket="int32")
             got = pq.read_schema(os.path.join(table.root, f))
             assert {n: str(got.field(n).type) for n in got.names} == want, f
@@ -126,7 +134,7 @@ def test_building_snapshot_frames_runs_no_spark_job(spark, tmp_path):
     ]
     _replay(spark, tmp_path, table, events)
     m = table._read_manifest(table.current_version())
-    per_gen = pd.Series(list(m["file_gens"].values())).value_counts()
+    per_gen = pd.Series([e["gen"] for e in m["files"].values()]).value_counts()
     assert sorted(per_gen.index) == [0, 1, 2] and per_gen[0] > 32
 
     with _job_group(spark) as jobs:
@@ -140,56 +148,25 @@ def test_building_snapshot_frames_runs_no_spark_job(spark, tmp_path):
         assert jobs()
 
 
-def test_reads_a_table_of_the_one_file_per_bucket_layout(spark, tmp_path):
-    """A manifest of the older layout — delta files listed in their bucket
-    and in a `delta_files` list, generations without column ids — reads
-    through the merge-on-read window with its rename lineage, and the next
-    rewrite of the bucket folds the deltas and clears `has_deltas`."""
-    import json
-
-    import pyarrow as pa
-
-    root = tmp_path / "t"
-    gen0 = [{"name": c, "type": "string", "sources": [c]} for c in ("repo", "path", "stars")]
-    gen1 = gen0[:2] + [
-        {"name": "stargazers", "type": "string", "sources": ["stargazers", "stars"]}
-    ]
-    files = {}
-    for name, gen, rows in [
-        ("base", gen0, [("a.py", "1", 1), ("b.py", "2", 2)]),
-        ("delta", gen1, [("a.py", "9", 5)]),
-    ]:
-        rel = os.path.join("data", name, "bucket=0", "part-0.parquet")
-        os.makedirs(root / os.path.dirname(rel))
-        pq.write_table(pa.table({
-            "repo": ["o/r"] * len(rows),
-            "path": [r[0] for r in rows],
-            gen[2]["name"]: [r[1] for r in rows],
-            "_lsn": pa.array([r[2] for r in rows], pa.int64()),
-            "_op": ["u"] * len(rows),
-        }), root / rel)
-        files[name] = rel
-    os.makedirs(root / "manifests")
-    with open(root / "manifests" / "v00000001.json", "w") as f:
-        json.dump({
-            "buckets": {"0": [files["base"], files["delta"]]}, "schema": gen1,
-            "gen": 1, "gen_specs": {"0": gen0, "1": gen1},
-            "file_gens": {files["base"]: 0, files["delta"]: 1},
-            "delta_files": [files["delta"]], "version": 1,
-            "keys": ["repo", "path"], "n_buckets": 1, "bucket_cols": ["repo", "path"],
-            "has_deltas": True,
-        }, f)
-    (root / "_latest").write_text("1")
-
-    table = SnapshotTable(str(root))
-    want = {"a.py": "9", "b.py": "2"}
-    assert table.delta_file_count() == 0 and table.max_stored_lsn() == 5
-    got = {r["path"]: r["stargazers"] for r in table.read(spark).collect()}
-    assert got == want
-    table.compact(spark)
-    m = table._read_manifest(table.current_version())
-    assert len(m["buckets"]["0"]) == 1 and not m["has_deltas"]
-    assert {r["path"]: r["stargazers"] for r in table.read(spark).collect()} == want
+def test_a_manifest_of_another_format_is_refused(tmp_path):
+    """A table whose manifest has no `format`, or a format other than
+    `FORMAT`, is refused at open with an error naming the manifest file and
+    the format it found: there is no upgrade path."""
+    good = SnapshotTable(str(tmp_path / "good"))
+    good.evolve_schema(
+        good.schema_spec() + [{"name": "stars", "type": "int", "sources": ["stars"]}]
+    )
+    m = good._read_manifest(1)
+    assert m["format"] == FORMAT
+    for name, fmt in (("none", None), ("one", 1)):
+        root = tmp_path / name
+        shutil.copytree(good.root, root)
+        old = {k: v for k, v in m.items() if k != "format"}
+        if fmt is not None:
+            old["format"] = fmt
+        (root / "manifests" / "v00000001.json").write_text(json.dumps(old))
+        with pytest.raises(ValueError, match=rf"v00000001\.json: manifest format {fmt}\b"):
+            SnapshotTable(str(root))
 
 
 def _base(spark, paths):
@@ -208,6 +185,26 @@ def _batch(spark, rows):
     }))
 
 
+def _deltas(m):
+    """{delta file: live buckets} of manifest `m`."""
+    return {f: e["buckets"] for f, e in m["files"].items() if e["delta"]}
+
+
+def _base_files(m):
+    """{bucket: its base files} of manifest `m`."""
+    out = {}
+    for f, e in m["files"].items():
+        if not e["delta"]:
+            (b,) = e["buckets"]
+            out.setdefault(b, []).append(f)
+    return out
+
+
+def _runs_mor(df):
+    """Whether a read resolves key versions with the merge-on-read window."""
+    return "Window" in df._jdf.queryExecution().analyzed().toString()
+
+
 def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
     """A merge into a bucket that shares a fast-append delta file with other
     buckets rewrites that bucket alone: the bucket leaves the file's live
@@ -215,7 +212,7 @@ def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
     longer read the file's rows of it, reads (full and bucket-pruned) equal
     the oracle, and an equal-LSN row with another payload leaves the stored
     row. Folding the remaining live buckets the same way drops the file
-    from the manifest and clears `has_deltas`."""
+    from the manifest, and reads no longer run the merge-on-read window."""
     table = SnapshotTable(str(tmp_path / "t"), n_buckets=8)
     paths = [f"f{i:02d}.py" for i in range(40)]
     table.overwrite(spark, _base(spark, paths))
@@ -228,9 +225,9 @@ def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
         r["path"]: r["bucket"] for r in table.read_internal(spark).collect()
     }
     m = table._read_manifest(table.current_version())
-    ((delta, delta_buckets),) = m["delta_files"].items()
+    ((delta, delta_buckets),) = _deltas(m).items()
     assert delta_buckets == sorted({bucket_of[p] for p in paths[:24]})
-    assert len(delta_buckets) > 2 and m["has_deltas"]
+    assert len(delta_buckets) > 2 and _runs_mor(table.read_internal(spark))
 
     updated = [p for p in paths if lsn[p] > 0]
     b = max(delta_buckets, key=lambda d: sum(bucket_of[p] == d for p in updated))
@@ -243,16 +240,17 @@ def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
     oracle[newer] = "v2"
     assert stats["buckets"] == [b]
     m2 = table._read_manifest(table.current_version())
-    assert m2["delta_files"] == {delta: [d for d in delta_buckets if d != b]}
-    assert m2["buckets"][str(b)] != m["buckets"][str(b)]
-    assert len(m2["buckets"][str(b)]) == 1
-    for other in set(m["buckets"]) - {str(b)}:
-        assert m2["buckets"][other] == m["buckets"][other]
+    assert _deltas(m2) == {delta: [d for d in delta_buckets if d != b]}
+    base, base2 = _base_files(m), _base_files(m2)
+    assert base2[b] != base[b] and len(base2[b]) == 1
+    assert set(base2) == set(base)
+    for other in set(base) - {b}:
+        assert base2[other] == base[other]
     # one stored version per key of `b`: the delta's rows of it are dead
     assert table._scan(spark, m2, [b]).count() == sum(bucket_of[p] == b for p in paths)
     got = {r["path"]: r["content"] for r in table.read(spark).collect()}
     assert got == oracle
-    assert m2["has_deltas"]
+    assert _runs_mor(table.read_internal(spark))
     other = next(d for d in delta_buckets if d != b)
     for pruned in (b, other):
         got = {
@@ -267,8 +265,8 @@ def test_merge_folds_only_the_touched_delta_bucket(spark, tmp_path):
     ]
     table.merge(spark, _batch(spark, rest))  # equal LSNs: payloads unchanged
     m3 = table._read_manifest(table.current_version())
-    assert m3["delta_files"] == {} and not m3["has_deltas"]
-    assert delta not in m3["file_gens"]
+    assert _deltas(m3) == {} and not _runs_mor(table.read_internal(spark))
+    assert delta not in m3["files"]
     assert {r["path"]: r["content"] for r in table.read(spark).collect()} == oracle
 
 
@@ -300,10 +298,10 @@ def test_first_overwrite_runs_one_spark_job(spark, tmp_path):
         assert jobs() == 1
     shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert _last_job_tasks(spark) == min(64, shuffle_partitions)
-    m = table._read_manifest(table.current_version())
-    written = sorted(int(b) for b, fs in m["buckets"].items() if fs)
+    base = _base_files(table._read_manifest(table.current_version()))
+    written = sorted(base)
     assert stats["buckets"] == written and stats["applied_buckets"] == len(written)
-    assert all(len(m["buckets"][str(b)]) == 1 for b in written)
+    assert all(len(base[b]) == 1 for b in written)
     stored = {r["path"]: r["bucket"] for r in table.read_internal(spark).collect()}
     assert sorted(stored) == paths and sorted(set(stored.values())) == written
 

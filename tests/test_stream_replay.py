@@ -129,14 +129,16 @@ def test_stream_fast_append_metadata_only_commits(spark, tmp_path, small_fixture
     assert stats["batches"] >= 2
     # fast-append path actually taken: uncompacted deltas remain
     assert table.delta_file_count() > 0
-    # append-only manifests: each stream commit's file set is a superset of
-    # its predecessor's (a COW merge would REPLACE affected buckets' files)
+    # append-only manifests: each stream commit keeps every file entry of
+    # its predecessor unchanged (a COW merge would REPLACE affected buckets'
+    # files and shrink the live sets of the deltas it folds)
     prev = None
     for v in range(v_base, table.current_version() + 1):
-        m = table._read_manifest(v)
-        files = {f for fs in m["buckets"].values() for f in fs} | set(m["delta_files"])
+        files = table._read_manifest(v)["files"]
         if prev is not None:
-            assert prev <= files, f"v{v} dropped files committed by v{v-1}"
+            assert all(files.get(f) == e for f, e in prev.items()), (
+                f"v{v} dropped or changed files committed by v{v-1}"
+            )
         prev = files
     assert_state_equal(table.read(spark).toPandas(), oracle_final_state(base, events))
 
@@ -467,7 +469,9 @@ def test_delta_footer_stats_raises_on_all_null_lsn(spark, tmp_path):
     assert table.max_stored_lsn() == 9
     v = table.current_version()
     table._commit(v + 1, table._rewrite(spark, table._read_manifest(v), [3], expire_below=10))
-    assert table._read_manifest(v + 1)["delta_files"] == {top: [1]}
+    assert table._read_manifest(v + 1)["files"] == {
+        top: {"gen": 0, "buckets": [1], "delta": True}
+    }
     assert table.max_stored_lsn() == 7
 
 
@@ -578,9 +582,10 @@ def test_stage_write_is_sized_by_the_data(spark, tmp_path, small_fixture):
     with _job_group(spark) as jobs:
         (record,) = apply_epochs(spark, frame, [0], table, ledger, metrics, registry, [])
         assert jobs() <= 4
-    m = table._read_manifest(table.current_version())
-    assert table.delta_file_count() == len(m["delta_files"]) == 1
-    (live,) = m["delta_files"].values()
+    files = table._read_manifest(table.current_version())["files"]
+    deltas = [e["buckets"] for e in files.values() if e["delta"]]
+    assert table.delta_file_count() == len(deltas) == len(files) == 1
+    (live,) = deltas
     assert live == [p["partition_id"] for p in record["partitions"]]
     assert len(live) > 8 and table.delta_bucket_count() == len(live)
     assert sum(p["applied_events"] for p in record["partitions"]) == (
